@@ -21,6 +21,7 @@ from vector_search_spark.operators.dedup import (
     embedding_index_write,
     embedding_probe_pairs,
 )
+from vector_search_spark.operators.index_log import IndexLog
 
 DIM = 16
 N_PLANES, BAND_BITS = 24, 6
@@ -110,13 +111,15 @@ def test_index_layout_band_partitioned(spark, tmp_path):
         corpus, "embedding", "vec_id", path,
         n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM,
     )
-    bands = spark.read.parquet(f"{path}/bands")
+    base = IndexLog(path)
+    base = base.base(base.read())
+    bands = spark.read.parquet(f"{base}/bands")
     assert sorted(
         r.band for r in bands.select("band").distinct().collect()
     ) == [0, 1, 2, 3]
     # one (band, key) row per (vector, band): probe cost is a key join
     assert bands.count() == 40 * (N_PLANES // BAND_BITS)
-    vecs = spark.read.parquet(f"{path}/vecs")
+    vecs = spark.read.parquet(f"{base}/vecs")
     assert vecs.columns == ["id", "v", "nrm"]
     assert vecs.count() == 40
 
@@ -127,6 +130,30 @@ def test_dim_guard_fails_loudly(spark, tmp_path):
         embedding_index_write(corpus, "embedding", "vec_id", "/tmp/x")
     with pytest.raises(ValueError, match="requires dim="):
         embedding_probe_pairs(spark, "/tmp/x", batch, "embedding", "vec_id")
+
+
+def test_settings_mismatch_fails_loudly(spark, tmp_path):
+    """ADVICE r13: probing with other banding settings than the index
+    was written with silently missed pairs (band keys never collide).
+    The index records its settings; insert and probe must refuse."""
+    from vector_search_spark.operators.dedup import embedding_index_insert
+
+    corpus, batch = _vectors(spark)
+    path = str(tmp_path / "idx")
+    embedding_index_write(
+        corpus, "embedding", "vec_id", path,
+        n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM,
+    )
+    with pytest.raises(ValueError, match="band_bits=8 .*band_bits=6"):
+        embedding_probe_pairs(
+            spark, path, batch, "embedding", "vec_id",
+            n_planes=N_PLANES, band_bits=8, dim=DIM,
+        )
+    with pytest.raises(ValueError, match="seed=7 .*seed=42"):
+        embedding_index_insert(
+            batch, "embedding", "vec_id", path,
+            n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM, seed=7,
+        )
 
 
 def test_streaming_chained_equals_oneshot(spark, sf_dir):
@@ -318,7 +345,9 @@ def test_admit_replay_after_committed_insert_is_idempotent(
     embedding_index_insert(
         batch, "embedding", "vec_id", path, batch_id=0, **ins
     )  # the replayed insert: overwrite, not a second copy
-    assert spark.read.parquet(f"{path}/delta_vecs").count() == 12
+    log = IndexLog(path)
+    [(bid, delta)] = log.deltas(log.read())
+    assert bid == 0 and spark.read.parquet(f"{delta}/vecs").count() == 12
     # a LATER delivery (batch id 1) sees the admitted copy exactly once:
     # re-probing the same vectors yields each self-pair once at cos = 1 —
     # duplicated vec rows (the old append bug) would double every row
@@ -329,38 +358,41 @@ def test_admit_replay_after_committed_insert_is_idempotent(
         assert (1000 + i, 1000 + i) in pairs
 
 
-def test_crash_partial_delta_is_invisible_and_id_skipped(
-    spark, tmp_path
-):
-    """A delta dir WITHOUT its ``_SUCCESS`` marker (crash mid-write) is
-    never read by the probe, and auto batch-id assignment skips past the
-    torn dir instead of landing on it."""
-    import shutil
+def _insert_dies_before_commit(monkeypatch, *args, **kw):
+    """Run an insert that writes its delta and then crashes before the
+    marker swap (the torn insert)."""
+    from vector_search_spark.operators.dedup import embedding_index_insert
 
-    from vector_search_spark.operators.dedup import (
-        _next_batch_id,
-        embedding_index_insert,
-    )
+    def die(src, dst):
+        raise RuntimeError("injected crash before marker swap")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "replace", die)
+        with pytest.raises(RuntimeError, match="injected"):
+            embedding_index_insert(*args, **kw)
+
+
+def test_crash_partial_delta_is_invisible_and_id_skipped(
+    spark, tmp_path, monkeypatch
+):
+    """A torn insert (crash between writing the delta and the marker
+    swap) is never read by the probe, and auto batch-id assignment skips
+    past the torn id instead of reusing it."""
+    from vector_search_spark.operators.dedup import embedding_index_insert
 
     corpus, batch = _vectors(spark)
     path = str(tmp_path / "idx")
-    embedding_index_write(
-        corpus, "embedding", "vec_id", path,
-        n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM,
-    )
-    embedding_index_insert(
-        batch, "embedding", "vec_id", path,
-        n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM,
-    )
-    assert _next_batch_id(path) == 1
+    ins = dict(n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM)
+    embedding_index_write(corpus, "embedding", "vec_id", path, **ins)
+    embedding_index_insert(batch, "embedding", "vec_id", path, **ins)
+    log = IndexLog(path)
+    assert log.next_batch_id() == 1
     before = _probe_rows(spark, path, batch)
-    for sub in ("delta_bands", "delta_vecs"):
-        shutil.copytree(
-            f"{path}/{sub}/batch=0", f"{path}/{sub}/batch=1"
-        )
-        os.remove(f"{path}/{sub}/batch=1/_SUCCESS")
+    _insert_dies_before_commit(
+        monkeypatch, batch, "embedding", "vec_id", path, **ins
+    )
     assert _probe_rows(spark, path, batch) == before  # torn dir unread
-    assert _next_batch_id(path) == 2  # and its id is never reused
+    assert log.next_batch_id() == 2  # and its id is never reused
 
 
 def test_probe_broadcast_gate_unhinted_fallback(spark, tmp_path):
@@ -437,17 +469,20 @@ def test_staged_semdedup_index_keyed_by_knobs(spark, sf_dir, tmp_path):
     assert streamed  # nonempty at the test fixture
 
 
-def test_compact_folds_deltas_behind_atomic_marker(spark, tmp_path):
+def test_compact_folds_deltas_behind_atomic_marker(
+    spark, tmp_path, monkeypatch
+):
     """Lifecycle completion (round 14): compaction folds committed
     deltas into a new base GENERATION, probes are unchanged before vs
     after (same pairs, same multiplicity), the windowed probe still
     honors batch boundaries across the fold, a crash before the marker
-    replace leaves readers on the old base, and folded batch ids are
+    swap leaves readers on the old base, and folded batch ids are
     never reused by auto-assignment."""
     from vector_search_spark.operators import dedup as D
 
     corpus, batch = _vectors(spark)
     path = str(tmp_path / "idx")
+    log = IndexLog(path)
     embedding_index_write(
         corpus, "embedding", "vec_id", path,
         n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM,
@@ -459,24 +494,19 @@ def test_compact_folds_deltas_behind_atomic_marker(spark, tmp_path):
     D.embedding_index_insert(b1, "embedding", "vec_id", path, batch_id=1, **ins)
     before_all = _probe_rows(spark, path, batch)
     before_w1 = _probe_rows(spark, path, batch, max_batch_id=1)
+    base0 = log.base(log.read())
 
-    # crash injection: both new-gen dirs written, marker never replaced
-    real_replace = os.replace
-    import builtins  # noqa: F401  (keep monkey-scope obvious)
+    # crash injection: the new generation is written, the marker never
+    # swapped
+    def die(src, dst):
+        raise RuntimeError("injected crash before marker swap")
 
-    def _boom(src, dst):
-        if dst.endswith("_BASE"):
-            raise RuntimeError("injected crash before marker replace")
-        return real_replace(src, dst)
-
-    os.replace = _boom
-    try:
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "replace", die)
         with pytest.raises(RuntimeError, match="injected"):
             D.embedding_index_compact(spark, path, upto_batch_id=1)
-    finally:
-        os.replace = real_replace
     assert _probe_rows(spark, path, batch) == before_all  # old base read
-    assert D._index_marker(path)["gen"] == 0
+    assert log.read()["gen"] == 0
 
     # the retry commits: fold batch 0 only (upto = last committed ckpt)
     out = D.embedding_index_compact(spark, path, upto_batch_id=1)
@@ -486,44 +516,36 @@ def test_compact_folds_deltas_behind_atomic_marker(spark, tmp_path):
     # windowed probe across the fold: batch 0 now lives in the base,
     # batch 1 is still a delta the window must exclude
     assert _probe_rows(spark, path, batch, max_batch_id=1) == before_w1
-    # folded dirs reaped; original base superseded
-    assert not os.path.exists(f"{path}/delta_bands/batch=0")
-    assert not os.path.exists(f"{path}/bands")
-    assert os.path.exists(f"{path}/bands_g1/_SUCCESS")
+    # folded delta and the superseded base reaped
+    m = log.read()
+    assert [b for b, _ in log.deltas(m)] == [1]
+    assert not os.path.exists(base0) and os.path.exists(log.base(m))
     # auto ids continue past the fold (never reuse a folded id)
-    assert D._next_batch_id(path) == 2
+    assert log.next_batch_id() == 2
 
     # fold the rest; a second compaction advances the generation
     out2 = D.embedding_index_compact(spark, path)
     assert out2["gen"] == 2 and out2["folded_batches"] == [1]
     assert _probe_rows(spark, path, batch) == before_all
-    assert not os.path.exists(f"{path}/bands_g1")
+    assert log.read()["deltas"] == []
     # idempotent no-op when nothing is committed below the bound
     assert D.embedding_index_compact(spark, path)["folded_batches"] == []
 
 
-def test_compact_skips_half_committed_batch(spark, tmp_path):
-    """A batch whose bands side committed but whose vecs side did not
-    (crash between the insert's two writes) must NOT be folded — its
-    replay completes it; baking the half in would be permanent."""
-    import shutil
-
+def test_compact_skips_half_committed_batch(spark, tmp_path, monkeypatch):
+    """A torn insert (crash before its marker swap) must NOT be folded —
+    its replay completes it; baking a torn batch in would be permanent."""
     from vector_search_spark.operators import dedup as D
 
     corpus, batch = _vectors(spark)
     path = str(tmp_path / "idx")
-    embedding_index_write(
-        corpus, "embedding", "vec_id", path,
-        n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM,
-    )
     ins = dict(n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM)
-    D.embedding_index_insert(
-        batch, "embedding", "vec_id", path, batch_id=0, **ins
+    embedding_index_write(corpus, "embedding", "vec_id", path, **ins)
+    _insert_dies_before_commit(
+        monkeypatch, batch, "embedding", "vec_id", path, batch_id=0, **ins
     )
-    shutil.rmtree(f"{path}/delta_vecs/batch=0")  # simulate the torn insert
     out = D.embedding_index_compact(spark, path)
     assert out["folded_batches"] == [] and out["gen"] == 0
-    assert os.path.exists(f"{path}/delta_bands/batch=0")  # left for replay
     # the replay completes the batch; now it folds
     D.embedding_index_insert(
         batch, "embedding", "vec_id", path, batch_id=0, **ins

@@ -1,10 +1,13 @@
 """GraphDeltaLog — the LSM-style durable publish for graph adjacency
 (VERDICT r10 next #1). Pins: fold semantics (latest-delta-wins incl.
-zero-row tombstones), the auto-compaction policy, marker atomicity
-artifacts (orphan GC), and that delta publishes write O(touched) rows
-while base publishes write O(index)."""
+zero-row tombstones), the ingest's fold policy, crash injection around
+the marker swap, and that delta publishes write O(touched) rows while
+base publishes write O(index). The commit protocol itself is pinned in
+tests/test_index_log.py."""
 
 import os
+
+import pytest
 
 
 def _df(spark, rows):
@@ -24,56 +27,59 @@ def _edges(df):
 def test_fold_latest_wins_and_tombstones(spark, tmp_path):
     from vector_search_spark.operators.graph_delta import GraphDeltaLog
 
-    # frac raised so the tiny fixture's policy never fires — this test
-    # pins FOLD semantics only (policy pinned separately below)
-    log = GraphDeltaLog(spark, str(tmp_path / "g"), compact_rows_frac=10.0)
+    log = GraphDeltaLog(spark, str(tmp_path / "g"))
     g0 = _df(
         spark,
         [(1, 2, 1, 0.9), (1, 3, 2, 0.8), (2, 1, 1, 0.7), (3, 1, 1, 0.6)],
     )
-    assert log.publish(g0, None, -1) == "base"
+    log.publish_base(g0, -1)
     # batch 0 replaces src 1's rows and adds src 4
     g1 = _df(
         spark,
         [(1, 4, 1, 0.95), (2, 1, 1, 0.7), (3, 1, 1, 0.6), (4, 1, 1, 0.5)],
     )
-    assert log.publish(g1, _ids(spark, [1, 4]), 0) == "delta"
+    log.publish_delta(g1, _ids(spark, [1, 4]), 0)
     # batch 1 tombstones src 2 (touched, zero rows in the graph) and
     # re-replaces src 1 — latest delta must win over batch 0's rows
     g2 = _df(spark, [(1, 5, 1, 0.99), (3, 1, 1, 0.6), (4, 1, 1, 0.5)])
-    assert log.publish(g2, _ids(spark, [1, 2]), 1) == "delta"
-    folded, m = log.recover()
+    log.publish_delta(g2, _ids(spark, [1, 2]), 1)
+    folded, meta = log.recover()
     assert _edges(folded) == _edges(g2)
-    assert m["committed"] == 1 and m["base"] == -1 and m["deltas"] == [0, 1]
+    assert meta["committed"] == 1
+    assert [b for b, _ in log.deltas(log.read())] == [0, 1]
 
 
 def test_auto_compaction_folds_deltas_into_base(spark, tmp_path):
+    """The ingest's fold policy fires on the marker's counts (delta rows
+    >= half the base rows, or 32 deltas), and a base publish then
+    replaces every delta."""
     from vector_search_spark.operators.graph_delta import GraphDeltaLog
+    from vector_search_spark.streaming.serving import DurableGraphIngest
 
-    log = GraphDeltaLog(spark, str(tmp_path / "g"), max_deltas=2)
+    def marker(base_rows, delta_rows, n_deltas):
+        return {
+            "meta": {"base_rows": base_rows, "delta_rows": delta_rows},
+            "deltas": [[b, f"d{b}"] for b in range(n_deltas)],
+        }
+
+    due = DurableGraphIngest._fold_due
+    assert not due(marker(100, 49, 31))
+    assert due(marker(100, 50, 1))  # delta rows reached half the base
+    assert due(marker(100, 0, 32))  # delta count reached the cap
+    assert due(marker(0, 1, 1))  # an empty base folds on the first delta
+
+    log = GraphDeltaLog(spark, str(tmp_path / "g"))
     g = _df(spark, [(i, i + 1, 1, 0.5) for i in range(10)])
-    log.publish(g, None, -1)
+    log.publish_base(g, -1)
     for b in range(2):
-        g = _df(
-            spark,
-            [(i, i + 1, 1, 0.5) for i in range(10)] + [(100 + b, 0, 1, 0.4)],
-        )
-        assert log.publish(g, _ids(spark, [100 + b]), b) == "delta"
-    # third publish: len(deltas) >= max_deltas → auto base fold
-    g = _df(
-        spark,
-        [(i, i + 1, 1, 0.5) for i in range(10)]
-        + [(100, 0, 1, 0.4), (101, 0, 1, 0.4), (102, 0, 1, 0.4)],
-    )
-    assert log.publish(g, _ids(spark, [102]), 2) == "base"
-    m = log.read_marker()
-    assert m["base"] == 2 and m["deltas"] == [] and m["delta_rows"] == 0
-    # superseded dirs are garbage-collected
-    kinds = sorted(
-        d for d in os.listdir(str(tmp_path / "g"))
-        if d.startswith(("base-", "delta-"))
-    )
-    assert kinds == ["base-b2"]
+        g = g.unionByName(_df(spark, [(100 + b, 0, 1, 0.4)]))
+        log.publish_delta(g, _ids(spark, [100 + b]), b)
+    m = log.read()
+    assert len(m["deltas"]) == 2 and m["meta"]["delta_rows"] == 2
+    log.publish_base(g, 2)
+    m = log.read()
+    assert m["deltas"] == [] and m["meta"]["delta_rows"] == 0
+    assert m["meta"]["base_rows"] == 12 and m["meta"]["committed"] == 2
     folded, _ = log.recover()
     assert _edges(folded) == _edges(g)
 
@@ -92,122 +98,76 @@ def test_delta_write_is_bounded_by_touched_not_index(spark, tmp_path):
         [(i, (i + 1) % 500, 1, 0.5) for i in range(500)]
         + [(i, (i + 2) % 500, 2, 0.4) for i in range(500)],
     )
-    log.publish(base, None, -1)
+    log.publish_base(base, -1)
     g1 = base.unionByName(_df(spark, [(1000, 1, 1, 0.9), (1001, 2, 1, 0.8)]))
-    assert log.publish(g1, _ids(spark, [1000, 1001]), 0) == "delta"
-    m = log.read_marker()
-    assert m["base_rows"] == 1000
-    assert m["delta_rows"] == 2  # the two new srcs' rows ONLY
-    d = _parquet_num_rows(
-        os.path.join(str(tmp_path / "g"), "delta-b0", "rows")
-    )
-    assert d == 2
+    m = log.publish_delta(g1, _ids(spark, [1000, 1001]), 0)
+    assert m["meta"]["base_rows"] == 1000
+    assert m["meta"]["delta_rows"] == 2  # the two new srcs' rows ONLY
+    [(_, dpath)] = log.deltas(m)
+    assert _parquet_num_rows(os.path.join(dpath, "rows")) == 2
     folded, _ = log.recover()
     assert _edges(folded) == _edges(g1)
 
 
-def test_orphan_dirs_are_gc_d_and_invisible(spark, tmp_path):
-    """A crash mid-write leaves a dir the marker never references —
-    recovery must ignore it and the next commit must reap it."""
-    from vector_search_spark.operators.graph_delta import GraphDeltaLog
-
-    gdir = str(tmp_path / "g")
-    log = GraphDeltaLog(spark, gdir)
-    g0 = _df(spark, [(1, 2, 1, 0.9)])
-    log.publish(g0, None, -1)
-    # orphan from a simulated crash: a delta dir with garbage, no marker
-    os.makedirs(os.path.join(gdir, "delta-b7", "rows"), exist_ok=True)
-    _df(spark, [(9, 9, 1, 0.1)]).write.mode("overwrite").parquet(
-        os.path.join(gdir, "delta-b7", "rows")
-    )
-    folded, m = log.recover()
-    assert _edges(folded) == _edges(g0)  # orphan invisible
-    assert m["deltas"] == []
-    g1 = _df(spark, [(1, 2, 1, 0.9), (2, 1, 1, 0.8)])
-    log.publish(g1, _ids(spark, [2]), 0)
-    assert not os.path.exists(os.path.join(gdir, "delta-b7"))  # reaped
-
-
-def test_crash_between_delta_write_and_marker_rename(spark, tmp_path):
+def test_crash_between_delta_write_and_marker_rename(
+    spark, tmp_path, monkeypatch
+):
     """Failure injection (VERDICT r11 #3, point 1): the process dies
-    AFTER the delta dirs land on disk but BEFORE the ``_LATEST`` rename.
-    The commit must be invisible — recovery reads only marker-referenced
-    dirs — and the orphaned delta dir must be reaped by the next
-    successful commit."""
+    AFTER the delta lands on disk but BEFORE the marker swap. The commit
+    must be invisible — recovery folds only marker-named dirs — and the
+    next successful commit keeps recovering exactly."""
     from vector_search_spark.operators.graph_delta import GraphDeltaLog
 
-    gdir = str(tmp_path / "g")
-    log = GraphDeltaLog(spark, gdir)
+    log = GraphDeltaLog(spark, str(tmp_path / "g"))
     g0 = _df(spark, [(1, 2, 1, 0.9), (2, 1, 1, 0.8)])
-    log.publish(g0, None, -1)
+    log.publish_base(g0, -1)
 
-    real_write = log._write_marker
+    def die(src, dst):
+        raise RuntimeError("injected crash before marker swap")
 
-    def _boom(m):
-        raise RuntimeError("injected crash before marker rename")
-
-    log._write_marker = _boom
     g1 = _df(spark, [(1, 9, 1, 0.99), (2, 1, 1, 0.8)])
-    try:
-        log.publish(g1, _ids(spark, [1]), 0)
-        raise AssertionError("injection did not fire")
-    except RuntimeError:
-        pass
-    # the delta dir was written, but the commit never became visible
-    assert os.path.exists(os.path.join(gdir, "delta-b0", "rows"))
-    folded, m = log.recover()
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "replace", die)
+        with pytest.raises(RuntimeError, match="injected"):
+            log.publish_delta(g1, _ids(spark, [1]), 0)
+    folded, meta = log.recover()
     assert _edges(folded) == _edges(g0)  # pre-crash state, exactly
-    assert m["committed"] == -1 and m["deltas"] == []
+    assert meta["committed"] == -1 and log.read()["deltas"] == []
 
-    # next successful commit (a fresh process) reaps the orphan
-    log._write_marker = real_write
     g2 = _df(spark, [(1, 2, 1, 0.9), (2, 1, 1, 0.8), (3, 1, 1, 0.7)])
-    assert log.publish(g2, _ids(spark, [3]), 1) == "delta"
-    assert not os.path.exists(os.path.join(gdir, "delta-b0"))
-    folded, m = log.recover()
+    log.publish_delta(g2, _ids(spark, [3]), 1)
+    folded, _ = log.recover()
     assert _edges(folded) == _edges(g2)
-    assert m["deltas"] == [1]
+    assert [b for b, _ in log.deltas(log.read())] == [1]
 
 
-def test_crash_between_marker_rename_and_gc(spark, tmp_path):
+def test_crash_between_marker_rename_and_gc(spark, tmp_path, monkeypatch):
     """Failure injection (VERDICT r11 #3, point 2): the process dies
-    AFTER the ``_LATEST`` rename but BEFORE ``_gc``. The commit is
-    durable (recovery sees the new state), superseded dirs linger as
-    garbage only, and the next commit reaps them."""
+    AFTER the marker swap of a base publish but BEFORE GC. The commit is
+    durable (recovery sees the new state), and the next commit still
+    recovers exactly."""
     from vector_search_spark.operators.graph_delta import GraphDeltaLog
 
-    gdir = str(tmp_path / "g")
-    log = GraphDeltaLog(spark, gdir)
+    log = GraphDeltaLog(spark, str(tmp_path / "g"))
     g0 = _df(spark, [(1, 2, 1, 0.9), (2, 1, 1, 0.8)])
-    log.publish(g0, None, -1)
+    log.publish_base(g0, -1)
     g1 = _df(spark, [(1, 9, 1, 0.99), (2, 1, 1, 0.8)])
-    assert log.publish(g1, _ids(spark, [1]), 0) == "delta"
+    log.publish_delta(g1, _ids(spark, [1]), 0)
+    real_replace = os.replace
 
-    real_gc = log._gc
-
-    def _boom(m):
+    def replace_then_die(src, dst):
+        real_replace(src, dst)
         raise RuntimeError("injected crash before gc")
 
-    log._gc = _boom
-    try:
-        log.publish(g1, None, 1)  # touched=None forces a base fold
-        raise AssertionError("injection did not fire")
-    except RuntimeError:
-        pass
-    # marker renamed first: the compaction IS committed...
-    m = log.read_marker()
-    assert m["base"] == 1 and m["deltas"] == []
-    folded, _ = log.recover()
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "replace", replace_then_die)
+        with pytest.raises(RuntimeError, match="injected"):
+            log.publish_base(g1, 1)
+    folded, meta = log.recover()
+    assert meta["committed"] == 1 and log.read()["deltas"] == []
     assert _edges(folded) == _edges(g1)
-    # ...while the superseded base + delta dirs linger un-reaped
-    assert os.path.exists(os.path.join(gdir, "base-b-1"))
-    assert os.path.exists(os.path.join(gdir, "delta-b0"))
 
-    # next commit (fresh process) garbage-collects them
-    log._gc = real_gc
     g2 = _df(spark, [(1, 9, 1, 0.99), (2, 1, 1, 0.8), (3, 1, 1, 0.7)])
-    assert log.publish(g2, _ids(spark, [3]), 2) == "delta"
-    assert not os.path.exists(os.path.join(gdir, "base-b-1"))
-    assert not os.path.exists(os.path.join(gdir, "delta-b0"))
+    log.publish_delta(g2, _ids(spark, [3]), 2)
     folded, _ = log.recover()
     assert _edges(folded) == _edges(g2)

@@ -901,7 +901,7 @@ def test_durable_graph_ingest_restart_recovery(spark, tmp_path):
 def test_durable_graph_ingest_replayed_batch_skipped(spark, tmp_path):
     """Crash AFTER the snapshot commit but BEFORE the engine's commit
     file: Structured Streaming replays the last batch on restart, and
-    the _LATEST marker guard must SKIP the re-insert (the snapshot
+    the committed-batch guard must SKIP the re-insert (the snapshot
     already contains it). Simulated by deleting the newest file in the
     checkpoint's commits/ dir after a full drain, then restarting —
     final graph still equals the one-shot oracle."""

@@ -3,47 +3,36 @@ next #1: the round-10 ``DurableGraphIngest`` rewrote the FULL adjacency
 every micro-batch — O(index) IO per O(batch) of ingested work, the one
 scale-`weak` in the round-10 audit).
 
-The scale-safe shape is the standard LSM/delta-log publish every
-mutable-index deployment uses:
+The commit protocol (marker, fresh directories, GC, crash story) is
+:mod:`.index_log`'s. This module adds what is particular to a graph:
 
-- **base-b<id>/** — a full adjacency snapshot in the
+- a base holds ``rows/`` — a full adjacency snapshot in the
   ``graph_write_index`` shard format (hash-sharded parquet);
-- **delta-b<id>/rows/** + **delta-b<id>/touched/** — one PER-BATCH delta:
-  the full replacement adjacency of every src the batch touched (new
-  nodes + patched neighbors; ``knn_graph_insert``/``knn_graph_delete``
-  replace a touched src's rows wholesale, so per-src latest-delta-wins
-  reconstruction is exact) plus the touched-src list itself. A src in
-  ``touched`` with zero rows in ``rows`` is a DELETE tombstone.
-- **_LATEST** — a JSON marker ``{"base": id, "deltas": [ids...],
-  "committed": last_id, "base_rows": n, "delta_rows": m, "extra": {}}``
-  committed by tmp-write + ``os.replace`` (atomic on POSIX): a snapshot
-  or delta is invisible to recovery until the rename lands, which is
-  the whole crash-safety story (partially-written dirs are orphans the
-  next successful commit garbage-collects).
+- a delta holds ``rows/`` + ``touched/`` — the full replacement
+  adjacency of every src the batch touched (new nodes + patched
+  neighbors; ``knn_graph_insert``/``knn_graph_delete`` replace a touched
+  src's rows wholesale, so per-src latest-delta-wins reconstruction is
+  exact) plus the touched-src list itself. A src in ``touched`` with
+  zero rows in ``rows`` is a DELETE tombstone;
+- the marker's meta carries ``committed`` (last batch id), ``base_rows``,
+  ``delta_rows`` and the caller's ``extra`` dict.
 
-Per-batch publish IO is now bounded by (batch + touched)·k rows — it
-scales with the BATCH, not the index. Recovery folds base + deltas with
-per-src latest-wins; periodic compaction (triggered by the log's own
-``delta_rows >= compact_rows_frac · base_rows`` / ``max_deltas`` policy
-for the streaming ingest, or by :class:`GraphMaintainer`'s churn policy
-for the maintained lifecycle) folds the deltas into a fresh base —
-exactly the LSM economics: O(index) writes happen only at compaction,
-amortized over ~frac·n mutated rows.
-
-Reference counterpart: the mutable ``condition_vec`` catalog
-(``nl_targeting_save.py:139-146``) — rows accrete per condition in a
-durable store; this module is the Spark-native durable carrier for the
-graph index built over such a catalog.
+Per-batch publish IO is bounded by (batch + touched)·k rows — it scales
+with the BATCH, not the index. Recovery folds base + deltas with per-src
+latest-wins; the caller decides when to publish a fresh base instead
+(``DurableGraphIngest``'s delta-row policy, :class:`GraphMaintainer`'s
+churn policy) — exactly the LSM economics: O(index) writes happen only
+at compaction, amortized over ~frac·n mutated rows.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .index_log import IndexLog
 
 GRAPH_SCHEMA = "src_id long, nbr_id long, rank long, score double"
 _GRAPH_COLS = ["src_id", "nbr_id", "rank", "score"]
@@ -59,128 +48,55 @@ def _parquet_num_rows(path: str) -> int:
     return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
-class GraphDeltaLog:
+def _write_side(d: str, side: dict[str, DataFrame] | None) -> None:
+    """Caller-owned relations committed in the same directory as the
+    graph rows (the maintainer's corpus snapshot and mutation log)."""
+    for name, df in (side or {}).items():
+        df.write.mode("overwrite").parquet(os.path.join(d, name))
+
+
+class GraphDeltaLog(IndexLog):
     """Durable base+delta log for one graph index directory.
 
-    ``publish(graph, touched, batch_id)`` is the single write surface:
-    it commits either a bounded DELTA (the touched srcs' replacement
-    rows — the steady-state path) or a full BASE snapshot (first commit,
-    explicit ``mode="base"``, or when the auto-compaction policy fires),
-    then advances the atomic ``_LATEST`` marker. ``recover()`` returns
-    the folded adjacency plus the marker, or ``(None, None)`` on a
-    fresh directory."""
+    ``publish_base`` commits a full snapshot, ``publish_delta`` the
+    bounded replacement rows of the touched srcs; ``side`` relations
+    ride in the same commit. ``recover()`` returns the folded adjacency
+    plus the marker's meta, or ``(None, None)`` on a fresh directory."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        graph_dir: str,
-        compact_rows_frac: float = 0.5,
-        max_deltas: int = 32,
-    ) -> None:
+    def __init__(self, spark: SparkSession, root: str) -> None:
+        super().__init__(root)
         self.spark = spark
-        self.graph_dir = graph_dir
-        self.marker = os.path.join(graph_dir, "_LATEST")
-        self.compact_rows_frac = compact_rows_frac
-        self.max_deltas = max_deltas
-
-    # -- marker ---------------------------------------------------------
-    def read_marker(self) -> dict | None:
-        if not os.path.exists(self.marker):
-            return None
-        with open(self.marker) as fh:
-            return json.load(fh)
-
-    def _write_marker(self, m: dict) -> None:
-        tmp = self.marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(m, fh)
-        os.replace(tmp, self.marker)
-
-    # -- paths ----------------------------------------------------------
-    def _base_path(self, bid: int) -> str:
-        return os.path.join(self.graph_dir, f"base-b{bid}")
-
-    def _delta_path(self, bid: int) -> str:
-        return os.path.join(self.graph_dir, f"delta-b{bid}")
-
-    def _gc(self, m: dict) -> None:
-        """Remove every base-*/delta-* dir the marker no longer
-        references — superseded snapshots AND orphans from crashes
-        mid-write (they were never visible to recovery)."""
-        live = {f"base-b{m['base']}"} | {
-            f"delta-b{b}" for b in m["deltas"]
-        }
-        for d in os.listdir(self.graph_dir):
-            if (
-                (d.startswith("base-b") or d.startswith("delta-b"))
-                and d not in live
-            ):
-                shutil.rmtree(
-                    os.path.join(self.graph_dir, d), ignore_errors=True
-                )
 
     # -- write ----------------------------------------------------------
-    def publish(
+    def publish_base(
         self,
         graph: DataFrame,
-        touched: DataFrame | None,
         batch_id: int,
         extra: dict | None = None,
-        mode: str = "auto",
-    ) -> str:
-        """Commit ``graph`` as of ``batch_id``. Returns "base" or
-        "delta" (what was written).
-
-        - ``mode="base"``: full snapshot (compaction / first commit).
-        - ``mode="delta"``: bounded delta of ``touched`` srcs.
-        - ``mode="auto"``: delta unless this is the first commit or the
-          accumulated-delta policy fires (``delta_rows`` so far >=
-          ``compact_rows_frac`` · ``base_rows``, or more than
-          ``max_deltas`` deltas) — the policy reads the CURRENT marker,
-          so the fold lags the trigger by at most one batch.
-        """
-        m = self.read_marker()
-        if m is None or touched is None:
-            mode = "base"  # first commit / no write set: only base is valid
-        elif mode == "auto":
-            policy_fires = (
-                m["delta_rows"]
-                >= self.compact_rows_frac * max(m["base_rows"], 1)
-                or len(m["deltas"]) >= self.max_deltas
-            )
-            mode = "base" if policy_fires else "delta"
-        if mode == "base":
-            return self._commit_base(graph, batch_id, extra)
-        return self._commit_delta(graph, touched, batch_id, extra, m)
-
-    def _commit_base(
-        self, graph: DataFrame, batch_id: int, extra: dict | None
-    ) -> str:
+        side: dict[str, DataFrame] | None = None,
+    ) -> dict:
         from .ann import graph_write_index
 
-        os.makedirs(self.graph_dir, exist_ok=True)
-        path = self._base_path(batch_id)
-        graph_write_index(graph.select(*_GRAPH_COLS), path)
-        m = {
-            "base": batch_id,
-            "base_rows": _parquet_num_rows(path),
-            "deltas": [],
-            "delta_rows": 0,
-            "committed": batch_id,
-            "extra": extra or {},
-        }
-        self._write_marker(m)
-        self._gc(m)
-        return "base"
+        def write(d: str) -> dict:
+            graph_write_index(graph.select(*_GRAPH_COLS), f"{d}/rows")
+            _write_side(d, side)
+            return {
+                "committed": batch_id,
+                "base_rows": _parquet_num_rows(f"{d}/rows"),
+                "delta_rows": 0,
+                "extra": extra or {},
+            }
 
-    def _commit_delta(
+        return self.commit_base(write)
+
+    def publish_delta(
         self,
         graph: DataFrame,
         touched: DataFrame,
         batch_id: int,
-        extra: dict | None,
-        m: dict,
-    ) -> str:
+        extra: dict | None = None,
+        side: dict[str, DataFrame] | None = None,
+    ) -> dict:
         # full replacement rows for every touched src: the graph ops
         # replace a touched src's adjacency wholesale, so the delta is
         # simply a semi-join of the (already checkpointed) post-op graph
@@ -193,31 +109,27 @@ class GraphDeltaLog:
         rows = graph.join(F.broadcast(t), "src_id", "left_semi").select(
             *_GRAPH_COLS
         )
-        dpath = self._delta_path(batch_id)
-        # one file per delta: a delta is one batch's worth of rows
-        # (4 scalars each) — a 1M-row maintenance batch is ~32 MB; a
-        # deployment with bigger batches raises the coalesce
-        rows.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(dpath, "rows")
-        )
-        t.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(dpath, "touched")
-        )
-        deltas = [b for b in m["deltas"] if b != batch_id] + [batch_id]
-        m2 = {
-            **m,
-            "deltas": deltas,
-            "delta_rows": m["delta_rows"]
-            + _parquet_num_rows(os.path.join(dpath, "rows")),
-            "committed": batch_id,
-            "extra": extra if extra is not None else m.get("extra", {}),
-        }
-        self._write_marker(m2)
-        self._gc(m2)
-        return "delta"
+        meta = self.read()["meta"]
+
+        def write(d: str) -> dict:
+            # one file per delta: a delta is one batch's worth of rows
+            # (4 scalars each) — a 1M-row maintenance batch is ~32 MB; a
+            # deployment with bigger batches raises the coalesce
+            rows.coalesce(1).write.mode("overwrite").parquet(f"{d}/rows")
+            t.coalesce(1).write.mode("overwrite").parquet(f"{d}/touched")
+            _write_side(d, side)
+            return {
+                **meta,
+                "committed": batch_id,
+                "delta_rows": meta["delta_rows"]
+                + _parquet_num_rows(f"{d}/rows"),
+                "extra": extra or {},
+            }
+
+        return self.commit_delta(batch_id, write)
 
     # -- read -----------------------------------------------------------
-    def fold(self, m: dict | None = None) -> DataFrame:
+    def fold(self, m: dict) -> DataFrame:
         """base + deltas with per-src LATEST-DELTA-WINS: a src's rows
         come from the newest delta that touched it (zero rows there =
         tombstoned), else from the base. One union + one tiny aggregate
@@ -225,21 +137,18 @@ class GraphDeltaLog:
         paid once per restart."""
         from .ann import graph_read_index
 
-        m = m or self.read_marker()
-        if m is None:
-            raise FileNotFoundError(f"no _LATEST marker in {self.graph_dir}")
-        base = graph_read_index(self.spark, self._base_path(m["base"]))
-        if not m["deltas"]:
+        base = graph_read_index(self.spark, f"{self.base(m)}/rows")
+        deltas = self.deltas(m)
+        if not deltas:
             return base
         rows = None
         touched = None
-        for b in m["deltas"]:
-            dpath = self._delta_path(b)
+        for b, dpath in deltas:
             r = self.spark.read.schema(GRAPH_SCHEMA).parquet(
-                os.path.join(dpath, "rows")
+                f"{dpath}/rows"
             ).withColumn("_bid", F.lit(b))
             t = self.spark.read.schema("src_id long").parquet(
-                os.path.join(dpath, "touched")
+                f"{dpath}/touched"
             ).withColumn("_bid", F.lit(b))
             rows = r if rows is None else rows.unionByName(r)
             touched = t if touched is None else touched.unionByName(t)
@@ -256,7 +165,7 @@ class GraphDeltaLog:
         )
 
     def recover(self) -> tuple[DataFrame | None, dict | None]:
-        m = self.read_marker()
+        m = self.read()
         if m is None:
             return None, None
-        return self.fold(m), m
+        return self.fold(m), m["meta"]

@@ -3708,7 +3708,7 @@ def d_embedding_persist_compact(
     contract promises: write → probe → admit → COMPACT): base index on
     vec_id >= 100; deliveries 0-2 admitted as batch-keyed deltas (25 ids
     each); ``embedding_index_compact(upto_batch_id=2)`` folds batches
-    0-1 into a new base GENERATION behind the atomic ``_BASE`` marker
+    0-1 into a new base GENERATION behind the index's atomic marker
     (batch 2 stays a live delta — the mid-stream shape); then delivery 3
     (vec_id 75..99) probes with ``max_batch_id=3``, reading new-base ∪
     remaining delta. The oracle replays the whole cross-set pipeline
@@ -3718,8 +3718,6 @@ def d_embedding_persist_compact(
     O(index) by design (run on a delta-count policy, never per
     delivery); probe cost unchanged — O(batch) against the standing
     asset."""
-    import shutil
-
     from ..operators.dedup import (
         embedding_index_compact,
         embedding_index_insert,
@@ -3729,8 +3727,9 @@ def d_embedding_persist_compact(
     from ..utils import pid_scratch
 
     emb = _t(spark, sf_dir, "embeddings")
+    # mutating row: the write below commits a fresh base that drops
+    # whatever deltas an earlier invocation left
     path = pid_scratch("emb_index_compact", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)  # mutating row: fresh state
     knobs = dict(n_planes=_EPI_PLANES, band_bits=_EPI_BITS, dim=EMB_DIM)
     embedding_index_write(
         emb.filter(F.col("vec_id") >= 100), "embedding", "vec_id", path,
@@ -4373,14 +4372,12 @@ def v_index_service_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     restart contract), every stage value-exact. Scale shape: unchanged
     from the parts — bounded maintenance batches, one plan per probe
     batch, O(batch) durability IO per op."""
-    import shutil
-
     from ..operators.index_service import VectorIndexService
     from ..utils import pid_scratch
 
     emb = _t(spark, sf_dir, "embeddings")
+    # open commits a fresh base over whatever an earlier invocation left
     state = pid_scratch("idx_service", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
     base = emb.filter(F.col("vec_id") >= 20)
     probes = emb.filter(
         (F.col("vec_id") >= 20) & (F.col("vec_id") < 23)
