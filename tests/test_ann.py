@@ -342,12 +342,15 @@ def test_knn_graph_build_auto_knob(spark, sf_dir):
 
 def test_knn_graph_serve_recall_and_batch_api(spark):
     """Beam search over the built graph must recover the exact top-k on
-    clustered data (the HNSW contract), and GraphIndexServer.serve_batch
-    answers a whole probe batch in one plan."""
+    clustered data (the HNSW contract), and the graph engine
+    build_choice builds answers a whole probe batch in one plan."""
     import numpy as np
     from pyspark.sql import functions as F
 
-    from vector_search_spark.streaming.serving import GraphIndexServer
+    from vector_search_spark.operators.index_select import (
+        build_choice,
+        choose_index,
+    )
 
     rng = np.random.RandomState(5)
     n, dim, ncl = 500, 32, 25
@@ -358,12 +361,14 @@ def test_knn_graph_serve_recall_and_batch_api(spark):
         [(i, [float(x) for x in X[i]]) for i in range(n)],
         "vec_id long, embedding array<float>",
     )
-    server = GraphIndexServer.build(emb, dim=dim, graph_k=6, k=5, beam=10)
+    choice = choose_index(10**7, dim, recall_target=0.95)
+    assert choice.family == "graph"
+    index = build_choice(choice, emb, dim=dim)
     probe_ids = [3, 57, 211, 402]
     probes = emb.filter(F.col("vec_id").isin(probe_ids)).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
-    got = server.serve_batch(probes).collect()
+    got = index.serve(probes, k=5, beam=10).collect()
     per = {}
     for r in got:
         per.setdefault(r.probe_id, []).append(r.vec_id)
@@ -649,15 +654,20 @@ def test_knn_graph_driver_paths_exact_duplicate_vectors(spark, sf_dir):
 
 
 def test_graph_server_band_config_consistent_off_default(spark):
-    """ADVICE r8 high: GraphIndexServer must resolve (n_planes, band_bits)
-    ONCE and use the same values for the persisted corpus band table and
-    every serve call. At n=1000 auto_band_bits=7 != the old fixed default
-    6 — the size class where the previous code hashed probes and corpus
-    under different configs and LSH-seeded recall silently collapsed."""
+    """ADVICE r8 high: the graph engine must resolve (n_planes,
+    band_bits) ONCE, from the corpus it builds (not the 10**7 rows the
+    choice was profiled at), and use the same values for the maintained
+    corpus band table and every serve call. At n=1000 auto_band_bits=7
+    != the maintainer's default 6 — the size class where the earlier
+    code hashed probes and corpus under different configs and
+    LSH-seeded recall silently collapsed."""
     import numpy as np
 
     from vector_search_spark.operators.ann import auto_band_bits
-    from vector_search_spark.streaming.serving import GraphIndexServer
+    from vector_search_spark.operators.index_select import (
+        build_choice,
+        choose_index,
+    )
 
     rng = np.random.RandomState(13)
     n, dim, ncl = 1000, 32, 40
@@ -668,17 +678,19 @@ def test_graph_server_band_config_consistent_off_default(spark):
         [(i, [float(x) for x in X[i]]) for i in range(n)],
         "vec_id long, embedding array<float>",
     )
-    server = GraphIndexServer.build(emb, dim=dim, graph_k=6, k=5, beam=10)
+    index = build_choice(
+        choose_index(10**7, dim, recall_target=0.95), emb, dim=dim
+    )
     auto = auto_band_bits(n)
     assert auto != 6  # the regression is only visible off the old default
-    assert server.band_bits == auto
-    assert server.n_planes == auto * 4
+    assert index.band_bits == auto
+    assert index.n_planes == auto * 4
     probe_ids = [7, 333, 911]
     probes = emb.filter(F.col("vec_id").isin(probe_ids)).select(
         F.col("vec_id").alias("probe_id"),
         F.col("embedding").alias("probe_vec"),
     )
-    got = server.serve_batch(probes).collect()
+    got = index.serve(probes, k=5, beam=10).collect()
     per = {}
     for r in got:
         per.setdefault(r.probe_id, []).append(r.vec_id)

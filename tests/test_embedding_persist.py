@@ -156,6 +156,33 @@ def test_settings_mismatch_fails_loudly(spark, tmp_path):
         )
 
 
+def test_empty_index_takes_insert_probe_and_compact(spark, tmp_path):
+    """An index written from an EMPTY corpus commits a ``bands/`` dir
+    with no ``band=`` partitions, so nothing on disk carries a schema.
+    Reads use the schemas the base commit recorded in the marker: an
+    insert into the empty index is probed and folded like any other."""
+    from vector_search_spark.operators.dedup import (
+        embedding_index_compact,
+        embedding_index_insert,
+    )
+
+    corpus, batch = _vectors(spark)
+    path = str(tmp_path / "idx")
+    embedding_index_write(
+        corpus.limit(0), "embedding", "vec_id", path,
+        n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM,
+    )
+    assert _probe_rows(spark, path, batch) == []
+    embedding_index_insert(
+        corpus.filter(F.col("vec_id") == 0), "embedding", "vec_id", path,
+        n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM,
+    )
+    pairs = [(n, c) for n, c, _ in _probe_rows(spark, path, batch)]
+    assert pairs == [(1000, 0)]
+    assert embedding_index_compact(spark, path)["folded_batches"] == [0]
+    assert [(n, c) for n, c, _ in _probe_rows(spark, path, batch)] == pairs
+
+
 def test_streaming_chained_equals_oneshot(spark, sf_dir):
     """The streaming row's batching-invariance pin: draining the new
     rows through maxFilesPerTrigger=1 micro-batch probes equals the

@@ -89,16 +89,16 @@ def test_boundary_consistency_with_evidence_constants():
     assert c2.family == "ivf"
 
 
-def test_execute_choice_end_to_end(spark, tmp_path):
+def test_build_choice_end_to_end(spark, tmp_path):
     """VERDICT r9 next #5: the IndexChoice is EXECUTED, not just
-    returned — for three corpus profiles the chooser's pick is built and
+    returned — for five corpus profiles the chooser's pick is built and
     served end-to-end on a clustered corpus and must clear the measured
-    recall floor of its family (exact = 1.0 by construction; ivf/graph
+    recall floor of its family (exact = 1.0 by construction; the others
     vs exact brute force on the same probes)."""
     import numpy as np
     from pyspark.sql import functions as F
 
-    from vector_search_spark.operators.index_select import execute_choice
+    from vector_search_spark.operators.index_select import build_choice
     from vector_search_spark.operators.knn import knn
 
     n, dim, ncl = 400, 32, 20
@@ -118,6 +118,14 @@ def test_execute_choice_end_to_end(spark, tmp_path):
     for r in knn(corpus, probes, k=10).collect():
         exact.setdefault(r.probe_id, set()).add(r.vec_id)
 
+    def execute(choice, **kw):
+        # one-shot build + serve; an adhoc scratch index is reclaimed
+        # after its answers materialize (serve checkpoints them)
+        index = build_choice(choice, corpus, **kw)
+        served = index.serve(probes, k=10)
+        index.close()
+        return served
+
     def recall(df):
         got = {}
         for r in df.collect():
@@ -128,22 +136,20 @@ def test_execute_choice_end_to_end(spark, tmp_path):
     # profile 1: small corpus, perfect recall -> exact -> recall 1.0
     c1 = choose_index(n, dim, recall_target=0.99)
     assert c1.family == "exact"
-    r1 = execute_choice(c1, corpus, probes, k=10)
+    r1 = execute(c1)
     assert set(r1.columns) == {"probe_id", "vec_id", "score"}
     assert recall(r1) == 1.0
 
     # profile 2: big static corpus, recall within the IVF sweep -> ivf
     c2 = choose_index(10**7, dim, recall_target=0.85)
     assert c2.family == "ivf"
-    r2 = execute_choice(
-        c2, corpus, probes, k=10, index_path=str(tmp_path / "ivf")
-    )
+    r2 = execute(c2, index_path=str(tmp_path / "ivf"))
     assert recall(r2) >= 0.5  # n_probe=2 of ~25 capped buckets, clustered
 
     # profile 3: mutable corpus -> graph; serve floor on clustered data
     c3 = choose_index(10**7, dim, recall_target=0.85, mutable=True)
     assert c3.family == "graph"
-    r3 = execute_choice(c3, corpus, probes, k=10, dim=dim)
+    r3 = execute(c3, dim=dim)
     assert recall(r3) >= 0.85
 
     # profile 4 (round 11, VERDICT r10 next #5): raw vectors blow the
@@ -157,12 +163,12 @@ def test_execute_choice_end_to_end(spark, tmp_path):
     c4 = choose_index(10**8, dim, recall_target=0.8,
                       memory_budget_bytes=raw // 10)
     assert c4.family == "ivf_pq" and c4.params["n_probe"] == 1
-    r4 = execute_choice(c4, corpus, probes, k=10)
+    r4 = execute(c4)
     assert set(r4.columns) == {"probe_id", "vec_id", "score"}
     rec1 = recall(r4)
     assert rec1 >= 0.4
     c4.params["n_probe"] = 4  # the v_ivf_pq_knn registry convention
-    assert recall(execute_choice(c4, corpus, probes, k=10)) >= rec1
+    assert recall(execute(c4)) >= rec1
 
     # profile 5: even PQ codes blow the budget -> hamming 64-bit sketch
     # (coarsest family; sign-bit recall on clustered 32-dim data
@@ -170,7 +176,7 @@ def test_execute_choice_end_to_end(spark, tmp_path):
     c5 = choose_index(10**8, dim, recall_target=0.8,
                       memory_budget_bytes=10**8 * 2)
     assert c5.family == "hamming"
-    r5 = execute_choice(c5, corpus, probes, k=10)
+    r5 = execute(c5)
     assert set(r5.columns) == {"probe_id", "vec_id", "score"}
     # scores are negated distances: top-1 must be the probe itself
     # (distance 0), and every probe answers k rows
@@ -186,11 +192,9 @@ def test_execute_choice_end_to_end(spark, tmp_path):
 
 def test_serving_index_shared_surface_all_families(spark, tmp_path):
     """VERDICT r11 #4: ONE serve path per family. build_choice returns
-    the shared ServingIndex surface for all five families; serve()
-    answers repeated batches off the SAME built index with the uniform
-    (probe_id, vec_id, score) contract; close() reclaims adhoc scratch.
-    execute_choice is pinned as a delegate by the end-to-end test above
-    (its results flow through this surface now)."""
+    one engine per family, and every engine's serve(probes, k) answers
+    repeated batches off the SAME built index with the (probe_id,
+    vec_id, score) contract; close() reclaims adhoc scratch."""
     import os
 
     import numpy as np
@@ -200,6 +204,7 @@ def test_serving_index_shared_surface_all_families(spark, tmp_path):
         build_choice,
         choose_index,
     )
+    from vector_search_spark.utils import pid_scratch
 
     n, dim = 200, 16
     rng = np.random.RandomState(5)
@@ -229,20 +234,24 @@ def test_serving_index_shared_surface_all_families(spark, tmp_path):
     }
     for family, choice in choices.items():
         assert choice.family == family
-        idx = build_choice(choice, corpus, k=5, dim=dim)
+        idx = build_choice(choice, corpus, dim=dim)
         assert idx.family == family
-        r1 = idx.serve(probes)
-        assert set(r1.columns) == {"probe_id", "vec_id", "score"}
+        r1 = idx.serve(probes, k=5)
+        # the graph engine also returns each answer's rank
+        extra = {"rank"} if family == "graph" else set()
+        assert set(r1.columns) == {"probe_id", "vec_id", "score"} | extra
         rows1 = {(r.probe_id, r.vec_id) for r in r1.collect()}
         assert {p for p, _ in rows1} == {0, 1, 2}
         # a second batch serves off the SAME built index (the build/serve
         # split is the point — no rebuild per batch)
-        rows2 = {(r.probe_id, r.vec_id) for r in idx.serve(probes).collect()}
+        rows2 = {
+            (r.probe_id, r.vec_id) for r in idx.serve(probes, k=5).collect()
+        }
         assert rows2 == rows1
         idx.close()
         if family == "ivf":
             # adhoc scratch index reclaimed on close
-            assert not os.path.exists(idx.handle.index_path)
+            assert not os.path.exists(pid_scratch("choice_ivf", "adhoc"))
 
 
 def test_profile_measured_evidence_replayed():

@@ -115,3 +115,32 @@ def test_mutable_service_compacts_on_churn(spark, tmp_path):
     )
     assert svc._engine.compactions > before
     assert svc.churn_frac == 0.0  # reset by compaction
+
+
+def test_static_and_mutable_graph_services_serve_alike(spark, tmp_path):
+    """One graph engine behind both: a static service and a durable
+    mutable one, opened over the same corpus with the same pinned graph
+    params, serve identical (probe_id, vec_id, score) rows; only the
+    mutable one accepts mutation."""
+    from vector_search_spark.operators.index_service import VectorIndexService
+
+    corpus = _corpus(spark, n=150)
+    params = {"k": 6, "n_planes": 16, "band_bits": 4, "rounds": 2}
+    static = VectorIndexService.open(corpus, dim=16, k=5, graph_params=params)
+    mutable = VectorIndexService.open(
+        corpus, dim=16, k=5, mutable=True, state_dir=str(tmp_path / "svc"),
+        graph_params=params,
+    )
+    assert static.family == mutable.family == "graph"
+    probes = _probes(corpus, 5)
+
+    def rows(svc):
+        served = svc.serve(probes).collect()
+        return sorted((r.probe_id, r.vec_id, r.score) for r in served)
+
+    assert len(rows(static)) == 25
+    assert rows(static) == rows(mutable)
+    with pytest.raises(ValueError, match="static"):
+        static.delete(corpus.limit(1).select("vec_id"))
+    mutable.delete(corpus.limit(1).select("vec_id"))
+    assert mutable.churn_frac > 0

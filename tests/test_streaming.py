@@ -676,27 +676,36 @@ def test_cdc_apply_tombstone_ordering(spark, tmp_path):
     assert got3 == {1: (1000, 1), 2: (800, 7)}
 
 
-def test_ann_server_serve_batch_single_plan(spark, sf_dir, tmp_path):
-    """The stable batched-serving surface (AnnIndexServer.serve_batch)
-    must answer a whole probe batch in ONE DataFrame plan: the number of
-    Spark JOBS it runs is a small constant INDEPENDENT of batch size (a
-    per-probe loop would schedule >= one job per probe and pay Spark's
-    measured ~0.5-1 s scheduling floor per query — tools/serve_latency.py).
-    Job counts come from job groups, so the pin is load-independent.
-    Values are certified against the in-memory IVF twin (same algorithm,
-    same index), probe-for-probe."""
+@pytest.mark.parametrize("family", ["ivf", "graph"])
+def test_engine_serve_single_plan(spark, sf_dir, tmp_path, family):
+    """The engines ``build_choice`` returns must answer a whole probe
+    batch in ONE DataFrame plan: the number of Spark JOBS a serve runs is
+    a small constant INDEPENDENT of batch size (a per-probe loop would
+    schedule >= one job per probe and pay Spark's measured ~0.5-1 s
+    scheduling floor per query — tools/serve_latency.py; the graph's
+    per-round checkpoints cost a fixed number of jobs, the batch size
+    costs none). Job counts come from job groups, so the pin is
+    load-independent. The ivf answers are certified against the
+    in-memory IVF twin (same algorithm, same index), probe-for-probe."""
     from pyspark.sql import functions as F
 
     from vector_search_spark.operators.ann import ivf_assign, ivf_knn
+    from vector_search_spark.operators.index_select import (
+        build_choice,
+        choose_index,
+    )
     from vector_search_spark.sources.catalog import load_table
-    from vector_search_spark.streaming.serving import AnnIndexServer
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid_vec"),
-    )
-    server = AnnIndexServer.build(emb, cents, str(tmp_path / "ivf"), k=5)
+    if family == "ivf":
+        choice = choose_index(10**7, 64, recall_target=0.85)
+        # the first-16-centroid, n_probe=4 convention of v_ivf_knn
+        choice.params.update(n_centroids=16, n_probe=4)
+        index = build_choice(choice, emb, index_path=str(tmp_path / "ivf"))
+    else:
+        choice = choose_index(10**7, 64, recall_target=0.95)
+        index = build_choice(choice, emb, dim=64)
+    assert choice.family == family
 
     def probes(n):
         return emb.filter(F.col("vec_id") < n).select(
@@ -715,9 +724,11 @@ def test_ann_server_serve_batch_single_plan(spark, sf_dir, tmp_path):
         return rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
     # warm both shapes once (broadcast machinery, parquet footers)
-    server.serve_batch(probes(1)).collect()
-    rows1, jobs1 = jobs_for("serve_one", server.serve_batch(probes(1)))
-    rows20, jobs20 = jobs_for("serve_twenty", server.serve_batch(probes(20)))
+    index.serve(probes(1), k=5).collect()
+    rows1, jobs1 = jobs_for(f"{family}_one", index.serve(probes(1), k=5))
+    rows20, jobs20 = jobs_for(
+        f"{family}_twenty", index.serve(probes(20), k=5)
+    )
     assert {r["probe_id"] for r in rows20} == set(range(20))
     per_probe = {}
     for r in rows20:
@@ -727,9 +738,15 @@ def test_ann_server_serve_batch_single_plan(spark, sf_dir, tmp_path):
     # ONE plan per batch: job count is a small constant, NOT O(probes) —
     # and serving 20x the probes schedules no more jobs than serving 1.
     assert jobs20 <= jobs1 + 1, (jobs1, jobs20)
+    if family == "graph":
+        return
     assert jobs20 <= 6, jobs20
 
     # value certification vs the in-memory twin over the same index data
+    cents = emb.filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("centroid_vec"),
+    )
     assigned = ivf_assign(emb, cents)
     mem = {
         (r["probe_id"], r["vec_id"], round(r["score"], 6))
@@ -739,47 +756,6 @@ def test_ann_server_serve_batch_single_plan(spark, sf_dir, tmp_path):
         (r["probe_id"], r["vec_id"], round(r["score"], 6)) for r in rows20
     }
     assert got == mem
-
-
-def test_graph_server_serve_batch_single_plan(spark, sf_dir):
-    """GraphIndexServer.serve_batch: job count is a small constant
-    independent of batch size (the AnnIndexServer pin applied to the
-    graph path — per-round checkpoints cost a fixed number of jobs, the
-    batch size costs none)."""
-    from pyspark.sql import functions as F
-
-    from vector_search_spark.sources.catalog import load_table
-    from vector_search_spark.streaming.serving import GraphIndexServer
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    server = GraphIndexServer.build(emb, dim=64, graph_k=6, k=5, beam=8)
-
-    def probes(n):
-        return emb.filter(F.col("vec_id") < n).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("embedding").alias("probe_vec"),
-        )
-
-    sc = spark.sparkContext
-
-    def jobs_for(group, df):
-        sc.setJobGroup(group, group)
-        try:
-            rows = df.collect()
-        finally:
-            sc.setJobGroup(None, None)
-        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    server.serve_batch(probes(1)).collect()  # warm
-    rows1, jobs1 = jobs_for("gserve_one", server.serve_batch(probes(1)))
-    rows20, jobs20 = jobs_for("gserve_twenty", server.serve_batch(probes(20)))
-    assert {r["probe_id"] for r in rows20} == set(range(20))
-    per_probe = {}
-    for r in rows20:
-        per_probe.setdefault(r["probe_id"], 0)
-        per_probe[r["probe_id"]] += 1
-    assert all(n == 5 for n in per_probe.values())
-    assert jobs20 <= jobs1 + 1, (jobs1, jobs20)
 
 
 def test_graph_ingest_chained_insert_equals_oneshot(spark):

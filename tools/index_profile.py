@@ -6,11 +6,12 @@ extrapolating from 64/768.
 
 Families profiled:
 - exact: no index; serve = one batched brute-force scan.
-- ivf: first-16-centroid partitioned index (the v_ivf_knn/AnnIndexServer
-  convention); footprint = persisted index dir.
-- graph: knn_graph_build + LSH-entry beam serve (GraphIndexServer
-  convention); footprint = sharded adjacency + corpus band table (both
-  are serving state).
+- ivf: first-16-centroid partitioned index (the v_ivf_knn convention,
+  built and served by index_select.build_choice); footprint = persisted
+  index dir.
+- graph: the graph engine build_choice builds (GraphMaintainer: k-NN
+  graph + LSH-entry beam serve); footprint = sharded adjacency + corpus
+  band table (both are serving state).
 - pq: 4-subquantizer codes (v_ivf_pq_knn convention); footprint = codes
   parquet (serve latency not re-measured — ADC scoring shares the IVF
   scan shape).
@@ -50,19 +51,14 @@ def du(path: str) -> int:
 def main() -> None:
     n_q = int(sys.argv[1]) if len(sys.argv) > 1 else 100
     from vector_search_spark.config import EMB_DIM
-    from vector_search_spark.operators.ann import (
-        ivf_assign,
-        ivf_build_index,
-        ivf_pq_encode,
-        make_planes,
+    from vector_search_spark.operators.ann import ivf_pq_encode, make_planes
+    from vector_search_spark.operators.index_select import (
+        build_choice,
+        choose_index,
     )
     from vector_search_spark.operators.knn import knn
     from vector_search_spark.session import get_spark
     from vector_search_spark.sources.catalog import load_table, sf_dir_from_env
-    from vector_search_spark.streaming.serving import (
-        AnnIndexServer,
-        GraphIndexServer,
-    )
     from vector_search_spark.utils import fan_out, pid_scratch
 
     sf_dir = sf_dir_from_env()
@@ -100,17 +96,14 @@ def main() -> None:
                     "index_bytes_per_vec": 0.0}
 
     # IVF ----------------------------------------------------------------
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid_vec"),
-    )
+    choice = choose_index(10**7, EMB_DIM, recall_target=0.85)
+    choice.params.update(n_centroids=16, n_probe=4)
     ivf_path = pid_scratch("index_profile_ivf", sf_dir)
     t0 = time.perf_counter()
-    ivf_build_index(emb, cents, ivf_path, assigned=ivf_assign(emb, cents))
+    ivf = build_choice(choice, emb, index_path=ivf_path)
     ivf_build = time.perf_counter() - t0
-    server = AnnIndexServer(spark, ivf_path, cents, k=10, n_probe=4)
-    server.serve_batch(probe_batch()).collect()  # warm
-    t = timed_min2(lambda: server.serve_batch(probe_batch()).collect())
+    ivf.serve(probe_batch(), 10).collect()  # warm
+    t = timed_min2(lambda: ivf.serve(probe_batch(), 10).collect())
     out["ivf"] = {
         "build_s": round(ivf_build, 2),
         "serve_ms_per_q": round(t * 1000 / n_q, 1),
@@ -119,16 +112,18 @@ def main() -> None:
 
     # GRAPH ----------------------------------------------------------------
     t0 = time.perf_counter()
-    gsrv = GraphIndexServer.build(emb, dim=EMB_DIM, graph_k=6, k=10)
+    graph = build_choice(
+        choose_index(10**7, EMB_DIM, recall_target=0.95), emb, dim=EMB_DIM
+    )
     graph_build = time.perf_counter() - t0
-    gsrv.serve_batch(probe_batch()).collect()  # warm
-    t = timed_min2(lambda: gsrv.serve_batch(probe_batch()).collect())
+    graph.serve(probe_batch(), 10).collect()  # warm
+    t = timed_min2(lambda: graph.serve(probe_batch(), 10).collect())
     from vector_search_spark.operators.ann import graph_write_index
 
     gpath = pid_scratch("index_profile_graph", sf_dir)
-    graph_write_index(gsrv.graph, gpath)
+    graph_write_index(graph.graph, gpath)
     bpath = pid_scratch("index_profile_gbands", sf_dir)
-    gsrv.corpus_bands.write.mode("overwrite").parquet(bpath)
+    graph.bands.write.mode("overwrite").parquet(bpath)
     out["graph"] = {
         "build_s": round(graph_build, 2),
         "serve_ms_per_q": round(t * 1000 / n_q, 1),

@@ -36,10 +36,9 @@ def _quantiles(xs):
 
 def main():
     n_q = int(sys.argv[1]) if len(sys.argv) > 1 else 20
-    from vector_search_spark.operators.ann import (
-        ivf_assign,
-        ivf_build_index,
-        ivf_probe_index,
+    from vector_search_spark.operators.index_select import (
+        build_choice,
+        choose_index,
     )
     from vector_search_spark.operators.knn import knn
     from vector_search_spark.session import get_spark
@@ -50,20 +49,20 @@ def main():
     spark = get_spark("serve_latency")
     spark.sparkContext.setLogLevel("ERROR")
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid_vec"),
-    )
-    # once-per-corpus build job (NOT counted in serve latency)
-    path = pid_scratch("serve_latency_ivf", sf_dir)
-    t0 = time.perf_counter()
-    ivf_build_index(emb, cents, path, assigned=ivf_assign(emb, cents))
-    build_s = time.perf_counter() - t0
-    cents = cents.localCheckpoint(eager=True)
-
     probe_rows = emb.filter(F.col("vec_id") < n_q).select(
         "vec_id", "embedding"
     ).collect()
+    dim = len(probe_rows[0]["embedding"])
+
+    # once-per-corpus build job (NOT counted in serve latency), through
+    # the shipped engine: the first 16 vectors as centroids, n_probe 4
+    # (the v_ivf_knn convention)
+    path = pid_scratch("serve_latency_ivf", sf_dir)
+    choice = choose_index(10**7, dim, recall_target=0.85)
+    choice.params.update(n_centroids=16, n_probe=4)
+    t0 = time.perf_counter()
+    ivf = build_choice(choice, emb, index_path=path)
+    build_s = time.perf_counter() - t0
 
     def one_probe(row):
         return spark.createDataFrame(
@@ -72,7 +71,7 @@ def main():
         )
 
     # warm both paths (JIT, parquet footers, broadcast machinery)
-    ivf_probe_index(spark, path, cents, one_probe(probe_rows[0]), k=10).collect()
+    ivf.serve(one_probe(probe_rows[0]), 10).collect()
     knn(emb, one_probe(probe_rows[0]), k=10).collect()
 
     ivf_t, brute_t = [], []
@@ -80,7 +79,7 @@ def main():
         t0 = time.perf_counter()
         # fresh DF per trial: repeated .collect() on one DF reuses shuffle
         # files and lies about latency
-        ivf_probe_index(spark, path, cents, one_probe(row), k=10).collect()
+        ivf.serve(one_probe(row), 10).collect()
         ivf_t.append(time.perf_counter() - t0)
     for row in probe_rows:
         t0 = time.perf_counter()
@@ -88,32 +87,26 @@ def main():
         brute_t.append(time.perf_counter() - t0)
 
     # the Spark-native serving form: amortize the scheduling floor by
-    # batching probes into ONE plan — measured through the SHIPPED API
-    # (streaming.serving.AnnIndexServer.serve_batch, which
-    # s_streaming_knn_serve's per-micro-batch form matches).
-    from vector_search_spark.streaming.serving import AnnIndexServer
-
-    server = AnnIndexServer(spark, path, cents, k=10)
+    # batching probes into ONE plan (s_streaming_knn_serve's
+    # per-micro-batch form matches)
     batch_probes = spark.createDataFrame(
         [(r["vec_id"], r["embedding"]) for r in probe_rows],
         "probe_id long, probe_vec array<float>",
     )
     t0 = time.perf_counter()
-    server.serve_batch(batch_probes).collect()
+    ivf.serve(batch_probes, 10).collect()
     batch_s = time.perf_counter() - t0
 
-    # graph-serve (round 8): beam search over the prebuilt k-NN graph,
-    # same one-plan-per-batch form. Build (auto band_bits) not counted.
-    from vector_search_spark.operators.ann import knn_graph_build, knn_graph_serve
-
-    dim = len(probe_rows[0]["embedding"])
+    # graph-serve: LSH-entry beam search over the graph engine's k-NN
+    # graph, same one-plan-per-batch form. Build (banding sized to the
+    # corpus) not counted.
     t0 = time.perf_counter()
-    graph = knn_graph_build(emb, k=6, rounds=2, seed=42, dim=dim).localCheckpoint(
-        eager=True
+    graph = build_choice(
+        choose_index(10**7, dim, recall_target=0.95), emb, dim=dim
     )
     graph_build_s = time.perf_counter() - t0
     t0 = time.perf_counter()
-    knn_graph_serve(graph, emb, batch_probes, k=10, beam=8, rounds=2).collect()
+    graph.serve(batch_probes, 10).collect()
     graph_batch_s = time.perf_counter() - t0
 
     print(

@@ -975,7 +975,7 @@ def knn_graph_serve(
     build/serve pair): batched beam search over the k-NN graph's adjacency
     as iterative frontier expansion.
 
-    Per round, EVERY probe advances in ONE plan (the ``serve_batch``
+    Per round, EVERY probe advances in ONE plan (the serve surface's
     one-plan-per-batch rule — single-query loops pay Spark's ~0.5 s
     planning floor per query):
 
@@ -1051,7 +1051,7 @@ def knn_graph_serve(
                         "knn_graph_serve: corpus_bands requires explicit "
                         "n_planes and band_bits matching the banding the "
                         "table was built with (see corpus_band_keys / "
-                        "GraphIndexServer)"
+                        "GraphMaintainer)"
                     )
                 if bb_ is None:
                     bb_ = auto_band_bits(nv)
@@ -1077,7 +1077,7 @@ def knn_graph_serve(
             raise ValueError(
                 "knn_graph_serve: corpus_bands requires explicit n_planes "
                 "and band_bits matching the banding the table was built "
-                "with (see corpus_band_keys / GraphIndexServer)"
+                "with (see corpus_band_keys / GraphMaintainer)"
             )
         if band_bits is None:
             band_bits = auto_band_bits(corpus.count())
@@ -2131,7 +2131,7 @@ def pq_adc_serve(
 ) -> DataFrame:
     """ADC serving over an IVF-PQ index — the codebook/probe-table
     plumbing factored out of the certified ``v_ivf_pq_knn`` registry row
-    (VERDICT r10 next #5) so ``index_select.execute_choice`` can
+    (VERDICT r10 next #5) so ``index_select.build_choice`` can
     dispatch the ivf_pq family end-to-end.
 
     ``index`` is ``ivf_pq_encode``'s output (id, centroid_id,

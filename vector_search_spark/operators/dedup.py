@@ -1748,7 +1748,11 @@ def _index_writer(
     """``IndexLog`` write callback storing ``bands/`` (partitioned by
     band) and ``vecs/``: one writer task per band and a handful of vec
     files by default, ``write_partitions`` hashed tasks for each when
-    given."""
+    given. A base commit passes ``meta`` (the banding settings) and the
+    callback adds both relations' schemas to it, so every later read
+    passes an explicit schema — no inference job, and an index written
+    from an empty corpus (a ``bands/`` with no ``band=`` dirs) stays
+    readable."""
     if write_partitions:
         bands = bands.repartition(write_partitions, "band", "id")
         vecs = vecs.repartition(write_partitions)
@@ -1761,7 +1765,11 @@ def _index_writer(
             f"{d}/bands"
         )
         vecs.write.mode("overwrite").parquet(f"{d}/vecs")
-        return meta
+        if meta is None:
+            return None
+        return {**meta, "schema": {
+            "bands": bands.schema.json(), "vecs": vecs.schema.json(),
+        }}
 
     return write
 
@@ -1788,21 +1796,22 @@ def _read_embedding_index(
     spark, log, m: dict, below: int | None
 ) -> tuple[DataFrame, DataFrame]:
     """(bands, vecs) of the base plus the committed deltas below
-    ``below`` (None = every committed delta). Each delta is its own scan
-    (Spark refuses one scan over several band-partitioned roots) and
-    reuses the base's schema, so only the base pays a schema-inference
-    job."""
-    deltas = [d for _, d in log.deltas(m, below)]
+    ``below`` (None = every committed delta). Each root is its own scan
+    (Spark refuses one scan over several band-partitioned roots), read
+    with the schema the base commit recorded in the marker."""
+    import json
+    from functools import reduce
+
+    from pyspark.sql.types import StructType
+
+    roots = [log.base(m)] + [d for _, d in log.deltas(m, below)]
 
     def scan(sub: str, cols: list[str]) -> DataFrame:
-        base = spark.read.parquet(f"{log.base(m)}/{sub}")
-        out = base.select(*cols)
-        for d in deltas:
-            out = out.unionByName(
-                spark.read.schema(base.schema).parquet(f"{d}/{sub}")
-                .select(*cols)
-            )
-        return out
+        schema = StructType.fromJson(json.loads(m["meta"]["schema"][sub]))
+        return reduce(DataFrame.unionByName, (
+            spark.read.schema(schema).parquet(f"{r}/{sub}").select(*cols)
+            for r in roots
+        ))
 
     return scan("bands", ["id", "band", "key"]), scan("vecs", ["id", "v", "nrm"])
 

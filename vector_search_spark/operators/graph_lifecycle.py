@@ -64,6 +64,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+COALESCE_TO = 32  # partitions of every pinned relation
+
+
+def _pin(df: DataFrame) -> DataFrame:
+    """Coalesce + eager localCheckpoint: the per-step lineage cut."""
+    return df.coalesce(COALESCE_TO).localCheckpoint(eager=True)
+
+
 class GraphMaintainer:
     """Long-lived k-NN-graph index over a mutable corpus.
 
@@ -74,6 +82,8 @@ class GraphMaintainer:
     ``compact_churn_frac``. Every relation is re-coalesced and
     localCheckpoint'ed per step (the iterative-loop lineage rule —
     unionByName otherwise SUMS partition counts across rounds)."""
+
+    family = "graph"
 
     def __init__(
         self,
@@ -87,45 +97,44 @@ class GraphMaintainer:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         compact_churn_frac: float = 0.5,
-        coalesce_to: int = 32,
         state_dir: str | None = None,
     ) -> None:
         from .ann import knn_graph_build
 
-        self.dim = dim
-        self.k = k
-        self.n_planes = n_planes
-        self.band_bits = band_bits
-        self.seed = seed
-        self.build_rounds = build_rounds
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.compact_churn_frac = compact_churn_frac
-        self._coalesce = coalesce_to
+        self._configure({
+            "dim": dim, "k": k, "n_planes": n_planes,
+            "band_bits": band_bits, "seed": seed,
+            "build_rounds": build_rounds, "id_col": id_col,
+            "vec_col": vec_col, "compact_churn_frac": compact_churn_frac,
+        })
         self._init_durability(corpus.sparkSession, state_dir)
-        self.corpus = (
-            corpus.select(id_col, vec_col)
-            .coalesce(coalesce_to)
-            .localCheckpoint(eager=True)
-        )
+        self.corpus = _pin(corpus.select(id_col, vec_col))
         self._n = self.corpus.count()
         self._churned = 0
         self.compactions = 0
         self._op_seq = 0
-        self._kw = dict(
-            k=k, n_planes=n_planes, band_bits=band_bits, seed=seed, dim=dim,
-            id_col=id_col, vec_col=vec_col,
-        )
         # r14: the build's band table doubles as the maintainer's band
         # table (identical planes — one corpus signature pass instead of
         # two; corpus_band_keys stays the recovery-path source)
         g, bands = knn_graph_build(
             self.corpus, rounds=build_rounds, return_bands=True, **self._kw
         )
-        self.graph = g.coalesce(coalesce_to).localCheckpoint(eager=True)
-        self.bands = bands.coalesce(coalesce_to).localCheckpoint(eager=True)
+        self.graph = _pin(g)
+        self.bands = _pin(bands)
         if self._log is not None:
             self._commit_base()
+
+    def _configure(self, config: dict) -> None:
+        """Set the build/serve settings from a marker ``config`` dict —
+        the one path for a fresh open and for :meth:`recover`."""
+        self._config = dict(config)
+        for key, value in config.items():
+            setattr(self, key, value)
+        self._kw = {
+            key: config[key]
+            for key in ("k", "n_planes", "band_bits", "seed", "dim",
+                        "id_col", "vec_col")
+        }
 
     # -- durability plumbing ----------------------------------------------
     def _init_durability(self, spark, state_dir: str | None) -> None:
@@ -142,14 +151,7 @@ class GraphMaintainer:
             "n": self._n,
             "compactions": self.compactions,
             "op_seq": self._op_seq,
-            "config": {
-                "dim": self.dim, "k": self.k, "n_planes": self.n_planes,
-                "band_bits": self.band_bits, "seed": self.seed,
-                "build_rounds": self.build_rounds, "id_col": self.id_col,
-                "vec_col": self.vec_col,
-                "compact_churn_frac": self.compact_churn_frac,
-                "coalesce_to": self._coalesce,
-            },
+            "config": self._config,
         }
 
     def _commit_base(self) -> None:
@@ -186,28 +188,13 @@ class GraphMaintainer:
         if m is None:
             raise FileNotFoundError(f"no durable maintainer state in {state_dir}")
         ex = m["meta"]["extra"]
-        cfg = ex["config"]
         self = cls.__new__(cls)
-        self.dim = cfg["dim"]
-        self.k = cfg["k"]
-        self.n_planes = cfg["n_planes"]
-        self.band_bits = cfg["band_bits"]
-        self.seed = cfg["seed"]
-        self.build_rounds = cfg["build_rounds"]
-        self.id_col = cfg["id_col"]
-        self.vec_col = cfg["vec_col"]
-        self.compact_churn_frac = cfg["compact_churn_frac"]
-        self._coalesce = cfg["coalesce_to"]
+        self._configure(ex["config"])
         self._init_durability(spark, state_dir)
         self._churned = ex["churned"]
         self._n = ex["n"]
         self.compactions = ex["compactions"]
         self._op_seq = ex["op_seq"]
-        self._kw = dict(
-            k=self.k, n_planes=self.n_planes, band_bits=self.band_bits,
-            seed=self.seed, dim=self.dim, id_col=self.id_col,
-            vec_col=self.vec_col,
-        )
         corpus = spark.read.parquet(os.path.join(log.base(m), "corpus"))
         for _, dpath in log.deltas(m):
             if os.path.isdir(os.path.join(dpath, "add")):
@@ -221,23 +208,13 @@ class GraphMaintainer:
                     corpus[self.id_col] == dl[dl.columns[0]],
                     "left_anti",
                 )
-        self.corpus = (
-            corpus.select(self.id_col, self.vec_col)
-            .coalesce(self._coalesce)
-            .localCheckpoint(eager=True)
-        )
-        self.graph = (
-            log.fold(m).coalesce(self._coalesce).localCheckpoint(eager=True)
-        )
-        self.bands = (
-            corpus_band_keys(
-                self.corpus, n_planes=self.n_planes,
-                band_bits=self.band_bits, seed=self.seed, dim=self.dim,
-                id_col=self.id_col, vec_col=self.vec_col,
-            )
-            .coalesce(self._coalesce)
-            .localCheckpoint(eager=True)
-        )
+        self.corpus = _pin(corpus.select(self.id_col, self.vec_col))
+        self.graph = _pin(log.fold(m))
+        self.bands = _pin(corpus_band_keys(
+            self.corpus, n_planes=self.n_planes, band_bits=self.band_bits,
+            seed=self.seed, dim=self.dim, id_col=self.id_col,
+            vec_col=self.vec_col,
+        ))
         return self
 
     # -- observability ---------------------------------------------------
@@ -266,32 +243,20 @@ class GraphMaintainer:
             self.graph, self.corpus, batch,
             corpus_bands=self.bands, with_touched=True, **self._kw,
         )
-        self.graph = (
-            updated
-            .coalesce(self._coalesce)
-            .localCheckpoint(eager=True)
-        )
-        self.corpus = (
-            self.corpus.unionByName(batch)
-            .coalesce(self._coalesce)
-            .localCheckpoint(eager=True)
-        )
+        self.graph = _pin(updated)
+        self.corpus = _pin(self.corpus.unionByName(batch))
         # r14: the batch is bounded by the maintenance contract — the
         # JVM-fold banding (no Arrow stage crossing) is the right tool,
         # exactly as knn_graph_insert's own batch side already hashes;
         # sign bits agree with the Arrow path except |dot| ≲ 1e-14 (the
         # documented LSH bucketing channel)
-        self.bands = (
-            self.bands.unionByName(
-                bounded_band_keys(
-                    batch, n_planes=self.n_planes, band_bits=self.band_bits,
-                    seed=self.seed, dim=self.dim,
-                    id_col=self.id_col, vec_col=self.vec_col,
-                )
+        self.bands = _pin(self.bands.unionByName(
+            bounded_band_keys(
+                batch, n_planes=self.n_planes, band_bits=self.band_bits,
+                seed=self.seed, dim=self.dim,
+                id_col=self.id_col, vec_col=self.vec_col,
             )
-            .coalesce(self._coalesce)
-            .localCheckpoint(eager=True)
-        )
+        ))
         self._n += b
         self._churned += b
         if self._log is not None:
@@ -316,27 +281,14 @@ class GraphMaintainer:
             self.graph, self.corpus, dl,
             corpus_bands=self.bands, with_touched=True, **self._kw,
         )
-        self.graph = (
-            updated
-            .coalesce(self._coalesce)
-            .localCheckpoint(eager=True)
-        )
-        self.corpus = (
-            self.corpus.join(
-                F.broadcast(dl),
-                self.corpus[self.id_col] == dl["did"],
-                "left_anti",
-            )
-            .coalesce(self._coalesce)
-            .localCheckpoint(eager=True)
-        )
-        self.bands = (
-            self.bands.join(
-                F.broadcast(dl), self.bands["id"] == dl["did"], "left_anti"
-            )
-            .coalesce(self._coalesce)
-            .localCheckpoint(eager=True)
-        )
+        self.graph = _pin(updated)
+        self.corpus = _pin(self.corpus.join(
+            F.broadcast(dl), self.corpus[self.id_col] == dl["did"],
+            "left_anti",
+        ))
+        self.bands = _pin(self.bands.join(
+            F.broadcast(dl), self.bands["id"] == dl["did"], "left_anti"
+        ))
         self._n -= d
         self._churned += d
         if self._log is not None:
@@ -356,10 +308,8 @@ class GraphMaintainer:
             self.corpus, rounds=self.build_rounds, return_bands=True,
             **self._kw
         )
-        self.graph = g.coalesce(self._coalesce).localCheckpoint(eager=True)
-        self.bands = (
-            bands.coalesce(self._coalesce).localCheckpoint(eager=True)
-        )
+        self.graph = _pin(g)
+        self.bands = _pin(bands)
         self._churned = 0
         self.compactions += 1
         if self._log is not None:
@@ -376,12 +326,19 @@ class GraphMaintainer:
             return True
         return False
 
+    def close(self) -> None:
+        """Nothing to reclaim: durable state is the product, and the
+        pinned relations go with the object."""
+
     # -- serving -----------------------------------------------------------
     def serve(
         self, probes: DataFrame, k: int = 10, beam: int = 8, rounds: int = 2
     ) -> DataFrame:
-        """LSH-entry beam search over the CURRENT graph/corpus (one plan
-        per probe batch, the GraphIndexServer contract)."""
+        """LSH-entry beam search over the CURRENT graph/corpus: one plan
+        per probe batch, (probe_id, vec_id, rank, score) top-k per probe.
+        The banding is the build's, resolved once and recorded with the
+        config, so probes and the maintained band table always hash
+        alike (ADVICE r8)."""
         from .ann import knn_graph_serve
 
         return knn_graph_serve(

@@ -9,8 +9,10 @@ never chose — MariaDB's VEC index was the only option
 (``camp_vec_rcmn.py``'s ``VEC_FromText`` column). Here the right family
 depends on corpus size, width, recall target, mutability, and memory —
 so :func:`choose_index` encodes the measured evidence in SCALING.md /
-tests/test_ann.py as an executable decision table and returns the
-builder call to make.
+tests/test_ann.py as an executable decision table, and
+:func:`build_choice` builds the one engine per family that the pick
+names (``index_service.VectorIndexService`` is the serve entry over
+both).
 
 Measured grounding (all numbers from this repo's recorded runs, see
 SCALING.md rounds 6-10; the per-width serve-latency/footprint table is
@@ -23,7 +25,7 @@ dims and attached to every returned choice via ``profile_for``):
   build amortization only if the corpus is served rarely; the real
   cutoff is memory/scan time at 100 TB, so exact is the small-corpus /
   perfect-recall choice.
-- IVF (``ivf_build_index``/``AnnIndexServer``): measured recall@10 =
+- IVF (``ivf_build_index``/``ivf_probe_index``): measured recall@10 =
   0.83/0.87/0.87 at n_probe 1/2/4 on the near-uniform fixture
   (``v_ivf_recall_sweep``), ≥ 0.85 gates on clustered 768-dim; serve
   11.5-21.7 ms/query batched (64/768-dim). Build is the cheapest
@@ -31,7 +33,7 @@ dims and attached to every returned choice via ``profile_for``):
 - IVF-PQ (``v_ivf_pq_knn``): PQ codes are m bytes/vector vs 4·dim raw
   (m=8 subquantizers default) — the memory-constrained variant; ADC
   re-rank keeps ranking exact within probed buckets.
-- GRAPH (``knn_graph_build``/``GraphIndexServer``): serve recall ≥ 0.9
+- GRAPH (``graph_lifecycle.GraphMaintainer``): serve recall ≥ 0.9
   pinned on clustered data (beam search, LSH entries), 27.9-49.8
   ms/query batched (64/768-dim); the ONLY family with certified
   incremental INSERT and DELETE (``knn_graph_insert``/``_delete``,
@@ -190,7 +192,7 @@ def choose_index(
         return IndexChoice(
             family="exact",
             builder="operators.knn.knn",
-            serving="operators.knn.knn (one batched scan per probe batch)",
+            serving="index_select.ExactIndex (one knn scan per probe batch)",
             params={"k": 10},
             why=(
                 f"n={n_vectors} <= {EXACT_MAX_N} and recall_target="
@@ -205,7 +207,7 @@ def choose_index(
         return IndexChoice(
             family="graph",
             builder="operators.ann.knn_graph_build",
-            serving="streaming.serving.GraphIndexServer",
+            serving="graph_lifecycle.GraphMaintainer (LSH-entry beam search)",
             params=_graph_params(n_vectors),
             why=(
                 "mutable corpus: the k-NN graph is the only family with "
@@ -239,7 +241,7 @@ def choose_index(
             return IndexChoice(
                 family="ivf_pq",
                 builder="operators.ann.ivf_pq (v_ivf_pq_knn form)",
-                serving="streaming.serving.AnnIndexServer (PQ codes)",
+                serving="operators.ann.pq_adc_serve (ADC over PQ codes)",
                 params={**_ivf_params(n_vectors, recall_target), "m": PQ_M},
                 why=(
                     f"raw vectors {raw_bytes/1e9:.1f} GB exceed the "
@@ -269,7 +271,7 @@ def choose_index(
         return IndexChoice(
             family="graph",
             builder="operators.ann.knn_graph_build",
-            serving="streaming.serving.GraphIndexServer",
+            serving="graph_lifecycle.GraphMaintainer (LSH-entry beam search)",
             params=_graph_params(n_vectors),
             why=(
                 f"recall_target {recall_target} above the measured IVF "
@@ -282,7 +284,7 @@ def choose_index(
     return IndexChoice(
         family="ivf",
         builder="operators.ann.ivf_build_index",
-        serving="streaming.serving.AnnIndexServer",
+        serving="operators.ann.ivf_probe_index (partition-pruned scan)",
         params=_ivf_params(n_vectors, recall_target),
         why=(
             f"static corpus, recall_target {recall_target} within the "
@@ -294,33 +296,77 @@ def choose_index(
     )
 
 
-class ServingIndex:
-    """The ONE serve surface per family (VERDICT r11 #4): a built index
-    of any of the five families answers probe batches through
-    ``serve(probes)`` with the uniform ``(probe_id, vec_id, score)``
-    contract, so recall gates and callers hit a single code path no
-    matter which family the chooser picked. Construct via
-    :func:`build_choice`; ``close()`` reclaims an adhoc scratch index
-    (no-op otherwise). ``handle`` exposes the family-specific engine
-    (AnnIndexServer / GraphIndexServer / the PQ index relation) for
-    callers that need family internals."""
 
-    def __init__(self, family, serve_fn, close_fn=None, handle=None):
+
+class ExactIndex:
+    """The exact family's engine: one brute-force scan of the CURRENT
+    corpus per probe batch (``operators.knn.knn``). Mutation is corpus
+    maintenance (union on insert, anti-join on delete, checkpointed per
+    step), so the same engine serves a static corpus and a mutable one.
+    In memory only: durability belongs to the graph family, whose
+    maintainer commits through ``operators.index_log``."""
+
+    family = "exact"
+
+    def __init__(self, corpus) -> None:
+        self.corpus = corpus.select("vec_id", "embedding").localCheckpoint(
+            eager=True
+        )
+        self._n0 = self.corpus.count()
+        self._churned = 0
+
+    def serve(self, probes, k: int):
+        from .knn import knn
+
+        return knn(self.corpus, probes, k=k).select(
+            "probe_id", "vec_id", "score"
+        )
+
+    def insert(self, new_rows) -> None:
+        rows = new_rows.select("vec_id", "embedding")
+        self._churned += rows.count()
+        self._replace(self.corpus.unionByName(rows))
+
+    def delete(self, del_ids) -> None:
+        ids = del_ids.select("vec_id")
+        self._churned += ids.count()
+        self._replace(self.corpus.join(ids, "vec_id", "left_anti"))
+
+    def _replace(self, corpus) -> None:
+        self.corpus = corpus.coalesce(32).localCheckpoint(eager=True)
+
+    def compact(self) -> None:
+        """Nothing to compact: a scan has no index to decay."""
+
+    def maybe_compact(self) -> bool:
+        return False
+
+    def close(self) -> None:
+        """Nothing to reclaim: the corpus lives in executor memory."""
+
+    @property
+    def churn_frac(self) -> float:
+        return self._churned / max(self._n0, 1)
+
+
+class ServingIndex:
+    """A static engine made of closures, for the ivf, ivf_pq and hamming
+    families: ``serve(probes, k)`` answers one probe batch in one plan
+    with (probe_id, vec_id, score), higher score = better; ``close()``
+    reclaims an adhoc scratch index. Construct via :func:`build_choice`.
+
+    When the index is adhoc scratch (a ``close_fn`` is registered, e.g.
+    the ivf family's pid-scratch parquet), each answer is eagerly
+    localCheckpoint'ed, so collecting it AFTER ``close()`` cannot hit
+    file-not-found on the reclaimed index files (ADVICE r12)."""
+
+    def __init__(self, family, serve_fn, close_fn=None):
         self.family = family
         self._serve_fn = serve_fn
         self._close_fn = close_fn
-        self.handle = handle
 
-    def serve(self, probes):
-        """Answer one probe batch in one plan: (probe_id, vec_id, score),
-        higher score = better, top-k per probe at the k fixed at build.
-
-        When the index is adhoc scratch (a ``close_fn`` is registered,
-        e.g. the ivf family's pid-scratch parquet), the result is
-        eagerly localCheckpoint'ed so collecting it AFTER ``close()``
-        cannot hit file-not-found on the reclaimed index files — the
-        same guard ``execute_choice`` applies (ADVICE r12)."""
-        res = self._serve_fn(probes)
+    def serve(self, probes, k: int):
+        res = self._serve_fn(probes, k)
         if self._close_fn is not None:
             res = res.localCheckpoint(eager=True)
         return res
@@ -334,46 +380,61 @@ class ServingIndex:
 def build_choice(
     choice: IndexChoice,
     corpus,
-    k: int = 10,
     dim: int | None = None,
     index_path: str | None = None,
-) -> ServingIndex:
-    """Build the index an :class:`IndexChoice` names and return the
-    shared :class:`ServingIndex` surface over it.
+):
+    """Build the engine an :class:`IndexChoice` names over ``corpus``.
+    Every engine answers ``serve(probes, k)`` with per-probe top-k
+    ``(probe_id, vec_id, score)`` rows; ``k`` is a serve-time argument
+    because every kernel takes it per call. One engine per family:
 
-    All FIVE families dispatch (round 11, VERDICT r10 next #5): ivf_pq
-    and hamming run through the plumbing factored out of their
-    certified registry rows (``operators.ann.pq_adc_serve`` /
-    ``hamming_sig_knn``). The ivf_pq path collects each probe batch to
-    build the per-probe ADC lookup tables — the standard faiss
-    query-time table build over the same bounded O(100)-probe batch
-    contract every serve surface here uses. The hamming score is the
-    NEGATED distance cast to double so "higher is better" holds across
-    families. ``dim`` is required for families that hash (graph);
-    ``index_path`` for families that persist (ivf) — defaults to a
-    pid-scratch dir reclaimed by ``close()``."""
+    - exact: :class:`ExactIndex` (static or mutable);
+    - ivf: one ``ivf_build_index`` over the first ``n_centroids``
+      vectors (checkpointed once), served by ``ivf_probe_index``;
+    - graph: :class:`.graph_lifecycle.GraphMaintainer` (static or
+      mutable), durable when ``index_path`` is given (its state dir,
+      reopened by ``GraphMaintainer.recover``);
+    - ivf_pq / hamming: :class:`ServingIndex` closures over the plumbing
+      factored out of their certified registry rows
+      (``operators.ann.pq_adc_serve`` / ``hamming_sig_knn``). The ivf_pq
+      path collects each probe batch to build the per-probe ADC lookup
+      tables, the standard faiss query-time table build over a bounded
+      probe batch. The hamming score is the NEGATED distance cast to
+      double, so "higher is better" holds across families.
+
+    Size-dependent params are capped against the corpus actually built,
+    not the size the choice was profiled at (one count): the ivf
+    centroid count keeps buckets at >= ~16 vectors, and the graph band
+    width is at most ``auto_band_bits(n)`` (wider keys leave ~1-row
+    buckets and the LSH entries find nothing); graph params the choice
+    leaves out default to ``_graph_params(n)``. ``dim`` is required for
+    the graph family; ``index_path`` defaults, for ivf, to a pid-scratch
+    dir reclaimed by ``close()``."""
     from pyspark.sql import functions as F
 
+    p = choice.params
     if choice.family == "exact":
-        from .knn import knn
+        return ExactIndex(corpus)
+    if choice.family == "graph":
+        from .graph_lifecycle import GraphMaintainer
 
-        return ServingIndex(
-            "exact",
-            lambda probes: knn(corpus, probes, k=k).select(
-                "probe_id", "vec_id", "score"
-            ),
+        if dim is None:
+            raise ValueError("build_choice(family='graph') requires dim=")
+        auto = _graph_params(corpus.count())
+        p = {**auto, **p}
+        if p["band_bits"] > auto["band_bits"]:
+            p.update(band_bits=auto["band_bits"], n_planes=auto["n_planes"])
+        return GraphMaintainer(
+            corpus, dim=dim, k=p["k"], n_planes=p["n_planes"],
+            band_bits=p["band_bits"], build_rounds=p["rounds"],
+            state_dir=index_path,
         )
     if choice.family == "ivf":
-        from ..streaming.serving import AnnIndexServer
         from ..utils import pid_scratch
+        from .ann import ivf_assign, ivf_build_index, ivf_probe_index
 
-        # cap the stated sqrt-rule centroid count against the ACTUAL
-        # corpus (a choice computed for a 10^7-row profile executed on a
-        # small corpus would otherwise make every vector its own bucket
-        # and serving degenerate); keep expected bucket size >= ~16
         n_centroids = max(
-            8,
-            min(choice.params.get("n_centroids", 16), corpus.count() // 16),
+            8, min(p.get("n_centroids", 16), corpus.count() // 16)
         )
         # deterministic first-n centroid convention (the certified
         # v_ivf_knn form; swap in ann_mllib.kmeans_centroids for
@@ -385,12 +446,13 @@ def build_choice(
                 F.col("vec_id").alias("centroid_id"),
                 F.col("embedding").alias("centroid_vec"),
             )
+            .localCheckpoint(eager=True)
         )
         path = index_path or pid_scratch("choice_ivf", "adhoc")
-        server = AnnIndexServer.build(
-            corpus, cents, path, k=k,
-            n_probe=choice.params.get("n_probe", 4),
+        ivf_build_index(
+            corpus, cents, path, assigned=ivf_assign(corpus, cents)
         )
+        spark, n_probe = corpus.sparkSession, p.get("n_probe", 4)
         close_fn = None
         if index_path is None:
             # adhoc scratch index: ``close()`` reclaims it instead of
@@ -401,27 +463,10 @@ def build_choice(
             close_fn = lambda: shutil.rmtree(path, ignore_errors=True)  # noqa: E731
         return ServingIndex(
             "ivf",
-            lambda probes: server.serve_batch(probes).select(
-                "probe_id", "vec_id", "score"
-            ),
+            lambda probes, k: ivf_probe_index(
+                spark, path, cents, probes, k=k, n_probe=n_probe
+            ).select("probe_id", "vec_id", "score"),
             close_fn=close_fn,
-            handle=server,
-        )
-    if choice.family == "graph":
-        from ..streaming.serving import GraphIndexServer
-
-        if dim is None:
-            raise ValueError("build_choice(family='graph') requires dim=")
-        server = GraphIndexServer.build(
-            corpus, dim=dim, graph_k=choice.params.get("k", 6),
-            rounds=choice.params.get("rounds", 2), k=k,
-        )
-        return ServingIndex(
-            "graph",
-            lambda probes: server.serve_batch(probes).select(
-                "probe_id", "vec_id", "score"
-            ),
-            handle=server,
         )
     if choice.family == "ivf_pq":
         from ..utils import fan_out
@@ -448,49 +493,27 @@ def build_choice(
             fan_out(emb), codebook, aux, corpus_vec="e"
         ).localCheckpoint(eager=True)
 
-        def _serve_pq(probes):
+        def _serve_pq(probes, k):
             batch = [
                 (r["probe_id"], [float(x) for x in r["probe_vec"]])
                 for r in probes.collect()
             ]
             return pq_adc_serve(
                 index, aux, codebook, batch, k=k,
-                n_probe=min(choice.params.get("n_probe", 4), len(aux)),
+                n_probe=min(p.get("n_probe", 4), len(aux)),
                 n_sub=n_sub, score_col="score",
             ).select("probe_id", "vec_id", "score")
 
-        return ServingIndex("ivf_pq", _serve_pq, handle=index)
+        return ServingIndex("ivf_pq", _serve_pq)
     if choice.family == "hamming":
         from .ann import hamming_sig_knn
 
         return ServingIndex(
             "hamming",
-            lambda probes: hamming_sig_knn(corpus, probes, k=k).select(
+            lambda probes, k: hamming_sig_knn(corpus, probes, k=k).select(
                 "probe_id",
                 "vec_id",
                 (-F.col("hamming")).cast("double").alias("score"),
             ),
         )
     raise ValueError(f"unknown index family {choice.family!r}")
-
-
-def execute_choice(
-    choice: IndexChoice,
-    corpus,
-    probes,
-    k: int = 10,
-    dim: int | None = None,
-    index_path: str | None = None,
-):
-    """One-shot build + serve (VERDICT r9 next #5), now a thin delegate
-    over :func:`build_choice` + :meth:`ServingIndex.serve` — the single
-    per-family serve path. Adhoc scratch indexes are reclaimed after the
-    answers materialize."""
-    idx = build_choice(
-        choice, corpus, k=k, dim=dim, index_path=index_path
-    )
-    served = idx.serve(probes)
-    if idx._close_fn is not None:
-        served = served.localCheckpoint(eager=True)
-        idx.close()
-    return served

@@ -1,14 +1,15 @@
-"""VectorIndexService — the ONE composed entry point over the certified
+"""VectorIndexService — the ONE serve entry over the certified
 vector-index parts (VERDICT r11 #8): profile → choose → build → serve →
 mutate → compact → recover, one object.
 
-The repo ships every piece individually certified — the measured
-decision table (:func:`index_select.choose_index`), the per-family
-build+serve surface (:func:`index_select.build_choice` /
-:class:`index_select.ServingIndex`), the durable mutable-graph
-lifecycle (:class:`graph_lifecycle.GraphMaintainer` over
-:class:`graph_delta.GraphDeltaLog`). This module is the composition a
-real user adopts:
+Behind it sit the measured decision table (:func:`index_select.choose_index`)
+and exactly one engine per family, built by
+:func:`index_select.build_choice`: :class:`index_select.ExactIndex`,
+:class:`graph_lifecycle.GraphMaintainer` (durable through
+:mod:`.index_log` when given a state dir), and
+:class:`index_select.ServingIndex` closures for ivf / ivf_pq / hamming.
+Every engine answers ``serve(probes, k)``. This module is the
+composition a real user adopts:
 
 >>> svc = VectorIndexService.open(corpus, dim=64, recall_target=0.9)
 >>> answers = svc.serve(probes)            # (probe_id, vec_id, score)
@@ -16,9 +17,8 @@ real user adopts:
 
 Mutable deployments (the reference's accreting ``condition_vec``
 catalog, ``nl_targeting_save.py:139-146``) get the durable graph
-lifecycle — inserts/deletes commit through the LSM delta log, churn
-triggers compaction, and a crashed process reopens exactly where it
-stopped:
+lifecycle — inserts/deletes commit as index-log deltas, churn triggers
+compaction, and a crashed process reopens exactly where it stopped:
 
 >>> svc = VectorIndexService.open(corpus, dim=64, mutable=True,
 ...                               state_dir="/idx/catalog")
@@ -38,77 +38,28 @@ facade delegates to the exact surfaces the registry rows certify.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 
-from .index_select import (
-    IndexChoice,
-    ServingIndex,
-    _graph_params as _graph_defaults,
-    build_choice,
-    choose_index,
-)
-
-
-class _MutableExact:
-    """Mutable engine for the chooser's small-corpus EXACT pick: serving
-    is one brute-force scan of the CURRENT corpus, so mutation is just
-    corpus maintenance (union / anti-join, checkpointed per step). In-
-    memory only — durability needs the graph family's delta log, which
-    :meth:`VectorIndexService.open` routes to whenever ``state_dir`` is
-    passed."""
-
-    def __init__(self, corpus: DataFrame, k: int) -> None:
-        self.corpus = corpus.select("vec_id", "embedding").localCheckpoint(
-            eager=True
-        )
-        self.k = k
-        self._n0 = self.corpus.count()
-        self._churned = 0
-
-    def serve(self, probes: DataFrame) -> DataFrame:
-        from .knn import knn
-
-        return knn(self.corpus, probes, k=self.k).select(
-            "probe_id", "vec_id", "score"
-        )
-
-    def insert(self, new_rows: DataFrame) -> None:
-        rows = new_rows.select("vec_id", "embedding")
-        self._churned += rows.count()
-        self.corpus = (
-            self.corpus.unionByName(rows)
-            .coalesce(32)
-            .localCheckpoint(eager=True)
-        )
-
-    def delete(self, del_ids: DataFrame) -> None:
-        ids = del_ids.select("vec_id")
-        self._churned += ids.count()
-        self.corpus = (
-            self.corpus.join(ids, "vec_id", "left_anti")
-            .coalesce(32)
-            .localCheckpoint(eager=True)
-        )
-
-    @property
-    def churn_frac(self) -> float:
-        return self._churned / max(self._n0, 1)
+from .index_select import IndexChoice, build_choice, choose_index
 
 
 class VectorIndexService:
-    """Facade over (chooser, builder, server, maintainer). Construct via
-    :meth:`open` or :meth:`recover`, never directly."""
+    """Facade over (chooser, engine). Construct via :meth:`open` or
+    :meth:`recover`, never directly."""
 
     def __init__(
-        self, choice: IndexChoice, engine, k: int, family: str | None = None
+        self, choice: IndexChoice, engine, k: int, mutable: bool
     ) -> None:
+        # choice keeps the chooser's full reasoning for transparency;
+        # family is the ENGINE's (durability or pinned graph params can
+        # route away from the chooser's pick)
         self.choice = choice
-        # the ENGINE family actually serving (may differ from the
-        # chooser's pick when durability forces the graph family —
-        # choice keeps the chooser's full reasoning for transparency)
-        self.family = family or choice.family
-        self._engine = engine  # ServingIndex | GraphMaintainer | _MutableExact
+        self.family = engine.family
+        self._engine = engine
         self.k = k
+        self.mutable = mutable
 
     # -- lifecycle ------------------------------------------------------
     @classmethod
@@ -126,86 +77,60 @@ class VectorIndexService:
         graph_params: dict | None = None,
     ) -> "VectorIndexService":
         """Profile the corpus, choose the family from the measured
-        decision table, build the index, return the serving service.
+        decision table, build its engine, return the serving service.
 
-        ``mutable=True`` routes to the graph family's durable
-        :class:`GraphMaintainer` (pass ``state_dir`` to make churn
-        survive restarts via :meth:`recover`); static corpora get the
-        chosen family through the shared :class:`ServingIndex` surface
-        (``index_path`` persists the IVF index; otherwise adhoc scratch
-        reclaimed by :meth:`close`). ``graph_params`` pins the graph
-        family's build knobs (k/n_planes/band_bits/rounds) instead of
-        the chooser's data-derived defaults — deployments that must
-        reproduce a specific banding (or an oracle replay) pass it; the
-        pinned values are durably recorded in the maintainer's marker
-        like any other config."""
+        The chooser's pick is built as is, with two routes to the graph
+        family: ``mutable=True`` with a ``state_dir`` (the only family
+        with certified durable insert AND delete; :meth:`recover`
+        reopens it), and ``graph_params``, which pins the graph build
+        knobs (k/n_planes/band_bits/rounds) instead of the data-derived
+        defaults — deployments that must reproduce a specific banding
+        (or an oracle replay) pass it; the maintainer records the pinned
+        values in its marker like any other config. A small mutable
+        corpus without ``state_dir`` keeps the chooser's in-memory exact
+        pick. ``index_path`` persists the ivf index (otherwise adhoc
+        scratch reclaimed by :meth:`close`). Only a service opened
+        ``mutable`` accepts insert/delete/compact."""
         n = corpus.count()
         choice = choose_index(
             n, dim, recall_target=recall_target, qps_shape=qps_shape,
             mutable=mutable, memory_budget_bytes=memory_budget_bytes,
         )
-        if mutable:
-            # The chooser can still pick EXACT for a small corpus even
-            # when mutable (precedence 1: no index beats one scan — and
-            # a scan of the CURRENT corpus is trivially mutable). That
-            # in-memory form cannot be durable, so a caller passing
-            # state_dir is asking for the graph family's delta-log
-            # durability regardless of corpus size.
-            if choice.family == "exact" and state_dir is None:
-                return cls(choice, _MutableExact(corpus, k), k)
-            # graph: the only family with certified durable insert AND
-            # delete (chooser precedence 2)
-            from .graph_lifecycle import GraphMaintainer
-
-            params = graph_params or (
-                choice.params if choice.family == "graph"
-                else _graph_defaults(n)
-            )
-            eng = GraphMaintainer(
-                corpus, dim=dim,
-                k=params.get("k", 6),
-                band_bits=params.get("band_bits", 6),
-                n_planes=params.get("n_planes", 24),
-                build_rounds=params.get("rounds", 2),
-                state_dir=state_dir,
-            )
-            return cls(choice, eng, k, family="graph")
-        return cls(
-            choice,
-            build_choice(choice, corpus, k=k, dim=dim, index_path=index_path),
-            k,
+        build = choice
+        if graph_params or (mutable and state_dir is not None):
+            # unpinned params default to _graph_params(n) in build_choice
+            build = replace(choice, family="graph", params=graph_params or {})
+        engine = build_choice(
+            build, corpus, dim=dim,
+            index_path=state_dir if build.family == "graph" else index_path,
         )
+        return cls(choice, engine, k, mutable)
 
     @classmethod
     def recover(
         cls, spark: SparkSession, state_dir: str, k: int = 10
     ) -> "VectorIndexService":
         """Reopen a durable mutable service exactly where it stopped:
-        folds the delta log's (base, deltas) and replays the mutation
-        log (GraphMaintainer.recover's certified restart contract)."""
+        folds the index log's (base, deltas) and replays the corpus
+        mutations (GraphMaintainer.recover's certified restart
+        contract)."""
         from .graph_lifecycle import GraphMaintainer
 
         eng = GraphMaintainer.recover(spark, state_dir)
-        choice = choose_index(
-            eng.corpus.count(), eng.dim, mutable=True
-        )
-        return cls(choice, eng, k, family="graph")
+        choice = choose_index(eng._n, eng.dim, mutable=True)
+        return cls(choice, eng, k, mutable=True)
 
     # -- serve ----------------------------------------------------------
     def serve(self, probes: DataFrame) -> DataFrame:
         """Answer one probe batch in one plan: (probe_id, vec_id, score),
         top-k per probe — the uniform contract across families."""
-        from .graph_lifecycle import GraphMaintainer
-
-        if isinstance(self._engine, GraphMaintainer):
-            return self._engine.serve(probes, k=self.k).select(
-                "probe_id", "vec_id", "score"
-            )
-        return self._engine.serve(probes)
+        return self._engine.serve(probes, self.k).select(
+            "probe_id", "vec_id", "score"
+        )
 
     # -- mutation (mutable services only) -------------------------------
     def _mutable(self):
-        if isinstance(self._engine, ServingIndex):
+        if not self.mutable:
             raise ValueError(
                 f"index family {self.family!r} is static — open the "
                 "service with mutable=True for insert/delete/compact"
@@ -217,24 +142,20 @@ class VectorIndexService:
         cumulative churn crosses the maintainer's policy."""
         m = self._mutable()
         m.insert(new_rows)
-        if hasattr(m, "maybe_compact"):
-            m.maybe_compact()
+        m.maybe_compact()
 
     def delete(self, del_ids: DataFrame) -> None:
         """Incremental delete (banded neighbor repair on the graph
         family); same auto-compaction policy."""
         m = self._mutable()
         m.delete(del_ids)
-        if hasattr(m, "maybe_compact"):
-            m.maybe_compact()
+        m.maybe_compact()
 
     def compact(self) -> None:
         """Force a compaction (full rebuild on survivors + fresh base
-        snapshot in the delta log). No-op for the mutable-exact engine —
-        a corpus scan has nothing to compact."""
-        m = self._mutable()
-        if hasattr(m, "compact"):
-            m.compact()
+        snapshot in the index log). No-op for the exact engine — a
+        corpus scan has nothing to compact."""
+        self._mutable().compact()
 
     @property
     def churn_frac(self) -> float:
@@ -242,7 +163,6 @@ class VectorIndexService:
 
     # -- teardown -------------------------------------------------------
     def close(self) -> None:
-        """Reclaim adhoc scratch (static ServingIndex only; durable
-        maintainer state is the product — never deleted here)."""
-        if isinstance(self._engine, ServingIndex):
-            self._engine.close()
+        """Reclaim adhoc scratch (the ivf family's pid-scratch index;
+        durable maintainer state is the product — never deleted here)."""
+        self._engine.close()

@@ -2548,7 +2548,7 @@ def v_ivf_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_ids = [i for i in sorted(aux) if i < 3]
     # serving factored into operators.ann.pq_adc_serve (round 11,
     # VERDICT #5) — identical per-probe literal-table / bucket-predicate
-    # / windowed top-k plan, now shared with index_select.execute_choice
+    # / windowed top-k plan, now shared with index_select.build_choice
     return pq_adc_serve(
         index, aux, codebook, [(p, aux[p]) for p in probe_ids],
         k=10, n_probe=4, n_sub=4, score_col="adc_score",
@@ -4016,7 +4016,7 @@ def v_knn_graph_serve_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     25 clusters pinned in tests/test_ann.py, vs 0.70 with lowest-id
     entries). The oracle replays the probe-side banding with identical
     plane literals, so entry sets, beam rounds, and the final top-10 are
-    value-exact. This is the entry mode ``GraphIndexServer.serve_batch``
+    value-exact. This is the entry mode ``GraphMaintainer.serve``
     ships."""
     from ..operators.ann import knn_graph_build, knn_graph_serve
 
@@ -4888,7 +4888,7 @@ def v_hamming_binary_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # packing/ranking factored into operators.ann.hamming_sig_knn
     # (round 11, VERDICT #5) — identical ordered sign-fold + xor/popcount
-    # plan, now shared with index_select.execute_choice
+    # plan, now shared with index_select.build_choice
     return hamming_sig_knn(emb, probes, k=10)
 
 
@@ -9687,7 +9687,7 @@ def s_graph_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming graph-ANN serving: a REAL availableNow run drains the
     probe stream through ``foreachBatch``, each micro-batch answered by
     the LSH-entry beam search over the ONCE-built static k-NN graph
-    (``run_streaming_graph_serve_availablenow`` — the GraphIndexServer
+    (``run_streaming_graph_serve_availablenow`` — the GraphMaintainer
     form). Served answers are certified against the same full-chain
     value oracle as the batch row ``v_knn_graph_serve_lsh``: per-probe
     beam walks are batching-invariant, so however the file source splits

@@ -35,72 +35,6 @@ _INGEST_INVOCATION = 0
 LAST_INGEST_STATS: dict = {}
 
 
-class AnnIndexServer:
-    """Batched ANN serving against a persisted partition-pruned IVF index
-    — the STABLE serving surface for the measured Spark-native form.
-
-    Single-probe queries on Spark pay a ~0.5-1 s planning/scheduling
-    floor regardless of index quality (measured,
-    ``tools/serve_latency.py``); batching probes into ONE plan amortizes
-    it to ~11.5 ms/query at 100 probes. So the API accepts probe BATCHES
-    only: ``serve_batch(probes_df)`` answers every probe in the batch in
-    a single DataFrame plan — no per-probe jobs, no driver loop — which
-    is also exactly what the per-micro-batch streaming serve
-    (``run_streaming_knn_availablenow`` / ``s_streaming_knn_serve``)
-    executes per trigger. Centroids are pinned once at construction
-    (localCheckpoint) so repeated batches re-broadcast a tiny
-    materialized relation instead of re-deriving it; the index scan
-    prunes to the probed buckets via the ``centroid_id`` partition
-    column. At 100 TB this object is the long-lived serving session over
-    the once-per-corpus index build."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        index_path: str,
-        centroids: DataFrame,
-        k: int = 10,
-        n_probe: int = 4,
-    ) -> None:
-        self.spark = spark
-        self.index_path = index_path
-        self.centroids = centroids.localCheckpoint(eager=True)
-        self.k = k
-        self.n_probe = n_probe
-
-    @classmethod
-    def build(
-        cls,
-        corpus: DataFrame,
-        centroids: DataFrame,
-        index_path: str,
-        k: int = 10,
-        n_probe: int = 4,
-    ) -> "AnnIndexServer":
-        """Once-per-corpus batch job: assign + write the centroid-
-        partitioned index, then return the serving session over it."""
-        from ..operators.ann import ivf_assign, ivf_build_index
-
-        ivf_build_index(
-            corpus, centroids, index_path,
-            assigned=ivf_assign(corpus, centroids),
-        )
-        return cls(corpus.sparkSession, index_path, centroids, k, n_probe)
-
-    def serve_batch(self, probes: DataFrame) -> DataFrame:
-        """Answer a batch of (probe_id, probe_vec) rows in ONE plan:
-        returns (probe_id, vec_id, score) top-k per probe. Cost is one
-        pruned index scan + broadcast joins for the whole batch —
-        per-query latency falls linearly with batch size until scan work
-        dominates."""
-        from ..operators.ann import ivf_probe_index
-
-        return ivf_probe_index(
-            self.spark, self.index_path, self.centroids, probes,
-            k=self.k, n_probe=self.n_probe,
-        )
-
-
 def stream_vectors(spark: SparkSession, path_glob: str) -> DataFrame:
     """File-source stream over embeddings parquet (bounded drain with
     Trigger.availableNow in tests)."""
@@ -151,140 +85,6 @@ def run_streaming_knn_availablenow(
     return spark.createDataFrame(
         served, "probe_id long, vec_id long, score double"
     )
-
-
-class GraphIndexServer:
-    """Batched graph-ANN serving over a prebuilt k-NN graph — the
-    HNSW-class twin of :class:`AnnIndexServer` (round 8, the serve half
-    of ``operators.ann.knn_graph_build``). Same contract: probe BATCHES
-    only (single-probe queries pay Spark's ~0.5-1 s scheduling floor),
-    one DataFrame plan per batch via ``knn_graph_serve``'s iterative
-    beam search. The adjacency and corpus vectors are pinned once at
-    construction (localCheckpoint) so repeated batches re-broadcast
-    materialized relations; measured 27.9 ms/query at 100 probes
-    (tools/serve_latency.py, graph_batched)."""
-
-    def __init__(
-        self,
-        graph: DataFrame,
-        corpus: DataFrame,
-        k: int = 10,
-        beam: int = 8,
-        rounds: int = 2,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        dim: int | None = None,
-        seed: int = 42,
-        n_planes: int | None = None,
-        band_bits: int | None = None,
-        corpus_bands: DataFrame | None = None,
-    ) -> None:
-        self.graph = graph.localCheckpoint(eager=True)
-        self.corpus = corpus.select(id_col, vec_col).localCheckpoint(
-            eager=True
-        )
-        self.k = k
-        self.beam = beam
-        self.rounds = rounds
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.dim = dim
-        self.seed = seed
-        # one corpus signature pass at construction — the LSH entry mode
-        # would otherwise re-hash the whole corpus (interpreted 24-dot
-        # JVM signature, ~ms/row) on EVERY batch. The banding config is
-        # resolved ONCE here and the SAME values feed both the persisted
-        # band table and every serve call (ADVICE r8 high: letting
-        # serve_batch re-derive band_bits from an auto corpus count made
-        # probe and corpus hash under different configs at any corpus
-        # size where auto != the table's default — entry join empty).
-        # r14: callers that already hashed the corpus (knn_graph_build's
-        # return_bands) pass ``corpus_bands`` — value-identical banding,
-        # zero extra passes; ``band_bits``/``n_planes`` must then match
-        # the table's config (the standing corpus_bands contract).
-        if dim is not None:
-            from ..operators.ann import auto_band_bits, corpus_band_keys
-
-            if corpus_bands is not None and (
-                band_bits is None or n_planes is None
-            ):
-                raise ValueError(
-                    "GraphIndexServer: corpus_bands requires explicit "
-                    "n_planes and band_bits matching the table's banding"
-                )
-            if band_bits is None:
-                band_bits = auto_band_bits(corpus.count())
-            if n_planes is None:
-                n_planes = band_bits * 4
-            self.band_bits = band_bits
-            self.n_planes = n_planes
-            self.corpus_bands = (
-                corpus_bands
-                if corpus_bands is not None
-                else corpus_band_keys(
-                    corpus, n_planes=n_planes, band_bits=band_bits,
-                    seed=seed, dim=dim, id_col=id_col, vec_col=vec_col,
-                )
-            ).localCheckpoint(eager=True)
-        else:
-            self.band_bits = band_bits
-            self.n_planes = n_planes
-            self.corpus_bands = None
-
-    @classmethod
-    def build(
-        cls,
-        corpus: DataFrame,
-        dim: int,
-        graph_k: int = 6,
-        rounds: int = 2,
-        seed: int = 42,
-        k: int = 10,
-        beam: int = 8,
-        serve_rounds: int = 2,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> "GraphIndexServer":
-        """Once-per-corpus batch job: build the k-NN graph (AUTO
-        band_bits — bucket sizes hold at any corpus scale) and return
-        the serving session over it. The auto banding is resolved HERE
-        (one count job) and the identical config is pinned through the
-        build, the persisted band table, and every serve batch."""
-        from ..operators.ann import auto_band_bits, knn_graph_build
-
-        band_bits = auto_band_bits(corpus.count())
-        n_planes = band_bits * 4
-        # r14: the build's band table seeds the server — one corpus
-        # signature pass for build + every serve batch combined
-        graph, bands = knn_graph_build(
-            corpus, k=graph_k, n_planes=n_planes, band_bits=band_bits,
-            rounds=rounds, seed=seed, dim=dim,
-            id_col=id_col, vec_col=vec_col, return_bands=True,
-        )
-        return cls(
-            graph, corpus, k=k, beam=beam, rounds=serve_rounds,
-            id_col=id_col, vec_col=vec_col, dim=dim, seed=seed,
-            n_planes=n_planes, band_bits=band_bits, corpus_bands=bands,
-        )
-
-    def serve_batch(self, probes: DataFrame) -> DataFrame:
-        """Answer a batch of (probe_id, probe_vec) rows in ONE plan:
-        (probe_id, vec_id, rank, score) top-k per probe via batched beam
-        search — the graph never shuffles (frontier broadcast-joins it)."""
-        from ..operators.ann import knn_graph_serve
-
-        # LSH-seeded entries when the build dim is known (the clustered-
-        # corpus fix — see knn_graph_serve's entry-mode contract);
-        # lowest-id entries otherwise.
-        return knn_graph_serve(
-            self.graph, self.corpus, probes,
-            k=self.k, beam=self.beam, rounds=self.rounds,
-            entries="lsh" if self.dim is not None else None,
-            id_col=self.id_col, vec_col=self.vec_col,
-            dim=self.dim, seed=self.seed,
-            n_planes=self.n_planes, band_bits=self.band_bits,
-            corpus_bands=self.corpus_bands,
-        )
 
 
 class DurableGraphIngest:
@@ -656,7 +456,7 @@ def run_streaming_graph_serve_availablenow(
     band_bits: int = 6,
     dim: int | None = None,
 ) -> DataFrame:
-    """Streaming GRAPH-ANN serving (the GraphIndexServer twin of
+    """Streaming GRAPH-ANN serving (the graph twin of
     ``run_streaming_knn_availablenow``): the k-NN graph is built ONCE
     (static index), then probe files drain through the streaming engine
     and each micro-batch runs ``knn_graph_serve`` with LSH-seeded
@@ -665,28 +465,18 @@ def run_streaming_graph_serve_availablenow(
     probe, the static graph, and the static corpus — so the union over
     micro-batches is certified against the one-batch serve oracle.
 
-    Round 12 (VERDICT r11 #4): the per-batch serve goes through
-    :class:`GraphIndexServer` — the ONE graph serve path — instead of
-    assembling ``knn_graph_serve`` params locally; the server also pins
-    ``corpus_band_keys`` once at construction, where the old inline call
-    re-hashed the whole corpus for LSH entries on EVERY micro-batch."""
+    The per-batch serve goes through
+    ``operators.graph_lifecycle.GraphMaintainer`` — the ONE graph engine
+    — whose build band table doubles as the LSH entry table, so the
+    corpus is hashed once, never per micro-batch."""
     from ..config import EMB_DIM
-    from ..operators.ann import knn_graph_build
+    from ..operators.graph_lifecycle import GraphMaintainer
     from ..sources.catalog import load_table
 
     dim = EMB_DIM if dim is None else dim
-    corpus = load_table(spark, sf_dir, "embeddings").localCheckpoint(
-        eager=True
-    )
-    # r14: the server's LSH entry table reuses the build's band table
-    # (one corpus signature pass total, value-identical banding)
-    graph, bands = knn_graph_build(
-        corpus, k=6, n_planes=n_planes, band_bits=band_bits, rounds=2,
-        seed=42, dim=dim, return_bands=True,
-    )
-    server = GraphIndexServer(
-        graph, corpus, k=k, beam=beam, rounds=rounds, dim=dim, seed=42,
-        n_planes=n_planes, band_bits=band_bits, corpus_bands=bands,
+    index = GraphMaintainer(
+        load_table(spark, sf_dir, "embeddings"), dim=dim, k=6,
+        n_planes=n_planes, band_bits=band_bits, seed=42, build_rounds=2,
     )
     probes = (
         stream_vectors(spark, f"{sf_dir}/embeddings*.parquet")
@@ -701,7 +491,9 @@ def run_streaming_graph_serve_availablenow(
     def _serve(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        served.extend(server.serve_batch(batch_df).collect())
+        served.extend(
+            index.serve(batch_df, k=k, beam=beam, rounds=rounds).collect()
+        )
 
     q = (
         probes.writeStream.foreachBatch(_serve)
