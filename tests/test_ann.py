@@ -1,5 +1,7 @@
 """ANN recall tests: approximate results vs exact brute-force KNN."""
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from vector_search_spark.operators.ann import (
@@ -436,38 +438,16 @@ def test_knn_graph_insert_matches_rebuild_quality(spark):
         assert len(rows) <= k
 
 
-def test_knn_graph_build_arrow_scoring_matches_jvm(spark, sf_dir):
-    """The opt-in Arrow scoring path must produce the identical edge set
-    (ranks included) as the default JVM fold — the ulp-tolerant
-    rank-selection channel in practice."""
-    from vector_search_spark.sources.catalog import load_table
-    from vector_search_spark.operators.ann import knn_graph_build
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # driver_max_cells=0 forces the DISTRIBUTED path for both sides —
-    # this test compares the two distributed scoring folds specifically
-    kw = dict(
-        k=6, n_planes=24, band_bits=6, rounds=2, seed=42, dim=64,
-        driver_max_cells=0,
-    )
-    a = {
-        (r.src_id, r.nbr_id, r.rank, r.score)
-        for r in knn_graph_build(emb, score_arrow=False, **kw).collect()
-    }
-    b = {
-        (r.src_id, r.nbr_id, r.rank, r.score)
-        for r in knn_graph_build(emb, score_arrow=True, **kw).collect()
-    }
-    assert a == b and len(a) > 0
-
-
-def test_knn_graph_build_driver_path_matches_distributed(spark, sf_dir):
+def test_knn_graph_build_driver_path_matches_distributed(
+    spark, sf_dir, monkeypatch
+):
     """r14: the small-corpus DRIVER fast path must produce the identical
     edge set (ranks, floored scores) AND the identical band table as the
     distributed build — same planes, same candidate semantics, same
     (src ASC, cos DESC, nbr ASC) total order; the numpy cosine rides the
-    same ulp-tolerant channels the opt-in Arrow scoring path certified.
-    driver_max_cells=0 forces the distributed build on the same input."""
+    ulp-tolerant channels (rank selection, floored scores). A gate of
+    DRIVER_MAX_CELLS=0 forces the distributed build on the same input."""
+    from vector_search_spark.operators import ann
     from vector_search_spark.operators.ann import knn_graph_build
     from vector_search_spark.sources.catalog import load_table
 
@@ -477,7 +457,9 @@ def test_knn_graph_build_driver_path_matches_distributed(spark, sf_dir):
         return_bands=True,
     )
     g_drv, b_drv = knn_graph_build(emb, **kw)
-    g_dist, b_dist = knn_graph_build(emb, driver_max_cells=0, **kw)
+    g_auto = knn_graph_build(emb, k=6, rounds=1, seed=42, dim=64)
+    monkeypatch.setattr(ann, "DRIVER_MAX_CELLS", 0)
+    g_dist, b_dist = knn_graph_build(emb, **kw)
     edges_drv = sorted(map(tuple, g_drv.collect()))
     edges_dist = sorted(map(tuple, g_dist.collect()))
     assert edges_drv == edges_dist and len(edges_drv) > 0
@@ -486,24 +468,23 @@ def test_knn_graph_build_driver_path_matches_distributed(spark, sf_dir):
     assert bands_drv == bands_dist and len(bands_drv) > 0
     # the auto-band_bits form (a corpus count feeds the knob) must route
     # through the same gate without disturbing the knob math
-    g_auto = knn_graph_build(emb, k=6, rounds=1, seed=42, dim=64)
-    g_auto_dist = knn_graph_build(
-        emb, k=6, rounds=1, seed=42, dim=64, driver_max_cells=0
-    )
+    g_auto_dist = knn_graph_build(emb, k=6, rounds=1, seed=42, dim=64)
     assert sorted(map(tuple, g_auto.collect())) == sorted(
         map(tuple, g_auto_dist.collect())
     )
 
 
-def test_knn_graph_insert_delete_driver_paths_match_distributed(spark, sf_dir):
-    """r14: the insert/delete DRIVER fast paths must produce identical
-    row sets (ranks, floored scores, touched sets) as the distributed
-    forms, with and without a supplied corpus band table. The batch-side
-    signature uses the sequential Python fold (bit-identical to the JVM
-    lsh_signature); scores ride the certified floored-numpy channel.
-    driver_max_cells=0 forces the distributed path on the same input."""
+def test_knn_graph_insert_delete_driver_paths_match_distributed(
+    spark, sf_dir, monkeypatch
+):
+    """The insert/delete kernels must produce identical row sets (ranks,
+    floored scores, touched sets) on the whole row source (relations
+    collected to the driver) and on the gather source (rows fetched by
+    Spark semi-joins), with and without a supplied corpus band table.
+    DRIVER_MAX_CELLS=0 forces the gather source on the same input."""
     from pyspark.sql import functions as F
 
+    from vector_search_spark.operators import ann
     from vector_search_spark.operators.ann import (
         corpus_band_keys,
         knn_graph_build,
@@ -522,42 +503,44 @@ def test_knn_graph_insert_delete_driver_paths_match_distributed(spark, sf_dir):
     def canon(df):
         return sorted(map(tuple, df.collect()))
 
-    for cb in (None, bands):
-        i_drv, t_drv = knn_graph_insert(
-            graph, base, new, corpus_bands=cb, with_touched=True, **kw
-        )
-        i_dist, t_dist = knn_graph_insert(
-            graph, base, new, corpus_bands=cb, with_touched=True,
-            driver_max_cells=0, **kw
-        )
-        assert canon(i_drv) == canon(i_dist) and i_drv.count() > 0
-        assert canon(t_drv) == canon(t_dist)
-
     full_graph = knn_graph_build(emb, rounds=2, **kw).localCheckpoint(
         eager=True
     )
     full_bands = corpus_band_keys(emb, dim=64).localCheckpoint(eager=True)
     dels = emb.filter(F.col("vec_id") % 16 == 7).select("vec_id")
-    for cb in (None, full_bands):
-        d_drv, dt_drv = knn_graph_delete(
-            full_graph, emb, dels, corpus_bands=cb, with_touched=True, **kw
-        )
-        d_dist, dt_dist = knn_graph_delete(
-            full_graph, emb, dels, corpus_bands=cb, with_touched=True,
-            driver_max_cells=0, **kw
-        )
-        assert canon(d_drv) == canon(d_dist) and d_drv.count() > 0
-        assert canon(dt_drv) == canon(dt_dist)
+
+    def ops():
+        out = []
+        for cb in (None, bands):
+            i, t = knn_graph_insert(
+                graph, base, new, corpus_bands=cb, with_touched=True, **kw
+            )
+            out += [canon(i), canon(t)]
+        for cb in (None, full_bands):
+            d, t = knn_graph_delete(
+                full_graph, emb, dels, corpus_bands=cb, with_touched=True,
+                **kw
+            )
+            out += [canon(d), canon(t)]
+        return out
+
+    whole = ops()
+    monkeypatch.setattr(ann, "DRIVER_MAX_CELLS", 0)
+    gather = ops()
+    assert whole == gather
+    assert all(len(rows) > 0 for rows in whole)
 
 
-def test_knn_graph_serve_driver_path_matches_distributed(spark, sf_dir):
-    """r14: the serve DRIVER fast path must answer identically to the
-    distributed beam search in all three entry modes (lowest-id, explicit
-    list, LSH with and without a supplied band table) — same frontier
-    rule, same score-once semantics, same (cos DESC, id ASC) order.
-    driver_max_cells=0 forces the distributed path on the same input."""
+def test_knn_graph_serve_whole_and_gather_sources_agree(
+    spark, sf_dir, monkeypatch
+):
+    """The serve kernel must answer identically on the whole and the
+    gather row source in all three entry modes (lowest-id, explicit
+    list, LSH with and without a supplied band table).
+    DRIVER_MAX_CELLS=0 forces the gather source on the same input."""
     from pyspark.sql import functions as F
 
+    from vector_search_spark.operators import ann
     from vector_search_spark.operators.ann import (
         corpus_band_keys,
         knn_graph_build,
@@ -587,23 +570,32 @@ def test_knn_graph_serve_driver_path_matches_distributed(spark, sf_dir):
             corpus_bands=bands,
         ),
     ]
-    for kw in modes:
-        drv = knn_graph_serve(graph, emb, probes, k=10, beam=8, rounds=2, **kw)
-        dist = knn_graph_serve(
-            graph, emb, probes, k=10, beam=8, rounds=2,
-            driver_max_cells=0, **kw
-        )
-        assert canon(drv) == canon(dist) and drv.count() > 0, kw
+    def serve_all():
+        return [
+            canon(knn_graph_serve(
+                graph, emb, probes, k=10, beam=8, rounds=2, **kw
+            ))
+            for kw in modes
+        ]
+
+    whole = serve_all()
+    monkeypatch.setattr(ann, "DRIVER_MAX_CELLS", 0)
+    assert serve_all() == whole
+    assert all(len(rows) > 0 for rows in whole)
 
 
-def test_knn_graph_driver_paths_exact_duplicate_vectors(spark, sf_dir):
+def test_knn_graph_driver_paths_exact_duplicate_vectors(
+    spark, sf_dir, monkeypatch
+):
     """r14: replicated fixtures carry bitwise-DUPLICATE vectors under
     different ids, whose cosine sits exactly on the 1e-6 floor boundary —
     the one place the numpy pairwise-sum fold visibly diverges from the
-    JVM/DuckDB sequential fold. The driver fast paths must still equal
-    the distributed plans on such a corpus (build/insert/delete/serve)."""
+    JVM/DuckDB sequential fold. On such a corpus the build's driver path
+    must still equal its distributed plan, and insert/delete/serve must
+    answer alike on the whole and the gather row source."""
     from pyspark.sql import functions as F
 
+    from vector_search_spark.operators import ann
     from vector_search_spark.operators.ann import (
         knn_graph_build,
         knn_graph_delete,
@@ -625,32 +617,28 @@ def test_knn_graph_driver_paths_exact_duplicate_vectors(spark, sf_dir):
     def canon(df):
         return sorted(map(tuple, df.collect()))
 
-    g_drv = knn_graph_build(dup, rounds=1, **kw)
-    g_dist = knn_graph_build(dup, rounds=1, driver_max_cells=0, **kw)
-    assert canon(g_drv) == canon(g_dist)
-    graph = g_dist.localCheckpoint(eager=True)
-
+    g_drv = knn_graph_build(dup, rounds=1, **kw).localCheckpoint(True)
     new = dup.filter(F.col("vec_id").between(100000, 100004))
     base = dup.filter(~F.col("vec_id").between(100000, 100004))
     bgraph = knn_graph_build(base, rounds=1, **kw).localCheckpoint(True)
-    i_drv = knn_graph_insert(bgraph, base, new, **kw)
-    i_dist = knn_graph_insert(bgraph, base, new, driver_max_cells=0, **kw)
-    assert canon(i_drv) == canon(i_dist)
-
     dels = dup.filter(F.col("vec_id") % 7 == 3).select("vec_id")
-    d_drv = knn_graph_delete(graph, dup, dels, **kw)
-    d_dist = knn_graph_delete(graph, dup, dels, driver_max_cells=0, **kw)
-    assert canon(d_drv) == canon(d_dist)
-
     probes = dup.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("probe_id"),
         F.col("embedding").alias("probe_vec"),
     )
-    s_drv = knn_graph_serve(graph, dup, probes, k=10, beam=8, rounds=2)
-    s_dist = knn_graph_serve(
-        graph, dup, probes, k=10, beam=8, rounds=2, driver_max_cells=0
-    )
-    assert canon(s_drv) == canon(s_dist)
+
+    def ops():
+        return [
+            canon(knn_graph_insert(bgraph, base, new, **kw)),
+            canon(knn_graph_delete(g_drv, dup, dels, **kw)),
+            canon(knn_graph_serve(g_drv, dup, probes, k=10, beam=8,
+                                  rounds=2)),
+        ]
+
+    whole = ops()
+    monkeypatch.setattr(ann, "DRIVER_MAX_CELLS", 0)
+    assert canon(knn_graph_build(dup, rounds=1, **kw)) == canon(g_drv)
+    assert ops() == whole
 
 
 def test_graph_server_band_config_consistent_off_default(spark):
@@ -705,7 +693,8 @@ def test_graph_server_band_config_consistent_off_default(spark):
 
 def test_graph_serve_refuses_bands_without_config(spark):
     """corpus_bands without explicit (n_planes, band_bits) is a config-
-    mismatch trap (and a per-batch count job) — must raise, not guess."""
+    mismatch trap (and a per-batch count job) — must raise, not guess;
+    so must a non-integral id column."""
     import pytest as _pytest
 
     from vector_search_spark.operators.ann import (
@@ -728,6 +717,13 @@ def test_graph_serve_refuses_bands_without_config(spark):
         knn_graph_serve(
             graph, emb, probes, entries="lsh", dim=4, corpus_bands=cb
         )
+    # the kernels key every relation by int64 ids: a string id column is
+    # refused by name and type, not answered
+    str_probes = probes.select(
+        F.col("probe_id").cast("string").alias("probe_id"), "probe_vec"
+    )
+    with _pytest.raises(ValueError, match="'probe_id' must be integral, got string"):
+        knn_graph_serve(graph, emb, str_probes, dim=4)
 
 
 def test_graph_build_auto_bands_snap_to_divisor(spark):
@@ -982,16 +978,24 @@ def test_graph_churn_compaction_policy(spark):
     assert gm_b.churn_frac < 0.35  # counter reset by the last compaction
 
 
-def test_graph_maintainer_durable_restart(spark, tmp_path):
+@pytest.mark.parametrize("gate", ["whole", "gather"])
+def test_graph_maintainer_durable_restart(spark, tmp_path, monkeypatch, gate):
     """VERDICT r10 next #4: the maintained (graph, bands, churn counter)
     must survive a restart. Kill AFTER a delete and BEFORE the pending
     compaction; GraphMaintainer.recover must reconstruct the EXACT
     maintained state — edge-set equality (ranks/scores included),
     corpus equality, churn counter and compaction count preserved —
-    and the pending compaction must then run on the recovered state."""
+    and the pending compaction must then run on the recovered state.
+    Run on both row sources: ``gather`` (DRIVER_MAX_CELLS=0) takes the
+    incremental band table, the touched sets and recovery through
+    Spark semi-joins."""
     import numpy as np
 
+    from vector_search_spark.operators import ann
     from vector_search_spark.operators.graph_lifecycle import GraphMaintainer
+
+    if gate == "gather":
+        monkeypatch.setattr(ann, "DRIVER_MAX_CELLS", 0)
 
     n, dim, ncl = 240, 32, 12
     rng = np.random.RandomState(71)

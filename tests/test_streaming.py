@@ -683,7 +683,7 @@ def test_engine_serve_single_plan(spark, sf_dir, tmp_path, family):
     a small constant INDEPENDENT of batch size (a per-probe loop would
     schedule >= one job per probe and pay Spark's measured ~0.5-1 s
     scheduling floor per query — tools/serve_latency.py; the graph's
-    per-round checkpoints cost a fixed number of jobs, the batch size
+    per-round row fetches cost a fixed number of jobs, the batch size
     costs none). Job counts come from job groups, so the pin is
     load-independent. The ivf answers are certified against the
     in-memory IVF twin (same algorithm, same index), probe-for-probe."""

@@ -334,8 +334,9 @@ class GraphMaintainer:
     def serve(
         self, probes: DataFrame, k: int = 10, beam: int = 8, rounds: int = 2
     ) -> DataFrame:
-        """LSH-entry beam search over the CURRENT graph/corpus: one plan
-        per probe batch, (probe_id, vec_id, rank, score) top-k per probe.
+        """LSH-entry beam search over the CURRENT graph/corpus: one
+        kernel call per probe batch, (probe_id, vec_id, rank, score)
+        top-k per probe.
         The banding is the build's, resolved once and recorded with the
         config, so probes and the maintained band table always hash
         alike (ADVICE r8)."""
