@@ -59,13 +59,29 @@ def test_nl_targeting_positive_and_negative(spark, sf_dir):
 def test_recommend_end_to_end_deterministic(spark, sf_dir):
     camp = build_campaign_vectors(spark, sf_dir).cache()
     a = recommend_similar_and_count(spark, sf_dir, "프리미엄 고객", campaign_vectors=camp)
-    b = recommend_similar_and_count(spark, sf_dir, "프리미엄 고객", campaign_vectors=camp)
+    cnt = a["audience_count"].collect()[0].audience_cnt
+    # one warm call's budget: the KNN action, the two source loads, the
+    # condition gather and the audience count, with the caller's collects
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup("recommend_budget", "recommend_budget")
+    try:
+        b = recommend_similar_and_count(spark, sf_dir, "프리미엄 고객", campaign_vectors=camp)
+        recs = b["recommendations"].collect()
+        cnt_b = b["audience_count"].collect()[0].audience_cnt
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("recommend_budget"))
+    assert jobs <= 10, jobs
+    assert sc._jsc.getPersistentRDDs().size() == persisted
     assert a["audience_sql"] == b["audience_sql"]
     assert "COUNT(DISTINCT cust_id)" in a["audience_sql"]
-    assert a["recommendations"].count() == 5
-    cnt = a["audience_count"].collect()[0].audience_cnt
-    assert cnt == b["audience_count"].collect()[0].audience_cnt
-    assert cnt >= 0
+    assert len(recs) == 5
+    assert b["recommendations"].dtypes == [
+        ("camp_id", "bigint"), ("n_hits", "bigint"),
+        ("fused_score", "double"), ("match_pct", "double"),
+    ]
+    assert cnt == cnt_b >= 0
 
 
 def test_codegen_template_cleanup():

@@ -319,3 +319,22 @@ def test_embedding_probe_all_broadcast_no_cartesian(spark, sf_dir):
     assert joins and set(joins) == {"BroadcastHashJoin"}, joins
     assert "CartesianProduct" not in plan
     assert re.search(r"WholeStageCodegen|\*\(\d+\)", plan), "no codegen span"
+
+
+def test_knn_topk_single_exchange(spark, sf_dir):
+    # row_number() <= k already gets a partial WindowGroupLimit before its
+    # shuffle, so the per-probe top-k needs exactly ONE shuffle Exchange
+    # below its Window; a second one is a redundant local pre-window
+    from pyspark.sql import functions as F
+
+    from vector_search_spark.operators.knn import knn
+    from vector_search_spark.sources.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    probes = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
+    )
+    final = _final_plan(knn(emb, probes, k=5))
+    below = final.split("+- Window [row_number()", 1)[1]
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", below)) == 1, final
+    assert "WindowGroupLimit" in below and "Partial" in below, final

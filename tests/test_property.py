@@ -5,16 +5,17 @@ deadline disabled; the properties themselves are the full contracts:
 
 - sweep-line: total weight×length is conserved, output segments are
   non-overlapping and ordered per name, and every segment's weight equals
-  a brute-force point count.
+  a brute-force point count; the driver kernel gives the same segments as
+  the Spark operator.
 - MinHash LSH: every emitted pair really meets the threshold (soundness),
   and exact duplicates are always found (completeness for jaccard=1).
 """
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from vector_search_spark.operators.dedup import minhash_lsh_pairs
-from vector_search_spark.operators.sweepline import sweep_overlap
+from vector_search_spark.operators.sweepline import sweep_overlap, sweep_segments
 
 intervals_strategy = st.lists(
     st.tuples(
@@ -29,6 +30,7 @@ intervals_strategy = st.lists(
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(intervals_strategy)
+@example([(1, 4, 2), (5, 4, 3)])  # touching [1,5] + [5,9] overlap at 5
 def test_sweepline_properties(spark, raw):
     rows = [("n", s, s + ln, float(w)) for s, ln, w in raw]
     df = spark.createDataFrame(rows, "name string, start long, end long, w double")
@@ -36,6 +38,9 @@ def test_sweepline_properties(spark, raw):
         (r.seg_start, r.seg_end, r.weight)
         for r in sweep_overlap(df, "name", "start", "end", "w").collect()
     )
+    # the driver kernel is the same sweep, row for row
+    _, starts, ends, ws = zip(*rows)
+    assert list(zip(*(a.tolist() for a in sweep_segments(starts, ends, ws)))) == segs
     # non-overlapping + ordered
     for (s1, e1, _), (s2, _, _) in zip(segs, segs[1:]):
         assert e1 < s2 and s1 <= e1

@@ -98,9 +98,13 @@ def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     # the free disk (a_graph_pagerank, round 12) while the actual hash
     # tables were small.
     con.execute("SET preserve_insertion_order=false")
+    # default: 40% of physical memory, at most 40GB — a fixed 40GB outgrew
+    # a 15 GB host, where DuckDB was OOM-killed instead of spilling
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    default = f"{min(phys_mb * 2 // 5, 40 * 1024)}MB"
     con.execute(
         "SET memory_limit='"
-        + os.environ.get("SPARK_GRAFT_DUCK_MEM", "40GB")
+        + os.environ.get("SPARK_GRAFT_DUCK_MEM", default)
         + "'"
     )
     for t in TABLES:

@@ -1169,9 +1169,7 @@ def ivf_assign(
     scored = corpus.crossJoin(F.broadcast(centroids)).withColumn(
         "_cscore", cosine_sim(corpus_vec, centroid_vec)
     )
-    best = topk_per_key(
-        scored, [corpus_id], "_cscore", 1, tiebreak=[centroid_id], two_phase=False
-    )
+    best = topk_per_key(scored, [corpus_id], "_cscore", 1, tiebreak=[centroid_id])
     return best.select(corpus_id, corpus_vec, centroid_id, *(payload_cols or []))
 
 
@@ -1468,8 +1466,7 @@ def ivf_knn(
         "_pscore", cosine_sim(probe_vec, centroid_vec)
     )
     probe_cents = topk_per_key(
-        cent_scored, [probe_id], "_pscore", n_probe,
-        tiebreak=[centroid_id], two_phase=False,
+        cent_scored, [probe_id], "_pscore", n_probe, tiebreak=[centroid_id],
     ).select(probe_id, probe_vec, centroid_id)
 
     cands = corpus_assigned.join(

@@ -4,7 +4,7 @@ Reference semantics re-expressed:
 
 - V3 brute-force KNN:  ``ORDER BY 3 DESC LIMIT 10`` per probe
   (camp_vec_rcmn.py:44) → one distributed plan for ALL probes at once,
-  broadcast probes × corpus, two-phase top-k (no per-probe loop, no driver
+  broadcast probes × corpus, one-exchange top-k (no per-probe loop, no driver
   round-trips — the reference issues one SQL query per probe sequentially).
 - V4 threshold search: ``WHERE SIMIL_SCORE >= 0.5`` + max-per-group
   (nl_targeting.py:55-56).
@@ -13,20 +13,37 @@ Reference semantics re-expressed:
 
 Scale design
 ------------
-``topk_per_key`` implements top-k with a LOCAL pre-reduction: a first window
-partitioned by (key, input partition) reduces every scan partition to ≤k
-candidate rows before the per-key shuffle. With P input partitions the global
-stage sees at most k·P rows per key instead of the whole corpus — this is the
-difference between a plan that works at 100 TB and one that funnels the full
-scan through one reducer per probe. Ties broken deterministically by id.
+``topk_per_key`` is a ``row_number() <= k`` filter over a per-key window.
+Spark (3.5+) plans that filter with a partial ``WindowGroupLimit`` BEFORE the
+per-key exchange, so every map task ships at most k rows per key: with P scan
+partitions the global window sees at most k·P rows per key, never the whole
+corpus funnelled through one reducer per probe. A hand-written local window
+over (key, spark_partition_id()) would add a second exchange, sort and window
+on top of that, not a pre-reduction. Ties broken deterministically by id.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_sim, l2_norm
+
+
+def probe_table(spark, vecs, **cols) -> DataFrame:
+    """Driver-side probes as ``probe_id int, <cols> string, probe_vec
+    array<float>``. Built from a pandas frame it plans as a LocalRelation
+    (no Spark job; a list of tuples would be a Python RDD), and float32
+    rounds as an ``array<float>`` cast does."""
+    pdf = pd.DataFrame({
+        "probe_id": np.arange(len(vecs), dtype=np.int32),
+        **cols,
+        "probe_vec": [np.asarray(v, dtype=np.float32) for v in vecs],
+    })
+    strs = "".join(f"{c} string, " for c in cols)
+    return spark.createDataFrame(pdf, f"probe_id int, {strs}probe_vec array<float>")
 
 
 def topk_per_key(
@@ -35,24 +52,17 @@ def topk_per_key(
     order_col: str,
     k: int,
     tiebreak: list[str] | None = None,
-    two_phase: bool = True,
     ascending: bool = False,
 ) -> DataFrame:
     """Top-k rows per key ordered by ``order_col`` (W2/T1) — DESC for
     similarity scores, ``ascending=True`` for distances.
 
-    ``two_phase=True`` pre-reduces each input partition to k rows per key
-    before the global per-key window — same result, bounded shuffle.
+    One exchange: Spark pre-reduces each map partition to k rows per key
+    with a partial ``WindowGroupLimit`` before the shuffle, then the per-key
+    window keeps the global k.
     """
     direction = F.asc(order_col) if ascending else F.desc(order_col)
     order = [direction] + [F.asc(c) for c in (tiebreak or [])]
-    if two_phase:
-        local = Window.partitionBy(*keys, F.spark_partition_id()).orderBy(*order)
-        df = (
-            df.withColumn("_local_rn", F.row_number().over(local))
-            .filter(F.col("_local_rn") <= k)
-            .drop("_local_rn")
-        )
     w = Window.partitionBy(*keys).orderBy(*order)
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")
 

@@ -24,10 +24,15 @@ per name. The window partitions by interval name — the reference workload
 has many names (one per condition attribute), so partitions stay balanced;
 a single giant name would need range-partitioned segmenting, which
 ``spark.sql.execution.rangeExchange`` already provides via the window sort.
+
+``sweep_segments`` is the same sweep as a driver numpy kernel, for interval
+sets that are already bounded and collected (a recommendation's top-n order
+history): one sort and one sequential ``np.cumsum``, no Spark job.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -105,3 +110,29 @@ def sweep_overlap_dates(
         F.date_add(epoch, F.col("seg_end").cast("int")).alias("seg_end"),
         "weight",
     )
+
+
+def sweep_segments(starts, ends, weights):
+    """``sweep_overlap`` for one name on the driver: weighted inclusive
+    integer [start, end] intervals → ``(seg_start, seg_end, weight)`` arrays
+    of the elementary segments with weight > 0, ordered by ``seg_start``.
+
+    The running weight is one sequential ``np.cumsum`` over the events
+    sorted by point (starts before ends at a tie, as the reference sorts
+    them); a segment's weight is the sum after the last event at its start
+    point, i.e. every event at that point summed in. Sequential, never
+    pairwise, so a weight compared with a threshold is a left fold.
+    """
+    w = np.asarray(weights, dtype=np.float64)
+    points = np.concatenate(
+        [np.asarray(starts, dtype=np.int64), np.asarray(ends, dtype=np.int64) + 1]
+    )
+    order = np.argsort(points, kind="stable")
+    points = points[order]
+    run = np.cumsum(np.concatenate([w, -w])[order])
+    last = np.ones(len(points), dtype=bool)
+    last[:-1] = points[1:] != points[:-1]
+    pts, run = points[last], run[last]
+    seg_start, seg_end, weight = pts[:-1], pts[1:] - 1, run[:-1]
+    keep = weight > 0
+    return seg_start[keep], seg_end[keep], weight[keep]

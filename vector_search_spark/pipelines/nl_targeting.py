@@ -18,7 +18,7 @@ from ..llm.clients import (
     FakeLLMClient,
     LLMClient,
 )
-from ..operators.knn import threshold_search
+from ..operators.knn import probe_table, threshold_search
 from .ingest import build_condition_vectors
 
 
@@ -47,12 +47,8 @@ def nl_targeting_conditions(
     keywords = llm.extract_keywords(input_query)
     sentences = [f"{k['attr']} {k['value']} 검색 문장 0" for k in keywords]
     vecs = embedder.embed_batch(sentences)
-    probes = spark.createDataFrame(
-        [
-            (i, k["attr"], k["polarity"], k["value"], v)
-            for i, (k, v) in enumerate(zip(keywords, vecs))
-        ],
-        "probe_id int, attr string, polarity string, value string, probe_vec array<float>",
+    probes = probe_table(
+        spark, vecs, **{c: [k[c] for k in keywords] for c in ("attr", "polarity", "value")}
     )
 
     # V4 + A1: one broadcast pass for every keyword at once.

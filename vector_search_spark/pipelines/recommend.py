@@ -4,16 +4,27 @@ camp_vec_rcmn.py end-to-end).
 Stages, re-expressed Spark-first:
   L4 query expansion (5 probes)      → driver-side fake/LLM call
   per-probe KNN + score fusion (V5)  → one distributed plan (multiprobe_fusion)
-  condition fetch for top-5 (A4/J6)  → semi-join + ordered group_concat
-  dynamic threshold (A8)             → mean + 0.5·stddev_samp scalar
-  interval mining (A10)              → sweep-line windows, int + date flavors
+  dynamic threshold (A8)             → mean + 0.5·stddev_samp window over the
+                                       fused top-n, collected in the SAME
+                                       action as the top-n rows
+  condition fetch for top-5 (A4/J6)  → one gather: the top-n's orders and
+                                       customer rows (IN-list filters, union)
+  interval mining (A10)              → driver sweep (sweep_segments), int +
+                                       date flavors, over the gathered rows
   SQL codegen (S7)                   → plans.codegen → ANSI SQL
   audience count (U1+A9)             → spark.sql COUNT(DISTINCT) over UNION
+
+Every relation after the KNN is bounded by top_n × orders per customer, so
+each crosses to the driver once and is mined there, as the reference does
+(camp_vec_rcmn.py:94-186); the corpus-sized work stays in Spark.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import datetime
+
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..llm.clients import (
@@ -22,11 +33,19 @@ from ..llm.clients import (
     FakeLLMClient,
     LLMClient,
 )
-from ..operators.knn import multiprobe_fusion
-from ..operators.sweepline import sweep_overlap, sweep_overlap_dates
+from ..operators.knn import multiprobe_fusion, probe_table
+from ..operators.sweepline import sweep_segments
 from ..plans.codegen import Condition, audience_count_sql
 from ..sources.catalog import load_table
 from .ingest import build_campaign_vectors
+
+
+def _mined_bounds(starts, ends, weights, thr):
+    """(lo, hi) over the sweep segments whose weight reaches ``thr``, or
+    None when no segment does."""
+    seg_start, seg_end, weight = sweep_segments(starts, ends, weights)
+    hit = weight >= thr
+    return (int(seg_start[hit].min()), int(seg_end[hit].max())) if hit.any() else None
 
 
 def recommend_similar_and_count(
@@ -51,99 +70,76 @@ def recommend_similar_and_count(
 
     # L4 + V6: expand and embed driver-side (5 tiny rows), then one
     # distributed fusion plan (the reference loops 5 sequential KNN queries).
-    texts = llm.expand_query(user_query, 5)
-    vecs = embedder.embed_batch(texts)
-    probes = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)],
-        "probe_id int, probe_vec array<float>",
-    )
+    probes = probe_table(spark, embedder.embed_batch(llm.expand_query(user_query, 5)))
     top = multiprobe_fusion(
         camp, probes, k=k, top_n=top_n, n_probes_norm=5, corpus_id="camp_id"
-    ).cache()
+    )
 
-    # A8 dynamic threshold over the fused scores (mean + 0.5σ, ddof=1).
-    stats = top.agg(
-        (F.avg("fused_score") + 0.5 * F.coalesce(F.stddev_samp("fused_score"), F.lit(0.0))).alias("thr")
-    ).collect()[0]
-    thr = float(stats.thr)
+    # A8 dynamic threshold over the fused scores (mean + 0.5σ, ddof=1),
+    # computed by Spark's aggregates as a window over the single-partition
+    # top-n, so the top-n and the threshold are ONE action.
+    whole = Window.partitionBy()
+    rows = top.withColumn(
+        "thr",
+        F.avg("fused_score").over(whole)
+        + 0.5 * F.coalesce(F.stddev_samp("fused_score").over(whole), F.lit(0.0)),
+    ).collect()
+    thr = rows[0].thr if rows else 0.0
+    score = {r.camp_id: r.fused_score for r in rows}
+    recs = spark.createDataFrame(
+        pd.DataFrame([r[:4] for r in rows], columns=top.columns),
+        "camp_id long, n_hits long, fused_score double, match_pct double",
+    )
 
-    # J6: conditions of the recommended campaigns = their order history.
+    # J6: conditions of the recommended campaigns = their order history and
+    # segment, gathered in one collect; the interval ends are computed by
+    # Spark (the audience SQL compares against Spark's own casts).
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    top_ids = top.select(F.col("camp_id"), "fused_score")
-    cond_orders = orders.join(
-        F.broadcast(top_ids), orders.o_custkey == top_ids.camp_id, "inner"
-    )
-
-    # A7: string conditions — segment scores summed over campaigns.
-    seg_scores = (
-        cust.join(F.broadcast(top_ids), cust.c_custkey == top_ids.camp_id)
-        .groupBy("c_mktsegment")
-        .agg(F.sum("fused_score").alias("score"))
-        .filter(F.col("score") > F.lit(thr) * 0.2)
-    )
-    segments = sorted(r.c_mktsegment for r in seg_scores.collect())
-
-    # A10 integer sweep: totalprice bands weighted by campaign similarity.
-    int_iv = cond_orders.select(
-        F.lit("o_totalprice").alias("name"),
-        (F.col("o_totalprice") * 0.9).cast("long").alias("start"),
-        (F.col("o_totalprice") * 1.1).cast("long").alias("end"),
-        F.col("fused_score").alias("w"),
-    )
-    int_segs = sweep_overlap(int_iv, "name", "start", "end", "w").filter(
-        F.col("weight") >= thr
-    )
-
-    # A10 date sweep: order-date windows weighted the same way.
-    date_iv = cond_orders.select(
-        F.lit("o_orderdate").alias("name"),
-        F.col("o_orderdate").cast("date").alias("start_date"),
-        F.date_add(F.col("o_orderdate").cast("date"), 30).alias("end_date"),
-        F.col("fused_score").alias("w"),
-    )
-    date_segs = sweep_overlap_dates(date_iv, weight_col="w").filter(
-        F.col("weight") >= thr
-    )
-
-    # Both bound pairs are 1-row aggregates — cross-join them into ONE
-    # driver round-trip instead of two sequential collect()s (the mined
-    # bounds are driver-side by contract: they parameterize the codegen).
-    bounds = (
-        int_segs.agg(
-            F.min("seg_start").alias("int_lo"), F.max("seg_end").alias("int_hi")
+    ids = list(score)
+    epoch = F.lit("1970-01-01").cast("date")
+    gathered = (
+        orders.filter(F.col("o_custkey").isin(ids))
+        .select(
+            F.col("o_custkey").alias("id"),
+            (F.col("o_totalprice") * 0.9).cast("long").alias("lo"),
+            (F.col("o_totalprice") * 1.1).cast("long").alias("hi"),
+            F.datediff(F.col("o_orderdate").cast("date"), epoch).alias("day"),
         )
-        .crossJoin(
-            date_segs.agg(
-                F.min("seg_start").alias("date_lo"),
-                F.max("seg_end").alias("date_hi"),
-            )
+        .unionByName(
+            cust.filter(F.col("c_custkey").isin(ids)).select(
+                F.col("c_custkey").alias("id"), F.col("c_mktsegment").alias("seg")
+            ),
+            allowMissingColumns=True,
         )
-        .collect()[0]
+        .collect()
     )
+    ords = [r for r in gathered if r.seg is None]
 
-    class _B:  # noqa: D401 - tiny row adapters for the codegen below
-        pass
+    # A7: string conditions — segment scores summed over campaigns (a
+    # sequential fold, as every sum compared with thr).
+    seg_score: dict = {}
+    for r in gathered:
+        if r.seg is not None:
+            seg_score[r.seg] = seg_score.get(r.seg, 0.0) + score[r.id]
+    segments = sorted(s for s, v in seg_score.items() if v > thr * 0.2)
 
-    int_bounds, date_bounds = _B(), _B()
-    int_bounds.lo, int_bounds.hi = bounds.int_lo, bounds.int_hi
-    date_bounds.lo, date_bounds.hi = bounds.date_lo, bounds.date_hi
+    # A10 integer sweep: totalprice bands weighted by campaign similarity;
+    # date sweep: 30-day order-date windows (epoch days) weighted the same.
+    w = [score[r.id] for r in ords]
+    int_b = _mined_bounds([r.lo for r in ords], [r.hi for r in ords], w, thr)
+    date_b = _mined_bounds([r.day for r in ords], [r.day + 30 for r in ords], w, thr)
 
     # S7 codegen → U1+A9 audience count, executed by spark.sql (and equally
     # valid DuckDB — the string is its own oracle).
     conds: list[Condition] = []
     slices: list[tuple[str, str, list[Condition]]] = []
-    if int_bounds.lo is not None:
+    if int_b is not None:
+        conds.append(Condition("o_totalprice", "between", int_b))
+    if date_b is not None:
+        lo, hi = (datetime.date(1970, 1, 1) + datetime.timedelta(days=d) for d in date_b)
         conds.append(
-            Condition("o_totalprice", "between", (int(int_bounds.lo), int(int_bounds.hi)))
-        )
-    if date_bounds.lo is not None:
-        conds.append(
-            Condition(
-                "o_orderdate",
-                "between",
-                (f"{date_bounds.lo} 00:00:00", f"{date_bounds.hi} 23:59:59"),
-            )
+            Condition("o_orderdate", "between", (f"{lo} 00:00:00", f"{hi} 23:59:59"))
         )
     if conds:
         slices.append(("orders", "o_custkey", conds))
@@ -153,12 +149,12 @@ def recommend_similar_and_count(
         )
 
     sql = audience_count_sql(slices)
-    for name in ("orders", "customer"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    orders.createOrReplaceTempView("orders")
+    cust.createOrReplaceTempView("customer")
     count_df = spark.sql(sql)
 
     return {
-        "recommendations": top,
+        "recommendations": recs,
         "conditions": conds,
         "audience_sql": sql,
         "audience_count": count_df,
