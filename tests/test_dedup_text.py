@@ -73,6 +73,46 @@ def test_lsh_subset_of_exact(spark, sf_dir):
         assert len(lsh) / len(exact) > 0.5  # decent recall at these params
 
 
+def test_minhash_probe_equals_two_stage_lsh(spark, sf_dir, tmp_path):
+    """The persisted MinHash index's probe (its batch shingled, hashed and
+    signed in ONE fused Arrow pass) finds exactly the (batch, corpus)
+    pairs and Jaccard values that the two-stage ``minhash_lsh_pairs``
+    finds over corpus ∪ batch: same sets, same signatures, same band
+    keys. Writing the index again to the same path replaces it: one base
+    directory holding ``bands/`` and ``sets/`` stays."""
+    import os
+
+    from vector_search_spark.operators.dedup import (
+        minhash_index_write,
+        minhash_probe_pairs,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    is_new = F.col("doc_id") % 5 == 0
+    batch = docs.filter(is_new)
+    path = str(tmp_path / "mh_idx")
+    minhash_index_write(batch, "text", "doc_id", path)  # replaced below
+    minhash_index_write(docs.filter(~is_new), "text", "doc_id", path)
+    assert sorted(os.listdir(path)) == ["_MARKER", "base-1"]
+    assert sorted(os.listdir(os.path.join(path, "base-1"))) == ["bands", "sets"]
+
+    got = {
+        (r.new_id, r.corpus_id): r.jaccard
+        for r in minhash_probe_pairs(
+            spark, path, batch, "text", "doc_id", 0.5
+        ).collect()
+    }
+    new_ids = {r.doc_id for r in batch.select("doc_id").collect()}
+    want = {}
+    for r in minhash_lsh_pairs(
+        docs, "text", "doc_id", 16, 4, 0.5, shingle_n=3
+    ).collect():
+        if (r.id_a in new_ids) != (r.id_b in new_ids):
+            pair = (r.id_a, r.id_b) if r.id_a in new_ids else (r.id_b, r.id_a)
+            want[pair] = r.jaccard
+    assert got and got == want
+
+
 def test_poly_hash_deterministic_and_spread(spark):
     df = spark.createDataFrame([("a",), ("b",), ("ab",), ("ba",), ("a",)], ["s"])
     vals = [r.h for r in df.select(poly_hash("s").alias("h")).collect()]

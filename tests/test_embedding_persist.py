@@ -132,14 +132,34 @@ def test_dim_guard_fails_loudly(spark, tmp_path):
         embedding_probe_pairs(spark, "/tmp/x", batch, "embedding", "vec_id")
 
 
-def test_settings_mismatch_fails_loudly(spark, tmp_path):
+@pytest.mark.parametrize("family", ["embedding", "minhash"])
+def test_settings_mismatch_fails_loudly(spark, tmp_path, family):
     """ADVICE r13: probing with other banding settings than the index
     was written with silently missed pairs (band keys never collide).
-    The index records its settings; insert and probe must refuse."""
+    Each index records its settings; its probe (and the embedding
+    insert) must refuse, naming the caller's value and the recorded one."""
     from vector_search_spark.operators.dedup import embedding_index_insert
 
-    corpus, batch = _vectors(spark)
     path = str(tmp_path / "idx")
+    if family == "minhash":
+        from vector_search_spark.operators.dedup import (
+            minhash_index_write,
+            minhash_probe_pairs,
+        )
+
+        docs = spark.createDataFrame(
+            [(i, f"the quick brown fox number {i} jumps") for i in range(6)],
+            "doc_id long, text string",
+        )
+        minhash_index_write(docs, "text", "doc_id", path)
+        with pytest.raises(ValueError, match="bands=2 .*bands=4"):
+            minhash_probe_pairs(spark, path, docs, "text", "doc_id", bands=2)
+        with pytest.raises(ValueError, match="n_hashes=32 .*n_hashes=16"):
+            minhash_probe_pairs(
+                spark, path, docs, "text", "doc_id", n_hashes=32
+            )
+        return
+    corpus, batch = _vectors(spark)
     embedding_index_write(
         corpus, "embedding", "vec_id", path,
         n_planes=N_PLANES, band_bits=BAND_BITS, dim=DIM,
@@ -422,11 +442,14 @@ def test_crash_partial_delta_is_invisible_and_id_skipped(
     assert log.next_batch_id() == 2  # and its id is never reused
 
 
-def test_probe_broadcast_gate_unhinted_fallback(spark, tmp_path):
+def test_probe_broadcast_gate_unhinted_fallback(spark, tmp_path, monkeypatch):
     """Over the gate (VERDICT r13 #2) the probe emits NO forced
     broadcast hints — a corpus-scale delivery degrades to the AQE/shuffle
     plan instead of a guaranteed-honored hint OOMing an executor — and
-    the unhinted plan returns the identical rows."""
+    the unhinted plan returns the identical rows. The gate is the module
+    constant, read at call time."""
+    from vector_search_spark.operators import dedup
+
     corpus, batch = _vectors(spark)
     path = str(tmp_path / "idx")
     embedding_index_write(
@@ -439,9 +462,9 @@ def test_probe_broadcast_gate_unhinted_fallback(spark, tmp_path):
     hinted = embedding_probe_pairs(
         spark, path, batch, "embedding", "vec_id", **kw
     )
+    monkeypatch.setattr(dedup, "PROBE_BROADCAST_MAX_BYTES", 0)
     gated = embedding_probe_pairs(
-        spark, path, batch, "embedding", "vec_id",
-        broadcast_max_bytes=0, **kw,
+        spark, path, batch, "embedding", "vec_id", **kw
     )
     assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
     assert (

@@ -302,19 +302,20 @@ def test_parquet_scan_units_counts_row_groups(spark, sf_dir, tmp_path):
         parquet_scan_units(str(tmp_path / "nothing_here"))
 
 
-def test_embedding_probe_all_broadcast_no_cartesian(spark, sf_dir):
+@pytest.mark.parametrize("family", ["embedding", "minhash"])
+def test_embedding_probe_all_broadcast_no_cartesian(spark, sf_dir, family):
     """The persisted-index probe's joins must all be broadcast with the
     HINTED side the delivery-sized one (banded batch, candidate list) —
     a corpus-sided broadcast would OOM at 100 TB where the degraded
-    shape is a shuffle. Pin: 3 BroadcastHashJoins, no cartesian, no
-    sort-merge at fixture scale (round-13 plan audit shape)."""
-    from vector_search_spark.plans.queries import (
-        embedding_index_build,
-        embedding_index_serve,
-    )
+    shape is a shuffle. Pin, for both index families (one shared probe):
+    3 BroadcastHashJoins, no cartesian, no sort-merge at fixture scale
+    (round-13 plan audit shape)."""
+    from vector_search_spark.plans import queries
 
-    path = embedding_index_build(spark, sf_dir)
-    plan = _final_plan(embedding_index_serve(spark, sf_dir, path))
+    build = getattr(queries, f"{family}_index_build")
+    serve = getattr(queries, f"{family}_index_serve")
+    path = build(spark, sf_dir)
+    plan = _final_plan(serve(spark, sf_dir, path))
     joins = JOIN_RE.findall(plan)
     assert joins and set(joins) == {"BroadcastHashJoin"}, joins
     assert "CartesianProduct" not in plan

@@ -161,7 +161,8 @@ def mh_persist(src):
         # NOTE: no extra suffix — pid_scratch's dead-pid pruning parses
         # the trailing _<pid> token, so appending anything after it would
         # let another process mistake this dir for a dead one. Base and
-        # scaled runs share the path sequentially (mode=overwrite).
+        # scaled runs share the path sequentially (each write commits a
+        # new base and collects the old one).
         path = pid_scratch("mh_probe_idx", sf_dir)
         minhash_index_write(corpus, "text", "doc_id", path)
         return minhash_probe_pairs(
@@ -172,79 +173,14 @@ def mh_persist(src):
 
 
 def minhash_est(src):
-    # d_minhash_est_error shape: checkpointed sig table, bands-only
-    # candidate shuffle, two pair-side joins — same band-join class as
-    # minhash_lsh; replication multiplies docs with disjoint vocab so
-    # bucket population per band key stays constant.
-    from vector_search_spark.functions.text import (
-        minhash_perm,
-        poly_hash,
-        word_shingles,
-    )
+    # d_minhash_est_error itself (the row's own plan over the replicated
+    # docs, so the probe cannot drift from the row): checkpointed sig
+    # table, bands-only candidate shuffle, two pair-side joins — same
+    # band-join class as minhash_lsh; replication multiplies docs with
+    # disjoint vocab so bucket population per band key stays constant.
+    from vector_search_spark.plans.queries import minhash_est_error
 
-    def run():
-        hashed = src.select(
-            F.col("doc_id").alias("id"),
-            F.transform(word_shingles("text", 3), poly_hash).alias("hs"),
-        )
-        sig_bound = F.element_at(
-            F.transform(
-                F.array("hs"),
-                lambda full: F.transform(
-                    F.sequence(F.lit(0), F.lit(15)),
-                    lambda s: F.array_min(
-                        F.transform(full, lambda h: minhash_perm(h, s))
-                    ),
-                ),
-            ),
-            1,
-        )
-        sigs = (
-            hashed.filter(F.size("hs") > 0)  # mirror the registry row's
-            # empty-shingle guard: all-null sigs would band together
-            # and turn the probe superlinear on short-doc fixtures
-            .select("id", "hs", sig_bound.alias("sig"))
-            .localCheckpoint(eager=True)
-        )
-        banded = sigs.select(
-            "id",
-            F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band"),
-            "sig",
-        ).select(
-            "id",
-            "band",
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.slice("sig", F.col("band") * 4 + 1, 4),
-                    lambda x: x.cast("string"),
-                ),
-            ).alias("key"),
-        )
-        a = banded.select(F.col("id").alias("id_a"), "band", "key")
-        b = banded.select(F.col("id").alias("id_b"), "band", "key")
-        cands = (
-            a.join(b, ["band", "key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        sa = sigs.select(
-            F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
-        )
-        sb = sigs.select(
-            F.col("id").alias("id_b"), F.col("sig").alias("sig_b")
-        )
-        j = cands.join(sa, "id_a").join(sb, "id_b")
-        agree = F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda v: v,
-            )
-        )
-        return j.select(agree.alias("agree")).count()
-
-    return run
+    return lambda: minhash_est_error(src).count()
 
 
 def freq_spectrum(src):

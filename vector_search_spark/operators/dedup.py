@@ -16,6 +16,16 @@ At 100 TB the all-pairs comparisons only ever happen inside LSH buckets /
 blocking groups; every strategy is a constant number of shuffles on keys
 that Catalyst can hash-partition. Skewed buckets (a very common shingle)
 are handled by AQE skew-join splitting.
+
+Each MinHash step is written once, as a module-level helper that the
+Arrow stages and plans share: ``_shingles`` (shingle split),
+``_hash_rows`` (portable poly hash with its non-ASCII fallback),
+``_perm_min`` (permutation-min), ``_band_keys`` (the (id, band, key)
+explode), ``_bucket_pairs`` and ``_join_sets`` (bucket self-join, set
+join-back for the re-rank). The two persisted ingestion-time indexes
+(MinHash: ``bands/`` + ``sets/``; embedding: ``bands/`` + ``vecs/``) are
+``operators.index_log`` directories with their settings and schemas in
+the marker, and both are probed by the one ``_probe_pairs``.
 """
 
 from __future__ import annotations
@@ -27,7 +37,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import distinct_tokens, minhash_signature, poly_hash
+from ..functions.text import (
+    HASH_MIX,
+    HASH_MOD,
+    distinct_tokens,
+    minhash_signature,
+    poly_hash,
+)
 from ..functions.vector import cosine_sim, l2_norm
 
 # Probe-path broadcast gate (VERDICT r13 #2): a delivery is
@@ -48,6 +64,145 @@ PROBE_BROADCAST_MAX_BYTES = 128 << 20
 # seeded plane bank of this size keeps the masked low-k bits identical
 # to a fixed k-plane layout (make_planes streams one RNG draw per plane).
 ADAPTIVE_PLANES_MAX = 20
+
+
+def _shingles(text: str | None, n: int) -> list[str]:
+    """Distinct n-word shingles of ``text`` in first-seen order; NULL text
+    or fewer than ``n`` words gives none (such a row can't match
+    anything, and must not kill the task)."""
+    w = text.split(" ") if text is not None else []
+    return list(
+        dict.fromkeys(" ".join(w[i : i + n]) for i in range(len(w) - n + 1))
+    )
+
+
+def _poly_fold_batch(flat: list[bytes]) -> np.ndarray:
+    """Vectorized portable polynomial hash over a batch of byte strings:
+    pad to a (N, maxlen) matrix and fold column-by-column — maxlen vector
+    passes instead of N×len scalar evaluations. Bit-identical to
+    ``functions.text.poly_hash`` for ASCII input (byte == codepoint)."""
+    n = len(flat)
+    lens = np.fromiter((len(s) for s in flat), dtype=np.int64, count=n)
+    max_len = int(lens.max()) if n else 0
+    m = np.zeros((n, max_len), dtype=np.int64)
+    for i, s in enumerate(flat):
+        if s:
+            m[i, : len(s)] = np.frombuffer(s, dtype=np.uint8)
+    h = np.zeros(n, dtype=np.int64)
+    for j in range(max_len):
+        h = np.where(j < lens, (h * 31 + m[:, j]) % HASH_MOD, h)
+    return ((h + 13) * HASH_MIX) % HASH_MOD
+
+
+def _py_poly(s: str) -> int:
+    h = 0
+    for ch in s:
+        h = (h * 31 + ord(ch)) % HASH_MOD
+    return ((h + 13) * HASH_MIX) % HASH_MOD
+
+
+def _hash_rows(rows) -> list[np.ndarray]:
+    """Portable poly hash of every string of every row, one int64 array
+    per row: one ``_poly_fold_batch`` over the whole batch's UTF-8 bytes,
+    then an exact per-codepoint fold for each non-ASCII string (matching
+    ``F.ascii`` semantics)."""
+    flat = [s for row in rows for s in row]
+    h = _poly_fold_batch([s.encode("utf-8") for s in flat])
+    for i, s in enumerate(flat):
+        if not s.isascii():
+            h[i] = _py_poly(s)
+    out, off = [], 0
+    for row in rows:
+        out.append(h[off : off + len(row)])
+        off += len(row)
+    return out
+
+
+def _perm_params(n_hashes: int) -> tuple[np.ndarray, np.ndarray]:
+    """The (a, b) of the ``n_hashes`` MinHash permutations a·h + b — the
+    ``functions.text.minhash_perm`` constants."""
+    a = ((2 * np.arange(n_hashes, dtype=np.int64) + 1) * HASH_MIX) % HASH_MOD
+    return a, np.arange(n_hashes, dtype=np.int64) * 40503 + 7
+
+
+def _perm_min(h: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """MinHash signature of one non-empty hash set (h·a < 1.02e18 < 2^63:
+    exact in int64)."""
+    return ((h[None, :] * a[:, None] + b[:, None]) % HASH_MOD).min(axis=1)
+
+
+def _band_keys(
+    sigs: DataFrame, n_hashes: int, bands: int, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """(id, *keep, band, key) rows of a MinHash signature relation: ``sig``
+    split into ``bands`` bands of ``n_hashes // bands`` slots, each key
+    the comma-joined slot values (the oracle's band key)."""
+    r = n_hashes // bands
+    bk = F.explode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda b: F.struct(
+                b.alias("band"),
+                F.concat_ws(
+                    ",",
+                    F.transform(
+                        F.slice("sig", b * r + 1, r), lambda x: x.cast("string")
+                    ),
+                ).alias("key"),
+            ),
+        )
+    )
+    return sigs.select("id", *keep, bk.alias("bk")).select(
+        "id", *keep, "bk.band", "bk.key"
+    )
+
+
+def _bucket_pairs(banded: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+    """Candidate pairs (id_a < id_b) from LSH buckets via an ids-only
+    self-join on (band, key, *keep). A sort-merge join spills a
+    pathological hot bucket to disk; materializing a bucket's pairs as one
+    array value would be O(bucket²) memory in a single row."""
+    on = ["band", "key", *keep]
+    return (
+        banded.select(F.col("id").alias("id_a"), *on)
+        .join(banded.select(F.col("id").alias("id_b"), *on), on)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _join_sets(
+    pairs: DataFrame, t: DataFrame, cols: tuple[str, ...] = ("tk",)
+) -> DataFrame:
+    """``pairs`` (id_a, id_b) with each side's ``cols`` of ``t`` joined
+    back by id as ``<col>_a`` / ``<col>_b`` — the re-rank input, so only
+    candidates ever carry the wide set rows."""
+    for s in ("a", "b"):
+        pairs = pairs.join(
+            t.select(
+                F.col("id").alias(f"id_{s}"),
+                *[F.col(c).alias(f"{c}_{s}") for c in cols],
+            ),
+            f"id_{s}",
+        )
+    return pairs
+
+
+def _jaccard(a: str, b: str):
+    """Exact set Jaccard of two array columns."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    return inter / F.size(F.array_union(a, b))
+
+
+def _keep_jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) of the (id_a, id_b, tk_a, tk_b) rows whose
+    Jaccard reaches ``threshold``."""
+    return (
+        pairs.withColumn("jaccard", _jaccard("tk_a", "tk_b"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
 
 
 def _unit_sets(
@@ -81,8 +236,6 @@ def _unit_sets(
         )
     from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
-    from ..functions.text import HASH_MIX, HASH_MOD
-
     from ..utils import fan_out
 
     src = fan_out(
@@ -102,65 +255,14 @@ def _unit_sets(
 
     def sh(batches):
         for pdf in batches:
-            out = []
-            for t in pdf["_text"]:
-                # NULL text → empty unit set (a null row must not kill the
-                # task; it simply can't match anything)
-                w = t.split(" ") if t is not None else []
-                if len(w) < n:
-                    out.append([])
-                else:
-                    out.append(
-                        list(
-                            dict.fromkeys(
-                                " ".join(w[i : i + n]) for i in range(len(w) - n + 1)
-                            )
-                        )
-                    )
+            out = [_shingles(t, n) for t in pdf["_text"]]
             if hashed:
-                flat = [s.encode("utf-8") for row in out for s in row]
-                if flat:
-                    h = _poly_fold_batch(flat, HASH_MOD, HASH_MIX)
-                    flat_str = [s for row in out for s in row]
-                    for i, s in enumerate(flat):
-                        if any(c >= 128 for c in s):
-                            h[i] = _py_poly(flat_str[i], HASH_MOD, HASH_MIX)
-                    hashed_rows, off = [], 0
-                    for row in out:
-                        hashed_rows.append(h[off : off + len(row)])
-                        off += len(row)
-                    out = hashed_rows
-            cols = {"id": pdf["id"], "tk": out}
-            for c in extra_cols:
-                cols[c] = pdf[c]
-            yield pd.DataFrame(cols)
+                out = _hash_rows(out)
+            yield pd.DataFrame(
+                {"id": pdf["id"], "tk": out, **{c: pdf[c] for c in extra_cols}}
+            )
 
     return src.mapInPandas(sh, schema)
-
-
-def _poly_fold_batch(flat: list[bytes], HASH_MOD: int, HASH_MIX: int) -> np.ndarray:
-    """Vectorized portable polynomial hash over a batch of byte strings:
-    pad to a (N, maxlen) matrix and fold column-by-column — maxlen vector
-    passes instead of N×len scalar evaluations. Bit-identical to
-    ``functions.text.poly_hash`` for ASCII input (byte == codepoint)."""
-    n = len(flat)
-    lens = np.fromiter((len(s) for s in flat), dtype=np.int64, count=n)
-    max_len = int(lens.max()) if n else 0
-    m = np.zeros((n, max_len), dtype=np.int64)
-    for i, s in enumerate(flat):
-        if s:
-            m[i, : len(s)] = np.frombuffer(s, dtype=np.uint8)
-    h = np.zeros(n, dtype=np.int64)
-    for j in range(max_len):
-        h = np.where(j < lens, (h * 31 + m[:, j]) % HASH_MOD, h)
-    return ((h + 13) * HASH_MIX) % HASH_MOD
-
-
-def _py_poly(s: str, HASH_MOD: int, HASH_MIX: int) -> int:
-    h = 0
-    for ch in s:
-        h = (h * 31 + ord(ch)) % HASH_MOD
-    return ((h + 13) * HASH_MIX) % HASH_MOD
 
 
 def _minhash_signatures_from_tokens(
@@ -173,17 +275,12 @@ def _minhash_signatures_from_tokens(
     in one Arrow-batched ``mapInPandas`` stage. Same int64 arithmetic as the
     ``functions.text`` expressions (bit-identical, oracle-portable); the
     vectorized fold replaces ~n_tokens × len interpreted Catalyst lambda
-    evaluations per row. ASCII fast path folds utf-8 bytes; any token with
-    a non-ASCII byte falls back to an exact per-codepoint fold (matching
-    ``F.ascii`` semantics). A plan node, not an expression, so the
+    evaluations per row. A plan node, not an expression, so the
     optimizer can never inline Python into a generator/aggregate."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    from ..functions.text import HASH_MIX, HASH_MOD
-
     extra_cols = extra_cols or []
-    a = ((2 * np.arange(n_hashes, dtype=np.int64) + 1) * HASH_MIX) % HASH_MOD
-    b = np.arange(n_hashes, dtype=np.int64) * 40503 + 7
+    a, b = _perm_params(n_hashes)
     schema = StructType(
         [
             t.schema["id"],
@@ -195,59 +292,48 @@ def _minhash_signatures_from_tokens(
     def compute(batches):
         for pdf in batches:
             rows = [r if r is not None else [] for r in pdf["tk"]]
-            counts = [len(r) for r in rows]
-            if prehashed:
-                h = np.fromiter(
-                    (v for row in rows for v in row),
-                    dtype=np.int64,
-                    count=sum(counts),
-                )
-            else:
-                flat_str = [s for row in rows for s in row]
-                flat = [s.encode("utf-8") for s in flat_str]
-                if flat:
-                    h = _poly_fold_batch(flat, HASH_MOD, HASH_MIX)
-                    non_ascii = [
-                        i for i, s in enumerate(flat) if any(c >= 128 for c in s)
-                    ]
-                    for i in non_ascii:
-                        h[i] = _py_poly(flat_str[i], HASH_MOD, HASH_MIX)
-                else:
-                    h = np.empty(0, dtype=np.int64)
-            sigs = []
-            off = 0
-            for n in counts:
-                if n == 0:
-                    sigs.append([None] * n_hashes)  # mirror array_min([]) = NULL
-                else:
-                    hh = h[off : off + n]
-                    # h*a < 1.02e18 < 2^63: exact in int64
-                    sigs.append(
-                        ((hh[None, :] * a[:, None] + b[:, None]) % HASH_MOD).min(axis=1)
-                    )
-                off += n
-            cols = {"id": pdf["id"], "sig": sigs}
-            for c in extra_cols:
-                cols[c] = pdf[c]
-            yield pd.DataFrame(cols)
+            hs = (
+                [np.asarray(r, dtype=np.int64) for r in rows]
+                if prehashed
+                else _hash_rows(rows)
+            )
+            # an empty set mirrors array_min([]) = NULL in every slot
+            sigs = [_perm_min(h, a, b) if len(h) else [None] * n_hashes for h in hs]
+            yield pd.DataFrame(
+                {"id": pdf["id"], "sig": sigs, **{c: pdf[c] for c in extra_cols}}
+            )
 
     return t.mapInPandas(compute, schema)
 
 
-def _bucket_pairs(banded: DataFrame) -> DataFrame:
-    """Candidate pairs from LSH buckets via an ids-only self-join on
-    (band, key). The banded relation must be persisted by the caller so
-    the signature plan still evaluates once. A sort-merge join spills a
-    pathological hot bucket to disk; materializing a bucket's pairs as one
-    array value would be O(bucket²) memory in a single row."""
-    a = banded.select(F.col("id").alias("id_a"), "band", "key")
-    b = banded.select(F.col("id").alias("id_b"), "band", "key")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+def _lsh_candidates(
+    t: DataFrame,
+    n_hashes: int,
+    bands: int,
+    prehashed: bool,
+    keep: tuple[str, ...] = (),
+    hash_fn: str = "poly",
+) -> tuple[DataFrame, DataFrame]:
+    """MinHash-LSH candidates of a non-empty (id, tk, *keep) unit-set
+    relation, with both sides' sets joined back: (id_a, id_b, tk_a, tk_b),
+    plus the persisted band table the caller releases (``_own_caches``).
+    Pairs must share a bucket and every ``keep`` column. The only shuffle
+    before the re-rank is on (band, key) and carries just the narrow band
+    rows; the band table is persisted because the bucket self-join reads
+    it twice, so the signature stage runs once."""
+    from pyspark import StorageLevel
+
+    if hash_fn == "poly":
+        # one Arrow stage: base hashes (unless pre-hashed) + all slots
+        sigs = _minhash_signatures_from_tokens(
+            t.select("id", "tk", *keep), n_hashes, keep, prehashed
+        )
+    else:
+        sigs = t.withColumn("sig", minhash_signature("tk", n_hashes, hash_fn))
+    banded = _band_keys(sigs, n_hashes, bands, keep).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
+    return _join_sets(_bucket_pairs(banded, keep), t), banded
 
 
 def exact_dup_stats(df: DataFrame, text_col: str, by: list[str]) -> DataFrame:
@@ -292,77 +378,7 @@ def _jaccard_pairs_exact(
     cond = cond & (
         F.least("_sz_a", "_sz_b") >= F.lit(threshold) * F.greatest("_sz_a", "_sz_b")
     )
-    inter = F.size(F.array_intersect("tk_a", "tk_b"))
-    union = F.size(F.array_union("tk_a", "tk_b"))
-    return (
-        a.join(b, cond)
-        .withColumn("jaccard", inter.cast("double") / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _jaccard_pairs_lsh_blocked(
-    t: DataFrame,
-    block_cols: list[str],
-    threshold: float,
-    n_hashes: int,
-    bands: int,
-    hashed: bool,
-) -> DataFrame:
-    """MinHash-banded candidate generation scoped WITHIN blocking keys, then
-    exact Jaccard re-rank — the degraded path for pathological blocks.
-    Precision is exact (same threshold filter); recall is the standard LSH
-    probability for pairs near the threshold."""
-    rows_per_band = n_hashes // bands
-    # One Arrow stage either way: pre-hashed units skip the poly fold and go
-    # straight to the permutation-min (same int64 math, same band keys).
-    sig_src = _minhash_signatures_from_tokens(
-        t.select("id", "tk", *block_cols),
-        n_hashes,
-        extra_cols=block_cols,
-        prehashed=hashed,
-    )
-    banded = sig_src.select(
-        "id",
-        *block_cols,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    ).alias("key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("id", *block_cols, "bk.band", "bk.key")
-    a = banded.select(F.col("id").alias("id_a"), *block_cols, "band", "key")
-    b = banded.select(
-        F.col("id").alias("id_b"),
-        *[F.col(c).alias(f"_b_{c}") for c in block_cols],
-        "band",
-        "key",
-    )
-    cands = a.join(b, ["band", "key"]).filter(F.col("id_a") < F.col("id_b"))
-    for c in block_cols:
-        cands = cands.filter(F.col(c) == F.col(f"_b_{c}"))
-    cands = cands.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
-    rerank = cands.join(
-        t.select(F.col("id").alias("id_a"), F.col("tk").alias("tk_a")), "id_a"
-    ).join(t.select(F.col("id").alias("id_b"), F.col("tk").alias("tk_b")), "id_b")
-    inter = F.size(F.array_intersect("tk_a", "tk_b"))
-    union = F.size(F.array_union("tk_a", "tk_b"))
-    return (
-        rerank.withColumn("jaccard", inter.cast("double") / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _keep_jaccard(a.join(b, cond), threshold)
 
 
 def _own_caches(result: DataFrame, persisted: list[DataFrame]) -> DataFrame:
@@ -390,7 +406,6 @@ def jaccard_pairs(
     max_block_size: int | None = 1_000,
     n_hashes: int = 16,
     bands: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram/token-set Jaccard over pairs within blocking keys.
 
@@ -409,11 +424,11 @@ def jaccard_pairs(
     ON by default (1000 → ≤ ~500k comparisons per exact block): a 100 TB
     caller using defaults gets bounded work; pass ``max_block_size=None``
     to explicitly request exact-everywhere semantics (the oracle-checked
-    gate rows do).
+    gate rows do). Oversized blocks keep exact precision (same threshold
+    filter) and get the standard LSH recall for pairs near the threshold.
 
     The guarded path materializes its result and releases its internal
-    caches before returning (``materialize=False`` keeps the lazy plan; the
-    caller then owns cache cleanup via ``spark.catalog.clearCache``).
+    caches before returning.
     """
     t = _unit_sets(
         df, text_col, id_col, shingle_n, hashed=hashed, extra_cols=block_cols
@@ -431,12 +446,13 @@ def jaccard_pairs(
     # Empty unit sets can't reach any positive threshold but would share one
     # hot "" band key — drop them before banding.
     big = t.filter((F.col("_bn") > max_block_size) & (F.size("tk") > 0)).drop("_bn")
-    exact = _jaccard_pairs_exact(small, block_cols, threshold)
-    approx = _jaccard_pairs_lsh_blocked(
-        big, block_cols, threshold, n_hashes, bands, hashed
+    # pre-hashed units skip the poly fold and go straight to the
+    # permutation-min (same int64 math, same band keys)
+    rerank, banded = _lsh_candidates(big, n_hashes, bands, hashed, tuple(block_cols))
+    out = _jaccard_pairs_exact(small, block_cols, threshold).unionByName(
+        _keep_jaccard(rerank, threshold)
     )
-    out = exact.unionByName(approx)
-    return _own_caches(out, [t]) if materialize else out
+    return _own_caches(out, [t, banded])
 
 
 def minhash_lsh_pairs(
@@ -448,7 +464,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     hash_fn: str = "poly",
     shingle_n: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash + LSH near-dup detection (shingle → minhash → band →
     bucket-join → exact re-rank).
@@ -460,10 +475,9 @@ def minhash_lsh_pairs(
     only for the (small) candidate set, so the wide rows never shuffle with
     the banding fan-out.
 
-    The operator owns its two internal persists: by default the (small)
-    pair result is materialized and the caches are released before
-    returning, so repeated invocations leave storage memory flat. Pass
-    ``materialize=False`` for a fully lazy plan (caller owns cleanup).
+    The operator owns its two internal persists: the (small) pair result
+    is materialized and the caches are released before returning, so
+    repeated invocations leave storage memory flat.
 
     On the poly+shingle path the unit sets are HASHED once up front
     (``_unit_sets(hashed=True)``): the signature stage reuses the folds
@@ -476,60 +490,22 @@ def minhash_lsh_pairs(
     ~30k distinct shingles per set by birthday bound), and the oracle
     folds the same hashes, so parity stays bit-exact regardless.
     """
-    rows_per_band = n_hashes // bands
     # The (id, shingle-set) relation feeds three consumers (signature path +
     # both sides of the re-rank join); persist it so shingling runs once.
     # MEMORY_AND_DISK: at cluster scale this spills instead of OOMing.
     from pyspark import StorageLevel
 
     use_hashed = hash_fn == "poly" and bool(shingle_n)
-    t_cached = _unit_sets(df, text_col, id_col, shingle_n, hashed=use_hashed).persist(
+    t = _unit_sets(df, text_col, id_col, shingle_n, hashed=use_hashed).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     # Empty unit sets (short/NULL docs) can't match anything, but their
     # all-NULL signatures would concat_ws to the SAME key "" and pile into
     # one O(k²) hot bucket of doomed candidates — drop them up front.
-    t = t_cached.filter(F.size("tk") > 0)
-    if hash_fn == "poly":
-        # One Arrow stage computes base hashes + all signature slots.
-        sig_src = _minhash_signatures_from_tokens(
-            t.select("id", "tk"), n_hashes, prehashed=use_hashed
-        )
-    else:
-        sig_src = t.withColumn("sig", minhash_signature("tk", n_hashes, hash_fn))
-    banded = sig_src.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    ).alias("key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
-    # narrow (id, band, key) rows; persisted so the Python signature stage
-    # runs once even though the candidate self-join reads it twice
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    cands = _bucket_pairs(banded)
-    rerank = cands.join(
-        t.select(F.col("id").alias("id_a"), F.col("tk").alias("tk_a")), "id_a"
-    ).join(t.select(F.col("id").alias("id_b"), F.col("tk").alias("tk_b")), "id_b")
-    inter = F.size(F.array_intersect("tk_a", "tk_b"))
-    union = F.size(F.array_union("tk_a", "tk_b"))
-    out = (
-        rerank.withColumn("jaccard", inter.cast("double") / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    rerank, banded = _lsh_candidates(
+        t.filter(F.size("tk") > 0), n_hashes, bands, use_hashed, hash_fn=hash_fn
     )
-    return _own_caches(out, [t_cached, banded]) if materialize else out
+    return _own_caches(_keep_jaccard(rerank, threshold), [t, banded])
 
 
 def dup_clusters(
@@ -876,7 +852,6 @@ def embedding_neardup_pairs(
     n_planes: int = 6,
     dim: int = 64,
     seed: int = 42,
-    materialize: bool = True,
     n_tables: int = 1,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within blocking keys.
@@ -1064,7 +1039,7 @@ def embedding_neardup_pairs(
             big, ["blk", "_tbl", "_sig"]
         ).dropDuplicates(["block", "id_a", "id_b"])
     out = exact.unionByName(approx).filter(F.col("cos") >= threshold)
-    return _own_caches(out, [t]) if materialize else out
+    return _own_caches(out, [t])
 
 
 def _span_grams(
@@ -1260,39 +1235,15 @@ def containment_pairs(
     hashed once up front when shingling (same move as minhash_lsh_pairs:
     the signature stage reuses the folds, the re-rank intersects int64
     sets)."""
-    rows_per_band = n_hashes // bands
     from pyspark import StorageLevel
 
     use_hashed = bool(shingle_n)
-    t_cached = _unit_sets(df, text_col, id_col, shingle_n, hashed=use_hashed).persist(
+    t = _unit_sets(df, text_col, id_col, shingle_n, hashed=use_hashed).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    t = t_cached.filter(F.size("tk") > 0)
-    sig_src = _minhash_signatures_from_tokens(
-        t.select("id", "tk"), n_hashes, prehashed=use_hashed
+    rerank, banded = _lsh_candidates(
+        t.filter(F.size("tk") > 0), n_hashes, bands, use_hashed
     )
-    banded = sig_src.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    ).alias("key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.key").persist(StorageLevel.MEMORY_AND_DISK)
-    cands = _bucket_pairs(banded)
-    rerank = cands.join(
-        t.select(F.col("id").alias("id_a"), F.col("tk").alias("tk_a")), "id_a"
-    ).join(t.select(F.col("id").alias("id_b"), F.col("tk").alias("tk_b")), "id_b")
     inter = F.size(F.array_intersect("tk_a", "tk_b")).cast("double")
     out = (
         rerank.withColumn("c_ab", inter / F.size("tk_a"))
@@ -1300,7 +1251,7 @@ def containment_pairs(
         .filter(F.greatest("c_ab", "c_ba") >= threshold)
         .select("id_a", "id_b", "c_ab", "c_ba")
     )
-    return _own_caches(out, [t_cached, banded])
+    return _own_caches(out, [t, banded])
 
 
 # ---------------------------------------------------------------------------
@@ -1412,8 +1363,18 @@ def bloom_member(col: str, m_bits: int, k: int):
 
 
 # ---------------------------------------------------------------------------
-# Persisted MinHash signature index — dedup at INGESTION time
+# Persisted banded-LSH indexes — dedup at INGESTION time
 # ---------------------------------------------------------------------------
+#
+# Both index families are ``operators.index_log`` directories (commit
+# protocol, layout and crash story there) whose base and deltas each hold
+# ``bands/`` — the (id, band, key) bucket table partitioned by band — and
+# one payload relation the exact re-rank reads: ``sets/`` (id, tk) for the
+# MinHash index, ``vecs/`` (id, v, nrm) for the embedding index. The base
+# commit records the banding settings and both relations' schemas in the
+# marker meta; every read passes the recorded schema (no inference job,
+# and an index written from an empty corpus stays readable), and every
+# probe, insert or compaction with other settings raises ``ValueError``.
 
 
 def _shingle_sign_units(
@@ -1426,18 +1387,16 @@ def _shingle_sign_units(
     """Fused text → (id, sig, tk) in ONE Arrow crossing: shingle, portable
     poly-hash, and MinHash permutation-min together. Bit-identical to
     ``_unit_sets(hashed=True)`` followed by
-    ``_minhash_signatures_from_tokens(prehashed=True)`` (same string
-    dedup, same ``_poly_fold_batch`` hash with the non-ASCII exact
-    fallback, same per-seed min), but one mapInPandas stage instead of
-    two: each Python stage crossing costs ~0.25 s of fixed Arrow/worker
-    overhead regardless of row count (measured: identity mapInPandas over
-    a 1000-doc batch = 0.24 s, the shingle work itself = 0.02 s), and the
-    persisted-index serve path's latency was dominated by those
-    crossings, not by work. Rows with zero shingles are dropped (mirrors
-    ``filter(size(tk) > 0)``)."""
+    ``_minhash_signatures_from_tokens(prehashed=True)`` (the same
+    ``_shingles``, ``_hash_rows`` and ``_perm_min`` helpers), but one
+    mapInPandas stage instead of two: each Python stage crossing costs
+    ~0.25 s of fixed Arrow/worker overhead regardless of row count
+    (measured: identity mapInPandas over a 1000-doc batch = 0.24 s, the
+    shingle work itself = 0.02 s), and the persisted-index serve path's
+    latency was dominated by those crossings, not by work. Rows with zero
+    shingles are dropped (mirrors ``filter(size(tk) > 0)``)."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    from ..functions.text import HASH_MIX, HASH_MOD
     from ..utils import fan_out
 
     src = fan_out(
@@ -1451,55 +1410,167 @@ def _shingle_sign_units(
         ]
     )
     n = shingle_n
-    a = ((2 * np.arange(n_hashes, dtype=np.int64) + 1) * HASH_MIX) % HASH_MOD
-    b = np.arange(n_hashes, dtype=np.int64) * 40503 + 7
+    a, b = _perm_params(n_hashes)
 
     def compute(batches):
         for pdf in batches:
-            out = []
-            for t in pdf["_text"]:
-                w = t.split(" ") if t is not None else []
-                if len(w) < n:
-                    out.append([])
-                else:
-                    out.append(
-                        list(
-                            dict.fromkeys(
-                                " ".join(w[i : i + n])
-                                for i in range(len(w) - n + 1)
-                            )
-                        )
-                    )
-            flat_str = [s for row in out for s in row]
-            flat = [s.encode("utf-8") for s in flat_str]
-            if flat:
-                h = _poly_fold_batch(flat, HASH_MOD, HASH_MIX)
-                for i, s in enumerate(flat):
-                    if any(c >= 128 for c in s):
-                        h[i] = _py_poly(flat_str[i], HASH_MOD, HASH_MIX)
-            else:
-                h = np.empty(0, dtype=np.int64)
-            keep, sigs, tks = [], [], []
-            off = 0
-            for j, row in enumerate(out):
-                cnt = len(row)
-                if cnt == 0:
-                    continue
-                hh = h[off : off + cnt]
-                off += cnt
-                # h*a < 1.02e18 < 2^63: exact in int64
-                sigs.append(
-                    ((hh[None, :] * a[:, None] + b[:, None]) % HASH_MOD).min(
-                        axis=1
-                    )
-                )
-                tks.append(hh)
-                keep.append(j)
+            sets = [_shingles(t, n) for t in pdf["_text"]]
+            keep = [j for j, s in enumerate(sets) if s]
+            hs = _hash_rows([sets[j] for j in keep])
             yield pd.DataFrame(
-                {"id": pdf["id"].iloc[keep], "sig": sigs, "tk": tks}
+                {
+                    "id": pdf["id"].iloc[keep],
+                    "sig": [_perm_min(h, a, b) for h in hs],
+                    "tk": hs,
+                }
             )
 
     return src.mapInPandas(compute, schema)
+
+
+def _index_writer(
+    bands: DataFrame,
+    payload: DataFrame,
+    n_bands: int,
+    meta: dict | None = None,
+    payload_dir: str = "vecs",
+):
+    """``IndexLog`` write callback storing ``bands/`` (partitioned by
+    band, one writer task per band) and the payload relation under
+    ``payload_dir`` (a handful of files). A base commit passes ``meta``
+    (the banding settings) and the callback adds both relations' schemas
+    to it, keyed by directory, so every later read passes an explicit
+    schema."""
+    bands = bands.repartition(n_bands, "band")
+    payload = payload.coalesce(8)
+
+    def write(d: str) -> dict | None:
+        bands.write.mode("overwrite").partitionBy("band").parquet(
+            f"{d}/bands"
+        )
+        payload.write.mode("overwrite").parquet(f"{d}/{payload_dir}")
+        if meta is None:
+            return None
+        return {**meta, "schema": {
+            "bands": bands.schema.json(), payload_dir: payload.schema.json(),
+        }}
+
+    return write
+
+
+def _open_index(path: str, **settings):
+    """(log, marker) of the index at ``path``, after checking the caller's
+    banding ``settings`` against the recorded ones."""
+    from .index_log import IndexLog
+
+    log = IndexLog(path)
+    m = log.read()
+    if m is None:
+        raise FileNotFoundError(f"no index committed at {path}")
+    for key, value in settings.items():
+        if m["meta"].get(key) != value:
+            raise ValueError(
+                f"{key}={value} differs from the {key}={m['meta'].get(key)} "
+                f"the index at {path} was written with"
+            )
+    return log, m
+
+
+def _read_index(
+    spark, log, m: dict, below: int | None, payload_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(bands, payload) of the base plus the committed deltas below
+    ``below`` (None = every committed delta). Each root is its own scan
+    (Spark refuses one scan over several band-partitioned roots), read
+    with the schema the base commit recorded in the marker."""
+    import json
+    from functools import reduce
+
+    from pyspark.sql.types import StructType
+
+    roots = [log.base(m)] + [d for _, d in log.deltas(m, below)]
+
+    def scan(sub: str) -> DataFrame:
+        schema = StructType.fromJson(json.loads(m["meta"]["schema"][sub]))
+        return reduce(DataFrame.unionByName, (
+            spark.read.schema(schema).parquet(f"{r}/{sub}")
+            .select(*schema.fieldNames())
+            for r in roots
+        ))
+
+    return scan("bands"), scan(payload_dir)
+
+
+def _probe_pairs(
+    spark,
+    path: str,
+    settings: dict,
+    batch: DataFrame,
+    row_bytes: int,
+    band_keys,
+    payload_dir: str,
+    batch_payload: list,
+    score: tuple,
+    threshold: float,
+    max_batch_id: int | None = None,
+) -> DataFrame:
+    """The one persisted-index probe: ``batch`` (id, ...) against the
+    index at ``path`` → (new_id, corpus_id, <score> >= threshold).
+
+    Settings check → marker read → batch count and broadcast gate → band
+    join → distinct candidates → payload join on both sides → score. The
+    batch is cut by a lazy checkpoint, so the banding branch and the
+    re-rank branch, which run in SEPARATE jobs, both read it instead of
+    re-running its Arrow pass; the count that funds the gate materializes
+    it. ``band_keys`` maps the batch to (id, band, key); the corpus side's
+    payload columns are suffixed ``_c``, ``batch_payload`` names the batch
+    side's (suffixed ``_n``), and ``score`` is the (name, Column) over
+    both.
+
+    Join hints are GATED: the banded batch, the candidate list and the
+    batch payload broadcast against the corpus-sized scans only while
+    rows × ``row_bytes`` stays under :data:`PROBE_BROADCAST_MAX_BYTES`
+    (read at call time; rationale there), else the plan is unhinted.
+    Under the gate the hints matter: AQE sizes joins from PRE-filter
+    relation stats (CLAUDE.md, the v_matryoshka_knn bite) and would plan
+    sort-merge joins that shuffle the whole index. The candidate list is
+    a join OUTPUT (delivery × bucket occupancy) whose boundedness rides
+    the band-sizing contract, so it shares the batch gate rather than
+    paying its own count job."""
+    log, m = _open_index(path, **settings)
+    idx_bands, idx_payload = _read_index(spark, log, m, max_batch_id, payload_dir)
+    idx_bands = idx_bands.select(F.col("id").alias("corpus_id"), "band", "key")
+    idx_payload = idx_payload.select(
+        F.col("id").alias("corpus_id"),
+        *[F.col(c).alias(f"{c}_c") for c in idx_payload.columns if c != "id"],
+    )
+    src = batch.localCheckpoint(eager=False)
+    n_batch = src.count()  # materializes the lazy checkpoint too
+    hint = (
+        F.broadcast
+        if n_batch * row_bytes <= PROBE_BROADCAST_MAX_BYTES
+        else (lambda df: df)
+    )
+    b_banded = band_keys(src).select(
+        F.col("id").alias("new_id"), "band", "key"
+    )
+    cands = (
+        idx_bands.join(hint(b_banded), ["band", "key"])
+        .select("new_id", "corpus_id")
+        .distinct()
+    )
+    name, expr = score
+    return (
+        hint(cands)
+        .join(idx_payload, "corpus_id")
+        .join(
+            hint(src.select(F.col("id").alias("new_id"), *batch_payload)),
+            "new_id",
+        )
+        .withColumn(name, expr)
+        .filter(F.col(name) >= threshold)
+        .select("new_id", "corpus_id", name)
+    )
 
 
 def minhash_index_write(
@@ -1510,16 +1581,21 @@ def minhash_index_write(
     n_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    write_partitions: int | None = None,
 ) -> None:
     """Write the corpus' MinHash LSH index to disk: ``bands/`` — the
     (band, key, id) bucket table partitioned by band — and ``sets/`` —
-    the per-doc shingle-hash sets the exact re-rank needs. Built once
-    per corpus (the batch job); incoming batches then dedup against it
-    via :func:`minhash_probe_pairs` WITHOUT recomputing anything over
-    the corpus — the ingestion-time dedup shape: at 100 TB the index is
-    the standing asset and each delivery probes it."""
-    rows_per_band = n_hashes // bands
+    the per-doc shingle-hash sets the exact re-rank needs — as one base
+    commit of an ``operators.index_log`` directory, with ``n_hashes``,
+    ``bands`` and ``shingle_n`` recorded in the marker. Writing again to
+    the same ``path`` replaces the index (the old base is collected once
+    the marker names the new one; a crash mid-write leaves the old index
+    visible). Built once per corpus (the batch job); incoming batches
+    then dedup against it via :func:`minhash_probe_pairs` WITHOUT
+    recomputing anything over the corpus — the ingestion-time dedup
+    shape: at 100 TB the index is the standing asset and each delivery
+    probes it."""
+    from .index_log import IndexLog
+
     # ONE fused Arrow pass (shingle + hash + sign), checkpointed: the
     # bands write and the sets write are two separate actions — without
     # the checkpoint the Python stage runs twice (measured 0.7s/pass at
@@ -1527,42 +1603,12 @@ def minhash_index_write(
     t = _shingle_sign_units(
         df, text_col, id_col, shingle_n, n_hashes
     ).localCheckpoint(eager=True)
-    sig_src = t
-    banded = sig_src.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    ).alias("key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
-    # repartition before the partitioned write: otherwise every upstream
-    # partition emits a file per band value (32x4 tiny files at fixture
-    # scale). Default = one task per band (hash-by-band caps non-empty
-    # partitions at `bands` regardless of a larger count); a 100 TB build
-    # passes ``write_partitions`` and gets (band, id)-hashed tasks so
-    # writer parallelism is NOT capped at the band count — files per
-    # band dir then scale with the task count, which is what a corpus
-    # that size wants anyway.
-    if write_partitions:
-        banded = banded.repartition(write_partitions, "band", "id")
-    else:
-        banded = banded.repartition(bands, "band")
-    banded.write.mode("overwrite").partitionBy("band").parquet(
-        f"{path}/bands"
-    )
-    t.select("id", "tk").coalesce(8).write.mode("overwrite").parquet(
-        f"{path}/sets"
+    settings = dict(n_hashes=n_hashes, bands=bands, shingle_n=shingle_n)
+    IndexLog(path).commit_base(
+        _index_writer(
+            _band_keys(t, n_hashes, bands), t.select("id", "tk"), bands,
+            meta=settings, payload_dir="sets",
+        )
     )
 
 
@@ -1576,97 +1622,28 @@ def minhash_probe_pairs(
     n_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    broadcast_max_bytes: int | None = None,
 ) -> DataFrame:
-    """Dedup an incoming batch against a persisted corpus index: batch
-    rows are shingled/signed (O(batch) only), bucket-joined against the
-    on-disk band table, and candidates re-rank with exact Jaccard over
-    the STORED corpus sets — corpus text is never read, let alone
-    re-shingled. Returns (new_id, corpus_id, jaccard >= threshold).
-
-    Join hints are GATED, not unconditional: the banded batch and its
-    candidate list broadcast against the corpus-sized index scans only
-    while the batch's estimated footprint (rows × (signature + a
-    conservative shingle-set allowance)) stays under
-    ``broadcast_max_bytes`` (default :data:`PROBE_BROADCAST_MAX_BYTES`).
-    A corpus-scale delivery therefore falls back to the unhinted
-    AQE/shuffle plan instead of OOMing — an explicit hint would be
-    honored at any size. The candidate list is a join OUTPUT
-    (delivery × bucket occupancy); its boundedness rides the band-sizing
-    contract (buckets ~target-sized when ``band_bits`` ≈
-    ceil_log2(corpus / target_bucket)), so it shares the batch gate
-    rather than getting its own count job."""
-    rows_per_band = n_hashes // bands
-    idx_bands = spark.read.parquet(f"{path}/bands").select(
-        F.col("id").alias("corpus_id"), "band", "key"
-    )
-    idx_sets = spark.read.parquet(f"{path}/sets").select(
-        F.col("id").alias("corpus_id"), F.col("tk").alias("tk_c")
-    )
-    # ONE fused Arrow pass for the batch (shingle + hash + sign together:
-    # each extra Python stage crossing costs ~0.25 s fixed overhead), and
-    # a lazy checkpoint cutting the plan so the banding branch and the
-    # exact-Jaccard re-rank branch both read the materialized
-    # (id, sig, tk) relation instead of re-running the Python stage per
-    # consumer. The relation is delivery-sized (batch rows x (sig + hash
-    # set)), so the checkpoint write is noise next to the pass it saves.
-    sig_src = _shingle_sign_units(
-        batch, text_col, id_col, shingle_n, n_hashes
-    ).localCheckpoint(eager=False)
-    # broadcast gate: sig row = n_hashes int64 signature + the hashed
-    # shingle set (conservatively allowed 2 KiB — a longer-than-that doc
-    # set overshoots the estimate by its own factor, and the gate's job
-    # is order-of-magnitude OOM protection, not byte precision)
-    limit = (
-        PROBE_BROADCAST_MAX_BYTES
-        if broadcast_max_bytes is None
-        else broadcast_max_bytes
-    )
-    n_batch = sig_src.count()  # materializes the lazy checkpoint too
-    hint = (
-        F.broadcast
-        if n_batch * (8 * n_hashes + 2048) <= limit
-        else (lambda df: df)
-    )
-    b_banded = sig_src.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    ).alias("key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select(F.col("id").alias("new_id"), "bk.band", "bk.key")
-    cands = (
-        idx_bands.join(hint(b_banded), ["band", "key"])
-        .select("new_id", "corpus_id")
-        .distinct()
-    )
-    inter = F.size(F.array_intersect("tk", "tk_c")).cast("double")
-    union = F.size(F.array_union("tk", "tk_c"))
-    # under the gate, broadcast the delivery-sized candidate list against
-    # the corpus-sized sets scan: AQE sizes joins from PRE-filter relation
-    # stats (CLAUDE.md, the v_matryoshka_knn bite), so without the hint
-    # this statically plans as a SortMergeJoin that shuffles the whole
-    # sets table — the right fallback ABOVE the gate, waste below it
-    return (
-        hint(cands).join(idx_sets, "corpus_id")
-        .join(
-            hint(sig_src.select(F.col("id").alias("new_id"), "tk")),
-            "new_id",
-        )
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
+    """Dedup an incoming batch against a persisted MinHash index
+    (:func:`minhash_index_write`): batch rows are shingled/signed in ONE
+    fused Arrow pass (O(batch) only), bucket-joined against the on-disk
+    band table, and candidates re-rank with exact Jaccard over the STORED
+    corpus sets — corpus text is never read, let alone re-shingled.
+    Returns (new_id, corpus_id, jaccard >= threshold). Raises
+    ``ValueError`` when ``n_hashes``, ``bands`` or ``shingle_n`` differ
+    from the ones the index recorded (band keys would silently fail to
+    collide). Plan and broadcast gate: :func:`_probe_pairs`; a batch row
+    is estimated at its signature plus a 2 KiB shingle-set allowance (a
+    longer doc set overshoots by its own factor — the gate is
+    order-of-magnitude OOM protection, not byte precision)."""
+    return _probe_pairs(
+        spark, path, dict(n_hashes=n_hashes, bands=bands, shingle_n=shingle_n),
+        _shingle_sign_units(batch, text_col, id_col, shingle_n, n_hashes),
+        8 * n_hashes + 2048,
+        lambda src: _band_keys(src, n_hashes, bands),
+        "sets",
+        [F.col("tk").alias("tk_n")],
+        ("jaccard", _jaccard("tk_n", "tk_c")),
+        threshold,
     )
 
 
@@ -1679,22 +1656,20 @@ def embedding_index_write(
     band_bits: int = 6,
     dim: int | None = None,
     seed: int = 42,
-    write_partitions: int | None = None,
 ) -> None:
     """Write the corpus' hyperplane-LSH near-dup index to disk — the
     embedding twin of :func:`minhash_index_write` (the standing-asset
-    shape: build once per corpus, probe per delivery). The index is an
-    ``operators.index_log`` directory (commit protocol, layout and crash
-    story there) whose base and deltas each hold ``bands/`` — the
-    (band, key, id) bucket table partitioned by band, one Arrow
-    signature pass over the corpus (``corpus_band_keys``; the interpreted
-    JVM fold costs ~ms/row × n_planes and serialized a 200k-row corpus
-    onto one 326 s task, round 9) — and ``vecs/`` — (id, v, nrm) for the
-    exact cosine re-rank, norms folded ONCE at build time so a 100 TB
-    serve path never refolds the corpus. This call commits a new base
-    (replacing whatever index ``path`` held) and records the banding
-    settings (``n_planes``, ``band_bits``, ``seed``, ``dim``) that
-    insert, probe and compact then read from the marker.
+    shape: build once per corpus, probe per delivery). Its base and
+    deltas each hold ``bands/`` — the (band, key, id) bucket table
+    partitioned by band, one Arrow signature pass over the corpus
+    (``corpus_band_keys``; the interpreted JVM fold costs ~ms/row ×
+    n_planes and serialized a 200k-row corpus onto one 326 s task, round
+    9) — and ``vecs/`` — (id, v, nrm) for the exact cosine re-rank, norms
+    folded ONCE at build time so a 100 TB serve path never refolds the
+    corpus. This call commits a new base (replacing whatever index
+    ``path`` held) and records the banding settings (``n_planes``,
+    ``band_bits``, ``seed``, ``dim``) that insert, probe and compact then
+    read from the marker.
 
     Band layout is the graph family's (one seeded plane bank sliced into
     ``n_planes // band_bits`` disjoint ``band_bits``-bit keys, OR'd at
@@ -1703,12 +1678,7 @@ def embedding_index_write(
     floor (SCALING.md round-13 recall tables). Size ``band_bits`` ~
     ceil_log2(corpus / target_bucket) at build time: buckets then stay
     ~target-sized and each probe row touches O(bands × bucket) corpus
-    rows, never the corpus itself.
-
-    ``write_partitions``: default = one writer task per band (fine while
-    bands ≪ cores); a 100 TB build passes an explicit count and gets
-    (band, id)-hashed writer tasks so parallelism is not capped at the
-    band count (same contract as ``minhash_index_write``)."""
+    rows, never the corpus itself."""
     if dim is None:
         raise ValueError("embedding_index_write requires dim=")
     from .index_log import IndexLog
@@ -1717,7 +1687,7 @@ def embedding_index_write(
     IndexLog(path).commit_base(
         _index_writer(
             *_band_vec_rows(df, id_col, vec_col, **settings),
-            n_planes // band_bits, write_partitions, meta=settings,
+            n_planes // band_bits, meta=settings,
         )
     )
 
@@ -1738,84 +1708,6 @@ def _band_vec_rows(
     return banded, src.select("id", "v", l2_norm("v").alias("nrm"))
 
 
-def _index_writer(
-    bands: DataFrame,
-    vecs: DataFrame,
-    n_bands: int,
-    write_partitions: int | None,
-    meta: dict | None = None,
-):
-    """``IndexLog`` write callback storing ``bands/`` (partitioned by
-    band) and ``vecs/``: one writer task per band and a handful of vec
-    files by default, ``write_partitions`` hashed tasks for each when
-    given. A base commit passes ``meta`` (the banding settings) and the
-    callback adds both relations' schemas to it, so every later read
-    passes an explicit schema — no inference job, and an index written
-    from an empty corpus (a ``bands/`` with no ``band=`` dirs) stays
-    readable."""
-    if write_partitions:
-        bands = bands.repartition(write_partitions, "band", "id")
-        vecs = vecs.repartition(write_partitions)
-    else:
-        bands = bands.repartition(n_bands, "band")
-        vecs = vecs.coalesce(8)
-
-    def write(d: str) -> dict | None:
-        bands.write.mode("overwrite").partitionBy("band").parquet(
-            f"{d}/bands"
-        )
-        vecs.write.mode("overwrite").parquet(f"{d}/vecs")
-        if meta is None:
-            return None
-        return {**meta, "schema": {
-            "bands": bands.schema.json(), "vecs": vecs.schema.json(),
-        }}
-
-    return write
-
-
-def _embedding_index(path: str, **settings):
-    """(log, marker) of the embedding index at ``path``, after checking
-    the caller's banding ``settings`` against the recorded ones."""
-    from .index_log import IndexLog
-
-    log = IndexLog(path)
-    m = log.read()
-    if m is None:
-        raise FileNotFoundError(f"no embedding index committed at {path}")
-    for key, value in settings.items():
-        if m["meta"][key] != value:
-            raise ValueError(
-                f"{key}={value} differs from the {key}={m['meta'][key]} "
-                f"the embedding index at {path} was written with"
-            )
-    return log, m
-
-
-def _read_embedding_index(
-    spark, log, m: dict, below: int | None
-) -> tuple[DataFrame, DataFrame]:
-    """(bands, vecs) of the base plus the committed deltas below
-    ``below`` (None = every committed delta). Each root is its own scan
-    (Spark refuses one scan over several band-partitioned roots), read
-    with the schema the base commit recorded in the marker."""
-    import json
-    from functools import reduce
-
-    from pyspark.sql.types import StructType
-
-    roots = [log.base(m)] + [d for _, d in log.deltas(m, below)]
-
-    def scan(sub: str, cols: list[str]) -> DataFrame:
-        schema = StructType.fromJson(json.loads(m["meta"]["schema"][sub]))
-        return reduce(DataFrame.unionByName, (
-            spark.read.schema(schema).parquet(f"{r}/{sub}").select(*cols)
-            for r in roots
-        ))
-
-    return scan("bands", ["id", "band", "key"]), scan("vecs", ["id", "v", "nrm"])
-
-
 def embedding_index_insert(
     batch: DataFrame,
     vec_col: str,
@@ -1826,7 +1718,6 @@ def embedding_index_insert(
     dim: int | None = None,
     seed: int = 42,
     batch_id: int | None = None,
-    write_partitions: int | None = None,
 ) -> None:
     """ADMIT a delivery into a persisted embedding-LSH index
     (:func:`embedding_index_write` layout): the batch's band keys and
@@ -1844,11 +1735,7 @@ def embedding_index_insert(
     ``batch_id``: pass the stream's ``foreachBatch`` id for replay
     safety; ``None`` auto-assigns the next free id (the batch-mode
     convenience — sequential inserts behave exactly like the old append
-    path, minus the duplication hazard). ``write_partitions``: default =
-    one writer task per band for the delta's band rows and a handful of
-    files for its vec rows; a large delivery passes an explicit count
-    (same contract as :func:`embedding_index_write` — never a forced
-    single writer task).
+    path, minus the duplication hazard).
 
     Maintenance stays the LSM-without-tombstones shape: deltas are
     immutable facts about admitted vectors, so compaction is a plain
@@ -1857,14 +1744,14 @@ def embedding_index_insert(
     if dim is None:
         raise ValueError("embedding_index_insert requires dim=")
     settings = dict(n_planes=n_planes, band_bits=band_bits, seed=seed, dim=dim)
-    log, _ = _embedding_index(path, **settings)
+    log, _ = _open_index(path, **settings)
     if batch_id is None:
         batch_id = log.next_batch_id()
     log.commit_delta(
         batch_id,
         _index_writer(
             *_band_vec_rows(batch, id_col, vec_col, **settings),
-            n_planes // band_bits, write_partitions,
+            n_planes // band_bits,
         ),
     )
 
@@ -1873,7 +1760,6 @@ def embedding_index_compact(
     spark,
     path: str,
     upto_batch_id: int | None = None,
-    write_partitions: int | None = None,
 ) -> dict:
     """FOLD admitted deltas into the base index — the compaction the
     insert path's LSM contract promises (small-file debt is the only
@@ -1891,7 +1777,7 @@ def embedding_index_compact(
     windowed probe (``max_batch_id``) can no longer exclude them.
     Single-writer, like the insert path. Returns
     {"gen", "folded_batches", "folded_upto"}."""
-    log, m = _embedding_index(path)
+    log, m = _open_index(path)
     folded = [b for b, _ in log.deltas(m, upto_batch_id)]
     if not folded:
         return {
@@ -1902,8 +1788,7 @@ def embedding_index_compact(
     n_bands = m["meta"]["n_planes"] // m["meta"]["band_bits"]
     new = log.commit_base(
         _index_writer(
-            *_read_embedding_index(spark, log, m, upto_batch_id),
-            n_bands, write_partitions,
+            *_read_index(spark, log, m, upto_batch_id, "vecs"), n_bands
         ),
         upto=upto_batch_id,
     )
@@ -1926,7 +1811,6 @@ def embedding_probe_pairs(
     dim: int | None = None,
     seed: int = 42,
     max_batch_id: int | None = None,
-    broadcast_max_bytes: int | None = None,
 ) -> DataFrame:
     """Semantic-dedup an incoming batch against a PERSISTED embedding-LSH
     index (:func:`embedding_index_write`, plus any deltas admitted by
@@ -1945,75 +1829,25 @@ def embedding_probe_pairs(
     (possibly re-written) delta, so no self-pairs and no duplicated
     pairs. Only committed deltas are read (``operators.index_log``).
     Raises ``ValueError`` when the banding settings differ from the ones
-    the index recorded (band keys would silently fail to collide).
-
-    Join hints are GATED on the batch's estimated footprint
-    (rows × vector bytes vs ``broadcast_max_bytes``, default
-    :data:`PROBE_BROADCAST_MAX_BYTES`): under the gate the banded batch,
-    the candidate list, and the batch-with-vectors broadcast against the
-    corpus-sized scans (AQE would otherwise SMJ them — it sizes joins
-    from pre-filter stats); over it the probe emits the unhinted plan
-    and degrades to shuffle instead of OOMing — Spark honors an explicit
-    hint at ANY size, so the gate, not the hint, is the safety. The
-    candidate list is a join output whose boundedness rides the
-    band-sizing contract (``band_bits`` ≈ ceil_log2(corpus /
-    target_bucket) keeps buckets ~target-sized), so it shares the batch
-    gate rather than paying its own count job."""
+    the index recorded (band keys would silently fail to collide). Plan
+    and broadcast gate: :func:`_probe_pairs`, with a batch row estimated
+    at its vector bytes."""
     if dim is None:
         raise ValueError("embedding_probe_pairs requires dim=")
     from .ann import corpus_band_keys
 
-    log, m = _embedding_index(
-        path, n_planes=n_planes, band_bits=band_bits, seed=seed, dim=dim
-    )
-    idx_bands, idx_vecs = _read_embedding_index(spark, log, m, max_batch_id)
-    idx_bands = idx_bands.select(
-        F.col("id").alias("corpus_id"), "band", "key"
-    )
-    idx_vecs = idx_vecs.select(
-        F.col("id").alias("corpus_id"),
-        F.col("v").alias("v_c"),
-        F.col("nrm").alias("nrm_c"),
-    )
-    # checkpoint: the banding branch and the re-rank branch both consume
-    # the batch relation from SEPARATE jobs (bands join action vs final
-    # collect) — without the cut the Arrow sign pass runs per consumer
-    src = batch.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).localCheckpoint(eager=False)
-    limit = (
-        PROBE_BROADCAST_MAX_BYTES
-        if broadcast_max_bytes is None
-        else broadcast_max_bytes
-    )
-    n_batch = src.count()  # materializes the lazy checkpoint too
-    hint = (
-        F.broadcast if n_batch * (dim * 8 + 64) <= limit else (lambda df: df)
-    )
-    b_banded = corpus_band_keys(
-        src, n_planes, band_bits, seed, dim, id_col="id", vec_col="v"
-    ).select(F.col("id").alias("new_id"), "band", "key")
-    cands = (
-        idx_bands.join(hint(b_banded), ["band", "key"])
-        .select("new_id", "corpus_id")
-        .distinct()
-    )
-    return (
-        hint(cands)
-        .join(idx_vecs, "corpus_id")
-        .join(
-            hint(
-                src.select(
-                    F.col("id").alias("new_id"),
-                    F.col("v").alias("v_n"),
-                    l2_norm("v").alias("nrm_n"),
-                )
-            ),
-            "new_id",
-        )
-        .withColumn("cos", cosine_sim("v_n", "v_c", "nrm_n", "nrm_c"))
-        .filter(F.col("cos") >= threshold)
-        .select("new_id", "corpus_id", "cos")
+    return _probe_pairs(
+        spark, path, dict(n_planes=n_planes, band_bits=band_bits, seed=seed, dim=dim),
+        batch.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+        dim * 8 + 64,
+        lambda src: corpus_band_keys(
+            src, n_planes, band_bits, seed, dim, id_col="id", vec_col="v"
+        ),
+        "vecs",
+        [F.col("v").alias("v_n"), l2_norm("v").alias("nrm_n")],
+        ("cos", cosine_sim("v_n", "v_c", "nrm_n", "nrm_c")),
+        threshold,
+        max_batch_id,
     )
 
 

@@ -11781,9 +11781,16 @@ def d_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-derived (no broadcast hint — AQE sizes the tiny pair side).
     Reference analog: the similarity-threshold dial at
     camp_vec_rcmn.py:66-74, quantified."""
-    from ..functions.text import minhash_perm, poly_hash, word_shingles
+    return minhash_est_error(_t(spark, sf_dir, "documents"))
 
-    docs = _t(spark, sf_dir, "documents")
+
+def minhash_est_error(docs: DataFrame) -> DataFrame:
+    """``d_minhash_est_error`` over any ``documents``-shaped relation — the
+    row itself and ``tools/probes/dedup.py::minhash_est`` (replicated
+    corpora) run this one plan."""
+    from ..functions.text import minhash_perm, poly_hash, word_shingles
+    from ..operators.dedup import _band_keys, _bucket_pairs, _join_sets
+
     hashed = docs.select(
         F.col("doc_id").alias("id"),
         F.transform(word_shingles("text", 3), poly_hash).alias("hs"),
@@ -11814,44 +11821,7 @@ def d_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id", "hs", sig_bound.alias("sig"))
         .localCheckpoint(eager=True)
     )
-    banded = sigs.select(
-        "id",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band"),
-        "sig",
-    ).select(
-        "id",
-        "band",
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.slice("sig", F.col("band") * 4 + 1, 4),
-                lambda x: x.cast("string"),
-            ),
-        ).alias("key"),
-    )
-    a = banded.select(
-        F.col("id").alias("id_a"), "band", "key"
-    )
-    b = banded.select(
-        F.col("id").alias("id_b"), "band", "key"
-    )
-    cands = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = sigs.select(
-        F.col("id").alias("id_a"),
-        F.col("hs").alias("hs_a"),
-        F.col("sig").alias("sig_a"),
-    )
-    sb = sigs.select(
-        F.col("id").alias("id_b"),
-        F.col("hs").alias("hs_b"),
-        F.col("sig").alias("sig_b"),
-    )
-    j = cands.join(sa, "id_a").join(sb, "id_b")
+    j = _join_sets(_bucket_pairs(_band_keys(sigs, 16, 4)), sigs, ("hs", "sig"))
     agree = F.size(
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
