@@ -482,6 +482,7 @@ def test_knn_graph_insert_delete_driver_paths_match_distributed(
     collected to the driver) and on the gather source (rows fetched by
     Spark semi-joins), with and without a supplied corpus band table.
     DRIVER_MAX_CELLS=0 forces the gather source on the same input."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from vector_search_spark.operators import ann
@@ -509,19 +510,31 @@ def test_knn_graph_insert_delete_driver_paths_match_distributed(
     full_bands = corpus_band_keys(emb, dim=64).localCheckpoint(eager=True)
     dels = emb.filter(F.col("vec_id") % 16 == 7).select("vec_id")
 
+    nw = ann._np_columns(ann._id_vec(new, "vec_id", "embedding"))
+    dl = np.array(sorted(r.vec_id for r in dels.collect()), np.int64)
+
+    def touched(kernel, g, corpus, cb, batch):
+        """The kernel's touched srcs on the source the gate picks."""
+        src = ann._row_source(
+            ann._id_vec(corpus, "vec_id", "embedding"),
+            g.select(*ann._EDGE_COLS), cb, 64,
+        )
+        return sorted(kernel(src, batch, **kw)[0].tolist())
+
     def ops():
         out = []
         for cb in (None, bands):
-            i, t = knn_graph_insert(
-                graph, base, new, corpus_bands=cb, with_touched=True, **kw
-            )
-            out += [canon(i), canon(t)]
+            out += [
+                canon(knn_graph_insert(graph, base, new, corpus_bands=cb,
+                                       **kw)),
+                touched(ann._insert_kernel, graph, base, cb, nw),
+            ]
         for cb in (None, full_bands):
-            d, t = knn_graph_delete(
-                full_graph, emb, dels, corpus_bands=cb, with_touched=True,
-                **kw
-            )
-            out += [canon(d), canon(t)]
+            out += [
+                canon(knn_graph_delete(full_graph, emb, dels,
+                                       corpus_bands=cb, **kw)),
+                touched(ann._delete_kernel, full_graph, emb, cb, dl),
+            ]
         return out
 
     whole = ops()
@@ -1052,3 +1065,110 @@ def test_graph_maintainer_durable_restart(spark, tmp_path, monkeypatch, gate):
         F.col("embedding").alias("probe_vec"),
     )
     assert gm3.serve(probes, k=5).count() == 15
+
+
+@pytest.mark.parametrize("gate", ["whole", "gather", "crossing"])
+def test_graph_maintainer_matches_one_shot_ops(spark, monkeypatch, gate):
+    """The maintainer keeps its index in one row source for its lifetime
+    and applies each op's result to it; the public one-shot functions
+    rebuild a source from DataFrames per call. One insert / delete /
+    compact / insert / serve sequence must give bitwise-equal edges,
+    ranks, scores and serve rows both ways. ``gather`` forces the gather
+    source (DRIVER_MAX_CELLS=0); ``crossing`` sets a gate the corpus fits
+    at open and outgrows on the first insert, so the maintainer converts
+    its state at that op. A warm serve on the whole source runs one
+    Spark job (the probe collect)."""
+    import numpy as np
+
+    from vector_search_spark.operators import ann
+    from vector_search_spark.operators.ann import (
+        corpus_band_keys,
+        knn_graph_build,
+        knn_graph_delete,
+        knn_graph_insert,
+        knn_graph_serve,
+    )
+    from vector_search_spark.operators.graph_lifecycle import GraphMaintainer
+
+    n, dim, ncl = 200, 32, 10
+    rng = np.random.RandomState(83)
+    cents = rng.randn(ncl, dim)
+    X = np.stack([cents[i % ncl] + 0.3 * rng.randn(dim) for i in range(n + 40)])
+    X = X / np.linalg.norm(X, axis=1, keepdims=True)
+    if gate == "gather":
+        monkeypatch.setattr(ann, "DRIVER_MAX_CELLS", 0)
+    elif gate == "crossing":
+        monkeypatch.setattr(ann, "DRIVER_MAX_CELLS", (n + 10) * dim)
+
+    def mkdf(ids):
+        return spark.createDataFrame(
+            [(int(i), [float(x) for x in X[i]]) for i in ids],
+            "vec_id long, embedding array<float>",
+        )
+
+    def edges(df):
+        return sorted(map(tuple, df.select(*ann._EDGE_COLS).collect()))
+
+    kw = dict(k=5, n_planes=24, band_bits=6, seed=42, dim=dim)
+    ins_a, ins_b = mkdf(range(n, n + 20)), mkdf(range(n + 20, n + 40))
+    dels = mkdf(range(0, 200, 7)).select("vec_id")
+    probes = mkdf(range(3, 200, 29)).select(
+        F.col("vec_id").alias("probe_id"),
+        F.col("embedding").alias("probe_vec"),
+    )
+
+    gm = GraphMaintainer(mkdf(range(n)), build_rounds=2, **kw)
+    assert isinstance(
+        gm._src, ann._GatherSource if gate == "gather" else ann._WholeSource
+    )
+    corpus = mkdf(range(n))
+    g, bands = knn_graph_build(corpus, rounds=2, return_bands=True, **kw)
+    assert edges(gm.graph) == edges(g)
+
+    gm.insert(ins_a)
+    g = knn_graph_insert(g, corpus, ins_a, corpus_bands=bands, **kw)
+    corpus = corpus.unionByName(ins_a)
+    bands = bands.unionByName(corpus_band_keys(ins_a, dim=dim))
+    assert edges(gm.graph) == edges(g)
+    assert isinstance(
+        gm._src, ann._WholeSource if gate == "whole" else ann._GatherSource
+    )
+
+    gm.delete(dels)
+    g = knn_graph_delete(g, corpus, dels, corpus_bands=bands, **kw)
+    corpus = corpus.join(dels, "vec_id", "left_anti")
+    assert edges(gm.graph) == edges(g)
+    assert sorted(r.vec_id for r in gm.corpus.collect()) == sorted(
+        r.vec_id for r in corpus.collect()
+    )
+
+    gm.compact()
+    g, bands = knn_graph_build(corpus, rounds=2, return_bands=True, **kw)
+    assert edges(gm.graph) == edges(g)
+    assert sorted(map(tuple, gm.bands.collect())) == sorted(
+        map(tuple, bands.collect())
+    )
+
+    gm.insert(ins_b)
+    g = knn_graph_insert(g, corpus, ins_b, corpus_bands=bands, **kw)
+    corpus = corpus.unionByName(ins_b)
+    bands = bands.unionByName(corpus_band_keys(ins_b, dim=dim))
+    assert edges(gm.graph) == edges(g)
+
+    got = sorted(map(tuple, gm.serve(probes, k=10).collect()))
+    want = sorted(map(tuple, knn_graph_serve(
+        g, corpus, probes, k=10, beam=8, rounds=2, entries="lsh",
+        corpus_bands=bands, **{c: kw[c] for c in ("n_planes", "band_bits",
+                                                  "seed", "dim")},
+    ).collect()))
+    assert got == want and len(got) == 10 * 7
+    assert gm._n == n + 40 - len(range(0, 200, 7))
+
+    if gate == "whole":
+        sc = spark.sparkContext
+        sc.setJobGroup("gm_serve", "gm_serve")
+        try:
+            gm.serve(probes, k=10).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(sc.statusTracker().getJobIdsForGroup("gm_serve")) <= 1

@@ -24,6 +24,14 @@ def _edges(df):
     return {(r.src_id, r.nbr_id, r.rank, r.score) for r in df.collect()}
 
 
+def _delta(spark, g, ids):
+    """(rows, touched) of a delta publish: the post-op graph's rows of
+    the touched srcs, as the graph kernels return them."""
+    from pyspark.sql import functions as F
+
+    return g.filter(F.col("src_id").isin(ids)), _ids(spark, ids)
+
+
 def test_fold_latest_wins_and_tombstones(spark, tmp_path):
     from vector_search_spark.operators.graph_delta import GraphDeltaLog
 
@@ -38,11 +46,11 @@ def test_fold_latest_wins_and_tombstones(spark, tmp_path):
         spark,
         [(1, 4, 1, 0.95), (2, 1, 1, 0.7), (3, 1, 1, 0.6), (4, 1, 1, 0.5)],
     )
-    log.publish_delta(g1, _ids(spark, [1, 4]), 0)
+    log.publish_delta(*_delta(spark, g1, [1, 4]), 0)
     # batch 1 tombstones src 2 (touched, zero rows in the graph) and
     # re-replaces src 1 — latest delta must win over batch 0's rows
     g2 = _df(spark, [(1, 5, 1, 0.99), (3, 1, 1, 0.6), (4, 1, 1, 0.5)])
-    log.publish_delta(g2, _ids(spark, [1, 2]), 1)
+    log.publish_delta(*_delta(spark, g2, [1, 2]), 1)
     folded, meta = log.recover()
     assert _edges(folded) == _edges(g2)
     assert meta["committed"] == 1
@@ -73,7 +81,7 @@ def test_auto_compaction_folds_deltas_into_base(spark, tmp_path):
     log.publish_base(g, -1)
     for b in range(2):
         g = g.unionByName(_df(spark, [(100 + b, 0, 1, 0.4)]))
-        log.publish_delta(g, _ids(spark, [100 + b]), b)
+        log.publish_delta(*_delta(spark, g, [100 + b]), b)
     m = log.read()
     assert len(m["deltas"]) == 2 and m["meta"]["delta_rows"] == 2
     log.publish_base(g, 2)
@@ -100,7 +108,7 @@ def test_delta_write_is_bounded_by_touched_not_index(spark, tmp_path):
     )
     log.publish_base(base, -1)
     g1 = base.unionByName(_df(spark, [(1000, 1, 1, 0.9), (1001, 2, 1, 0.8)]))
-    m = log.publish_delta(g1, _ids(spark, [1000, 1001]), 0)
+    m = log.publish_delta(*_delta(spark, g1, [1000, 1001]), 0)
     assert m["meta"]["base_rows"] == 1000
     assert m["meta"]["delta_rows"] == 2  # the two new srcs' rows ONLY
     [(_, dpath)] = log.deltas(m)
@@ -129,13 +137,13 @@ def test_crash_between_delta_write_and_marker_rename(
     with monkeypatch.context() as mp:
         mp.setattr(os, "replace", die)
         with pytest.raises(RuntimeError, match="injected"):
-            log.publish_delta(g1, _ids(spark, [1]), 0)
+            log.publish_delta(*_delta(spark, g1, [1]), 0)
     folded, meta = log.recover()
     assert _edges(folded) == _edges(g0)  # pre-crash state, exactly
     assert meta["committed"] == -1 and log.read()["deltas"] == []
 
     g2 = _df(spark, [(1, 2, 1, 0.9), (2, 1, 1, 0.8), (3, 1, 1, 0.7)])
-    log.publish_delta(g2, _ids(spark, [3]), 1)
+    log.publish_delta(*_delta(spark, g2, [3]), 1)
     folded, _ = log.recover()
     assert _edges(folded) == _edges(g2)
     assert [b for b, _ in log.deltas(log.read())] == [1]
@@ -152,7 +160,7 @@ def test_crash_between_marker_rename_and_gc(spark, tmp_path, monkeypatch):
     g0 = _df(spark, [(1, 2, 1, 0.9), (2, 1, 1, 0.8)])
     log.publish_base(g0, -1)
     g1 = _df(spark, [(1, 9, 1, 0.99), (2, 1, 1, 0.8)])
-    log.publish_delta(g1, _ids(spark, [1]), 0)
+    log.publish_delta(*_delta(spark, g1, [1]), 0)
     real_replace = os.replace
 
     def replace_then_die(src, dst):
@@ -168,6 +176,6 @@ def test_crash_between_marker_rename_and_gc(spark, tmp_path, monkeypatch):
     assert _edges(folded) == _edges(g1)
 
     g2 = _df(spark, [(1, 9, 1, 0.99), (2, 1, 1, 0.8), (3, 1, 1, 0.7)])
-    log.publish_delta(g2, _ids(spark, [3]), 2)
+    log.publish_delta(*_delta(spark, g2, [3]), 2)
     folded, _ = log.recover()
     assert _edges(folded) == _edges(g2)

@@ -39,7 +39,7 @@ def test_campaign_vectors_one_per_entity(spark, sf_dir):
     assert df.count() == df.select("camp_id").distinct().count()
 
 
-def test_nl_targeting_positive_and_negative(spark, sf_dir):
+def test_nl_targeting_positive_and_negative(spark, sf_dir, tmp_path):
     cond_vec = build_condition_vectors(spark, sf_dir)
     out = nl_targeting_conditions(
         spark, sf_dir, "세그먼트=BUILDING 국가=NATION_5 not_국가=NATION_7",
@@ -54,6 +54,29 @@ def test_nl_targeting_positive_and_negative(spark, sf_dir):
         condition_vectors=cond_vec,
     ).collect()
     assert not any(r.code_nm == "NATION_5" for r in out2)
+    # one warm call's budget over stored condition vectors, with the
+    # caller's collect: the threshold aggregate runs once, for both
+    # polarities, and the result is a local relation
+    stored = build_condition_vectors(
+        spark, sf_dir, out_path=str(tmp_path / "cond_vec")
+    )
+
+    def call():
+        return nl_targeting_conditions(
+            spark, sf_dir, "국가=NATION_5 not_국가=NATION_5",
+            condition_vectors=stored,
+        ).collect()
+
+    assert sorted(call()) == sorted(out2)
+    sc = spark.sparkContext
+    sc.setJobGroup("targeting_budget", "targeting_budget")
+    try:
+        out3 = call()
+    finally:
+        sc.setJobGroup(None, None)
+    assert sorted(out3) == sorted(out2)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("targeting_budget"))
+    assert jobs <= 3, jobs
 
 
 def test_recommend_end_to_end_deterministic(spark, sf_dir):

@@ -21,10 +21,13 @@ adjacency, band table) is only ever joined against a key set bounded by
 the op's batch, so the kernel asks a row source to ``take`` the rows
 whose key is in that set. Two row sources answer ``take``, picked from
 the input size (corpus rows × dim against ``DRIVER_MAX_CELLS``): the
-whole source collects each relation once and answers on the driver; the
-gather source answers each ``take`` with a Spark semi-join against the
-broadcast keys. The kernel, its float channels and its ranking rule
-(``_rank_topk_np``) are the same for both.
+whole source holds each relation as numpy columns and answers on the
+driver; the gather source answers each ``take`` with a Spark semi-join
+against the broadcast keys. The kernel, its float channels and its
+ranking rule (``_rank_topk_np``) are the same for both. The public
+functions build a source per call; ``GraphMaintainer`` keeps one for its
+lifetime and applies each op's result to it (``apply``/``append``/
+``drop``), so its serve collects only the probes.
 
 For production, MLlib's ``BucketedRandomProjectionLSH`` over L2-normalized
 vectors (cosine ≡ monotone in euclidean on the unit sphere) is the same
@@ -37,7 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegralType
+from pyspark.sql.types import ArrayType, IntegralType, StructType
 
 from ..functions.vector import cosine_sim, dot, l2_norm
 from .knn import topk_per_key
@@ -48,7 +51,9 @@ from .knn import topk_per_key
 DRIVER_MAX_CELLS = 4_000_000
 
 _EDGES = "src_id long, nbr_id long, rank long, score double"
+_EDGE_COLS = ("src_id", "nbr_id", "rank", "score")
 _HITS = "probe_id long, vec_id long, rank long, score double"
+_BANDS = "id long, band int, key long"
 
 
 def make_planes(n_planes: int = 8, dim: int = 64, seed: int = 42) -> list[list[float]]:
@@ -286,8 +291,7 @@ def _knn_graph_build_driver(
     band_bits: int,
     n_bands: int,
     rounds: int,
-    return_bands: bool,
-):
+) -> "_WholeSource":
     """Driver-side replay of :func:`knn_graph_build`'s candidate/score/
     NN-descent stages over the collected (id, v, nrm, sig) relation —
     stage-for-stage identical semantics:
@@ -303,7 +307,10 @@ def _knn_graph_build_driver(
     - output scores FLOOR-quantized at 1e-6 (identical double ops).
 
     Only called for corpora under the driver budget; see the call site
-    in ``knn_graph_build`` for the float-channel contract."""
+    in ``_build_source`` for the float-channel contract. Returns the
+    whole row source over the collected vectors, the adjacency and the
+    band table, so a caller that keeps the index needs no second
+    collect."""
     spark = base.sparkSession
     pdf = base.toPandas()
     n = len(pdf)
@@ -318,15 +325,23 @@ def _knn_graph_build_driver(
         else np.zeros((0, 1))
     )
 
-    def bands_df():
+    def source(s, nb, cos, rn):
         row, band, key = _np_bands(sig, n_bands, band_bits)
-        return _frame(spark, "id long, band int, key long", {
-            "id": ids[row], "band": band.astype(np.int32), "key": key,
+        return _WholeSource(spark, {
+            "vecs": {"id": ids, "v": V},
+            "graph": {
+                "src_id": ids[s], "nbr_id": ids[nb],
+                "rank": rn.astype(np.int64), "score": _floor6(cos),
+            },
+            "bands": {"id": ids[row], "band": band, "key": key},
+        }, {
+            "vecs": StructType([base.schema["id"], base.schema["v"]]),
+            "graph": _EDGES, "bands": _BANDS,
         })
 
     if n == 0:
-        out = spark.createDataFrame([], _EDGES)
-        return (out, bands_df()) if return_bands else out
+        none = np.zeros(0, np.int64)
+        return source(none, none, np.zeros(0), none)
 
     # everything below works in POSITIONS (0..n-1 over the id-sorted
     # arrays): ids are unique, so position order == id order and every
@@ -389,11 +404,7 @@ def _knn_graph_build_driver(
         scored_keys = np.union1d(scored_keys, fresh)
 
     fs, fn_, fc, fr = adjacency(s_pa, s_pb, s_cos)
-    out = _frame(spark, _EDGES, {
-        "src_id": ids[fs], "nbr_id": ids[fn_],
-        "rank": fr.astype(np.int64), "score": _floor6(fc),
-    })
-    return (out, bands_df()) if return_bands else out
+    return source(fs, fn_, fc, fr)
 
 
 def knn_graph_build(
@@ -449,6 +460,32 @@ def knn_graph_build(
     corpus scale — pass it explicitly to pin a replayable config. Reference counterpart: BASELINE.json's "batch vector
     indexing" north star; VERDICT r6 "What's missing" #4.
     """
+    src = _build_source(
+        corpus, k, n_planes, band_bits, rounds, seed, dim, id_col, vec_col,
+        n_bands, target_bucket,
+    )
+    out = src.frame("graph")
+    return (out, src.frame("bands")) if return_bands else out
+
+
+def _build_source(
+    corpus: DataFrame,
+    k: int,
+    n_planes: int | None,
+    band_bits: int | None,
+    rounds: int,
+    seed: int,
+    dim: int | None,
+    id_col: str,
+    vec_col: str,
+    n_bands: int = 4,
+    target_bucket: int = 8,
+    resident: bool = False,
+):
+    """:func:`knn_graph_build` as a row source over the built index: the
+    whole source when the corpus fits the gate (the driver replay), else
+    the gather source over the distributed plan's relations (pinned when
+    ``resident``, i.e. kept for the caller's lifetime)."""
     if dim is None:
         raise ValueError("knn_graph_build requires dim= (embedding dimensionality)")
     if band_bits is None:
@@ -552,10 +589,10 @@ def knn_graph_build(
     # checkpointed stage. Driver == distributed equality is pinned in
     # tests/test_ann.py. Corpora past DRIVER_MAX_CELLS take the
     # distributed path unchanged.
-    if DRIVER_MAX_CELLS and base.count() * dim <= DRIVER_MAX_CELLS:
+    n = base.count() if DRIVER_MAX_CELLS else None
+    if n is not None and _fits(n, dim):
         return _knn_graph_build_driver(
-            base, k=k, band_bits=band_bits, n_bands=n_bands,
-            rounds=rounds, return_bands=return_bands,
+            base, k=k, band_bits=band_bits, n_bands=n_bands, rounds=rounds,
         )
     banded = _band_explode(base, "id", F.col("sig"), n_bands, band_bits)
 
@@ -649,17 +686,18 @@ def knn_graph_build(
         F.col("rn").cast("long").alias("rank"),
         (F.floor(F.col("cos") * 1000000) / 1000000).alias("score"),
     )
-    if return_bands:
-        # the build already hashed every corpus vector (the sig stage is
-        # checkpointed); its banded (id, band, key) relation IS the
-        # ``corpus_band_keys`` table — identical planes, identical sign
-        # bits — so consumers that need the band table next (delete
-        # repair, LSH-entry serve, incremental insert) can reuse it
-        # instead of paying a second corpus-wide Arrow signature pass
-        # (r14; the 100 TB deployment persists exactly this table next
-        # to the adjacency)
-        return out, banded
-    return out
+    # the build already hashed every corpus vector (the sig stage is
+    # checkpointed); its banded (id, band, key) relation IS the
+    # ``corpus_band_keys`` table — identical planes, identical sign bits —
+    # so consumers that need the band table next (delete repair, LSH-entry
+    # serve, incremental insert) reuse it instead of paying a second
+    # corpus-wide Arrow signature pass (the 100 TB deployment persists
+    # exactly this table next to the adjacency)
+    return _GatherSource(
+        base.sparkSession,
+        {"vecs": base.select("id", "v"), "graph": out, "bands": banded},
+        n, resident,
+    )
 
 
 def corpus_band_keys(
@@ -703,31 +741,20 @@ def corpus_band_keys(
     )
 
 
-def bounded_band_keys(
-    rel: DataFrame,
-    n_planes: int = 24,
-    band_bits: int = 6,
-    seed: int = 42,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, band, key) banded-LSH table for a BOUNDED relation (probe or
-    maintenance batch) via the interpreted JVM signature fold — no Arrow
-    stage crossing, so it beats :func:`corpus_band_keys` below a few
-    hundred rows (the fold costs ~ms/row; the Arrow pass costs a fixed
-    ~0.25 s crossing). Sign bits agree with the Arrow path except
-    |dot| ≲ 1e-14 — the documented ulp-tolerant LSH bucketing channel.
-    NEVER use this on a corpus-sized relation (CLAUDE.md: the fold ran
-    326 s at 200k × 60 planes); that is what ``corpus_band_keys`` is for.
-    """
-    if dim is None:
-        raise ValueError("bounded_band_keys requires dim=")
-    sig = lsh_signature(F.col(vec_col), make_planes(n_planes, dim, seed))
-    return _band_explode(rel, id_col, sig, n_planes // band_bits, band_bits)
-
-
 # --- row sources: the graph kernels' one way to reach corpus rows ---------
+
+COALESCE_TO = 32  # partitions of every pinned relation
+
+
+def _pin(df: DataFrame) -> DataFrame:
+    """Coalesce + eager localCheckpoint: the lineage cut of a relation a
+    resident gather source keeps across ops."""
+    return df.coalesce(COALESCE_TO).localCheckpoint(eager=True)
+
+
+def _fits(n: int, dim: int) -> bool:
+    """Whether an ``n`` × ``dim`` corpus is at or under the gate."""
+    return bool(DRIVER_MAX_CELLS) and n * dim <= DRIVER_MAX_CELLS
 
 
 def _np_columns(df: DataFrame, pdf=None) -> dict:
@@ -750,26 +777,55 @@ def _np_columns(df: DataFrame, pdf=None) -> dict:
     return out
 
 
-class _WholeSource:
-    """Row source at or under the gate: each relation is collected once
-    per op, and every ``take`` is a lookup in a sorted index of it."""
+def _frame(spark, schema, cols: dict) -> DataFrame:
+    """A local relation from numpy columns (no Spark job); a matrix
+    column becomes one list of Python floats per row, which every array
+    element type accepts with or without Arrow."""
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {c: a.tolist() if a.ndim == 2 else a for c, a in cols.items()}
+        ),
+        schema,
+    )
 
-    def __init__(self, n: int) -> None:
-        self.n = n
-        self._cols: dict = {}
+
+def _cat(a, b):
+    """``a`` then ``b``; an empty ``a`` (a 0×0 matrix for no vectors)
+    takes ``b``'s shape."""
+    return np.concatenate([a, b]) if len(a) else b
+
+
+class _WholeSource:
+    """Row source at or under the gate: the vectors ``(id, v)``, the
+    adjacency ``(src_id, nbr_id[, rank, score])`` and the band table
+    ``(id, band, key)`` as numpy columns; every ``take`` is a lookup in a
+    sorted index of one of them, built on first use and dropped when that
+    relation changes. A :class:`~.graph_lifecycle.GraphMaintainer` keeps
+    one for its lifetime and applies each op's result to it in numpy;
+    the one-shot graph functions collect one per call."""
+
+    def __init__(self, spark, rels: dict, schemas: dict) -> None:
+        self.spark = spark
+        self.rels = rels  # name -> numpy columns; "bands" may be None
+        self.schemas = schemas  # name -> the schema ``frame`` gives it
         self._index: dict = {}
 
-    def _local(self, rel) -> dict:
-        if isinstance(rel, dict):
-            return rel
-        if id(rel) not in self._cols:
-            # the relation is kept with its columns so its id stays unique
-            self._cols[id(rel)] = (rel, _np_columns(rel))
-        return self._cols[id(rel)][1]
+    @classmethod
+    def collect(cls, spark, rels: dict) -> "_WholeSource":
+        """Each given relation collected once."""
+        return cls(
+            spark,
+            {r: None if df is None else _np_columns(df) for r, df in rels.items()},
+            {r: None if df is None else df.schema for r, df in rels.items()},
+        )
 
-    def take(self, rel, key_cols: tuple, keys: tuple) -> dict:
-        cols = self._local(rel)
-        ix = (id(cols), key_cols)
+    @property
+    def n(self) -> int:
+        return len(self.rels["vecs"]["id"])
+
+    def take(self, rel: str, key_cols: tuple, keys: tuple) -> dict:
+        cols = self.rels[rel]
+        ix = (rel, key_cols)
         if ix not in self._index:
             rk = _pack([cols[c] for c in key_cols])
             o = np.argsort(rk, kind="stable")
@@ -780,88 +836,167 @@ class _WholeSource:
         rows = o[_ranges(lo, np.searchsorted(sk, q, "right") - lo)]
         return {c: a[rows] for c, a in cols.items()}
 
-    def lowest(self, rel, col: str, n: int) -> np.ndarray:
-        return np.unique(self._local(rel)[col])[:n]
+    def lowest(self, rel: str, col: str, n: int) -> np.ndarray:
+        return np.unique(self.rels[rel][col])[:n]
 
-    def band_table(self, vecs, n_planes, band_bits, seed, dim) -> dict:
-        """The corpus band table on the numpy signature channel."""
-        c = self._local(vecs)
+    def ensure_bands(self, n_planes, band_bits, seed, dim) -> None:
+        """The corpus band table on the numpy signature channel, unless
+        one was given."""
+        if self.rels.get("bands") is not None:
+            return
+        c = self.rels["vecs"]
         sig = (
             _sig_fn(make_planes(n_planes, dim, seed))(c["v"])
             if len(c["id"])
             else np.zeros(0, np.int64)
         )
         row, band, key = _np_bands(sig, n_planes // band_bits, band_bits)
-        return {"id": c["id"][row], "band": band, "key": key}
+        self._set("bands", {"id": c["id"][row], "band": band, "key": key})
+        self.schemas["bands"] = _BANDS
 
-    def splice(self, g: DataFrame, touched, replaced: dict) -> DataFrame:
-        """The collected graph spliced in numpy (a Spark anti-join here
-        would add a broadcast job to every maintenance op)."""
-        cols = self._local(g)
-        keep = ~np.isin(cols["src_id"], touched)
-        return _frame(g.sparkSession, _EDGES, {
-            c: np.concatenate([cols[c][keep], a]) for c, a in replaced.items()
+    def frame(self, rel: str) -> DataFrame:
+        return _frame(self.spark, self.schemas[rel], self.rels[rel])
+
+    def _set(self, rel: str, cols: dict) -> None:
+        self.rels[rel] = cols
+        self._index = {ix: v for ix, v in self._index.items() if ix[0] != rel}
+
+    def apply(self, touched, replaced: dict) -> None:
+        """The adjacency without the rows of the ``touched`` srcs, plus
+        their ``replaced`` rows."""
+        g = self.rels["graph"]
+        keep = ~np.isin(g["src_id"], touched)
+        self._set("graph", {
+            c: np.concatenate([g[c][keep], a]) for c, a in replaced.items()
         })
+
+    def append(self, vecs: dict, bands: dict):
+        """New corpus rows and their band rows. Returns the source that
+        holds the result: this one, or a resident gather source once the
+        corpus outgrows the gate."""
+        for rel, rows in (("vecs", vecs), ("bands", bands)):
+            cur = self.rels[rel]
+            self._set(rel, {c: _cat(cur[c], rows[c]) for c in cur})
+        if _fits(self.n, self.rels["vecs"]["v"].shape[1]):
+            return self
+        return _GatherSource(
+            self.spark, {r: self.frame(r) for r in self.rels}, self.n, True
+        )
+
+    def drop(self, ids) -> None:
+        """Corpus rows (and their band rows) of ``ids`` removed."""
+        for rel in ("vecs", "bands"):
+            cur = self.rels[rel]
+            keep = ~np.isin(cur["id"], ids)
+            self._set(rel, {c: a[keep] for c, a in cur.items()})
 
 
 class _GatherSource:
-    """Row source above the gate: each ``take`` is one Spark semi-join of
-    the relation against the broadcast keys, collected."""
+    """Row source above the gate: the same relations as DataFrames; each
+    ``take`` is one Spark semi-join against the broadcast keys,
+    collected. A ``resident`` source (kept across ops) pins every
+    relation it is given or derives."""
 
-    def __init__(self, spark, n: int | None) -> None:
+    def __init__(
+        self, spark, rels: dict, n: int | None = None, resident: bool = False
+    ) -> None:
         self.spark = spark
-        self.n = n
+        self._cut = _pin if resident else (lambda df: df)
+        self.rels = {
+            r: None if df is None else self._cut(df) for r, df in rels.items()
+        }
+        self._n = n
 
-    def take(self, rel: DataFrame, key_cols: tuple, keys: tuple) -> dict:
+    @property
+    def n(self) -> int:
+        if self._n is None:
+            self._n = self.rels["vecs"].count()
+        return self._n
+
+    def take(self, rel: str, key_cols: tuple, keys: tuple) -> dict:
+        df = self.rels[rel]
         kp = pd.DataFrame(
             {c: np.asarray(a, np.int64) for c, a in zip(key_cols, keys)}
         ).drop_duplicates()
         if not len(kp):
-            return _np_columns(
-                rel, pd.DataFrame({c: [] for c in rel.columns})
-            )
+            return _np_columns(df, pd.DataFrame({c: [] for c in df.columns}))
         kdf = self.spark.createDataFrame(
             kp, ", ".join(f"{c} long" for c in key_cols)
-        ).select(*[F.col(c).cast(rel.schema[c].dataType) for c in key_cols])
+        ).select(*[F.col(c).cast(df.schema[c].dataType) for c in key_cols])
         return _np_columns(
-            rel.join(F.broadcast(kdf), list(key_cols), "left_semi")
+            df.join(F.broadcast(kdf), list(key_cols), "left_semi")
         )
 
-    def lowest(self, rel: DataFrame, col: str, n: int) -> np.ndarray:
+    def lowest(self, rel: str, col: str, n: int) -> np.ndarray:
         return _np_columns(
-            rel.select(col).distinct().orderBy(col).limit(n)
+            self.rels[rel].select(col).distinct().orderBy(col).limit(n)
         )[col]
 
-    def band_table(self, vecs, n_planes, band_bits, seed, dim) -> DataFrame:
-        """The corpus band table as one Arrow signature pass."""
-        return corpus_band_keys(
-            vecs, n_planes=n_planes, band_bits=band_bits, seed=seed,
-            dim=dim, id_col="id", vec_col="v",
+    def ensure_bands(self, n_planes, band_bits, seed, dim) -> None:
+        """The corpus band table as one Arrow signature pass, unless one
+        was given."""
+        if self.rels.get("bands") is None:
+            self.rels["bands"] = self._cut(corpus_band_keys(
+                self.rels["vecs"], n_planes=n_planes, band_bits=band_bits,
+                seed=seed, dim=dim, id_col="id", vec_col="v",
+            ))
+
+    def frame(self, rel: str) -> DataFrame:
+        return self.rels[rel]
+
+    def _ids(self, ids) -> DataFrame:
+        return F.broadcast(_frame(self.spark, "_id long", {"_id": ids}))
+
+    def apply(self, touched, replaced: dict) -> None:
+        """The adjacency anti-joined against the broadcast touched srcs,
+        plus their ``replaced`` rows."""
+        g = self.rels["graph"]
+        kept = g.join(self._ids(touched), g["src_id"] == F.col("_id"),
+                      "left_anti")
+        self.rels["graph"] = self._cut(
+            kept.unionByName(_frame(self.spark, _EDGES, replaced))
         )
 
-    def splice(self, g: DataFrame, touched, replaced: dict) -> DataFrame:
-        """The graph anti-joined against the broadcast touched srcs."""
-        kept = g.join(
-            F.broadcast(_frame(self.spark, "src_id long", {"src_id": touched})),
-            "src_id", "left_anti",
-        )
-        return kept.unionByName(_frame(self.spark, _EDGES, replaced))
+    def append(self, vecs: dict, bands: dict):
+        for rel, rows in (("vecs", vecs), ("bands", bands)):
+            df = self.rels[rel]
+            self.rels[rel] = self._cut(
+                df.unionByName(_frame(self.spark, df.schema, rows))
+            )
+        self._n = None if self._n is None else self._n + len(vecs["id"])
+        return self
+
+    def drop(self, ids) -> None:
+        for rel in ("vecs", "bands"):
+            df = self.rels[rel]
+            self.rels[rel] = self._cut(
+                df.join(self._ids(ids), df["id"] == F.col("_id"), "left_anti")
+            )
+        self._n = None
 
 
-def _row_source(vecs: DataFrame, dim: int | None):
-    """The whole source when the (id, v) corpus fits ``DRIVER_MAX_CELLS``
-    (one count job; the width is sniffed when ``dim`` is None), else the
-    gather source. A gate of 0 picks the gather source without a job."""
+def _row_source(vecs: DataFrame, graph: DataFrame, bands, dim: int | None,
+                resident: bool = False):
+    """A row source over ``vecs`` (id, v), ``graph`` and ``bands`` (None:
+    computed on first need): the whole source when the corpus fits
+    ``DRIVER_MAX_CELLS`` (one count job; the width is sniffed when ``dim``
+    is None), else the gather source. A gate of 0 picks the gather
+    source without a job."""
     spark = vecs.sparkSession
+    rels = {"vecs": vecs, "graph": graph, "bands": bands}
     if not DRIVER_MAX_CELLS:
-        return _GatherSource(spark, None)
+        return _GatherSource(spark, rels, None, resident)
     if dim is None:
         head = vecs.limit(1).collect()
         dim = len(head[0]["v"]) if head else 1
     n = vecs.count()
-    if n * dim <= DRIVER_MAX_CELLS:
-        return _WholeSource(n)
-    return _GatherSource(spark, n)
+    if _fits(n, dim):
+        return _WholeSource.collect(spark, rels)
+    return _GatherSource(spark, rels, n, resident)
+
+
+def _id_vec(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
 
 
 class _Vectors:
@@ -869,8 +1004,8 @@ class _Vectors:
     row source. Append-only, so a position stays valid for the whole op;
     ``positions`` maps ids missing from the corpus to -1."""
 
-    def __init__(self, src, vecs: DataFrame) -> None:
-        self.src, self.vecs = src, vecs
+    def __init__(self, src) -> None:
+        self.src = src
         self.ids = np.zeros(0, np.int64)
         self.V = np.zeros((0, 0))
         self._asked = np.zeros(0, np.int64)
@@ -880,12 +1015,9 @@ class _Vectors:
         ids = np.asarray(ids, np.int64)
         need = np.setdiff1d(ids, self._asked)
         if len(need):
-            got = self.src.take(self.vecs, ("id",), (need,))
+            got = self.src.take("vecs", ("id",), (need,))
             if len(got["id"]):
-                self.V = (
-                    np.concatenate([self.V, got["v"]])
-                    if len(self.ids) else got["v"]
-                )
+                self.V = _cat(self.V, got["v"])
                 self.ids = np.concatenate([self.ids, got["id"]])
                 self._order = np.argsort(self.ids, kind="stable")
             self._asked = np.union1d(self._asked, need)
@@ -906,21 +1038,19 @@ def _require_integral(df: DataFrame, col: str, op: str) -> None:
         )
 
 
-def _frame(spark, schema: str, cols: dict) -> DataFrame:
-    """A local relation from numpy columns (no Spark job)."""
-    return spark.createDataFrame(pd.DataFrame(cols), schema)
+def _probe_columns(probes: DataFrame, probe_id: str, probe_vec: str) -> dict:
+    """The collected probe batch as numpy columns ``pid``/``pv``."""
+    _require_integral(probes, probe_id, "knn_graph_serve")
+    return _np_columns(probes.select(
+        F.col(probe_id).alias("pid"), F.col(probe_vec).alias("pv")
+    ))
 
 
-def _write(src, g: DataFrame, touched, replaced: dict, with_touched: bool):
-    """Insert's and delete's one write: ``g`` (the graph's four edge
-    columns) without the rows of the ``touched`` srcs, plus their
-    ``replaced`` rows; with ``with_touched`` also the (src_id) relation
-    of the touched srcs, the bounded write set of a delta publish."""
-    updated = src.splice(g, touched, replaced)
-    if with_touched:
-        return updated, _frame(g.sparkSession, "src_id long",
-                               {"src_id": touched})
-    return updated
+def _write(src, touched, replaced: dict) -> DataFrame:
+    """Insert's and delete's one-shot result: ``replaced`` applied to the
+    source's graph, as a relation."""
+    src.apply(touched, replaced)
+    return src.frame("graph")
 
 
 def knn_graph_serve(
@@ -991,7 +1121,6 @@ def knn_graph_serve(
     entry neighborhood — the honest HNSW worst case.
     """
     _require_integral(corpus, id_col, "knn_graph_serve")
-    _require_integral(probes, probe_id, "knn_graph_serve")
     if entries == "lsh" and dim is None:
         raise ValueError(
             "knn_graph_serve(entries='lsh') requires dim= "
@@ -1009,39 +1138,41 @@ def knn_graph_serve(
             "and band_bits matching the banding the table was built "
             "with (see corpus_band_keys / GraphMaintainer)"
         )
-    spark = corpus.sparkSession
-    vecs = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    adj = graph.select("src_id", "nbr_id")
-    src = _row_source(vecs, dim)
-    pr = _np_columns(
-        probes.select(F.col(probe_id).alias("pid"), F.col(probe_vec).alias("pv"))
+    pr = _probe_columns(probes, probe_id, probe_vec)
+    if not len(pr["pid"]):
+        return corpus.sparkSession.createDataFrame([], _HITS)
+    src = _row_source(
+        _id_vec(corpus, id_col, vec_col), graph.select("src_id", "nbr_id"),
+        corpus_bands, dim,
     )
+    return _frame(src.spark, _HITS, _serve_kernel(
+        src, pr, k, beam, rounds, entries, n_planes, band_bits, seed, dim
+    ))
+
+
+def _serve_kernel(src, pr: dict, k, beam, rounds, entries, n_planes,
+                  band_bits, seed, dim) -> dict:
+    """:func:`knn_graph_serve`'s beam search over a row source for a
+    non-empty probe batch ``pr`` (``pid``, ``pv``): the hit columns."""
     npr = len(pr["pid"])
-    if npr == 0:
-        return spark.createDataFrame([], _HITS)
 
     # --- seed (probe, node) pairs -----------------------------------
     if entries == "lsh":
         if band_bits is None:
-            band_bits = auto_band_bits(
-                src.n if src.n is not None else vecs.count()
-            )
+            band_bits = auto_band_bits(src.n)
         if n_planes is None:
             n_planes = band_bits * 4
-        bands = (
-            corpus_bands if corpus_bands is not None
-            else src.band_table(vecs, n_planes, band_bits, seed, dim)
-        )
+        src.ensure_bands(n_planes, band_bits, seed, dim)
         j, band, key = _np_bands(
             _seq_sigs(pr["pv"], make_planes(n_planes, dim, seed)),
             n_planes // band_bits, band_bits,
         )
-        hit = src.take(bands, ("band", "key"), (band, key))
+        hit = src.take("bands", ("band", "key"), (band, key))
         li, ri = _csr_join(_pack([band, key]), _pack([hit["band"], hit["key"]]))
         seed_j, seed_id = j[li], hit["id"][ri]
     else:
         e = (
-            src.lowest(adj, "src_id", beam) if entries is None
+            src.lowest("graph", "src_id", beam) if entries is None
             else np.asarray([int(x) for x in entries], np.int64)
         )
         seed_j = np.repeat(np.arange(npr), len(e))
@@ -1049,7 +1180,7 @@ def knn_graph_serve(
 
     # (probe, node) pairs live as keys pos * npr + j over the append-only
     # vector positions; the sequential rows and norms are cached per node
-    vec = _Vectors(src, vecs)
+    vec = _Vectors(src)
     prow = [[float(x) for x in v] for v in pr["pv"]]
     pnorm = [float(np.sqrt(_seq_dot(r, r))) for r in prow]
     vrow: dict = {}
@@ -1077,7 +1208,7 @@ def knn_graph_serve(
     for _ in range(rounds):
         o, _rn = _rank_topk_np(s_j, s_cos, vec.ids[s_pos], beam)
         b_j, b_id = s_j[o], vec.ids[s_pos[o]]
-        nb = src.take(adj, ("src_id",), (b_id,))
+        nb = src.take("graph", ("src_id",), (b_id,))
         li, ri = _csr_join(b_id, nb["src_id"])
         fresh = fresh_keys(b_j[li], nb["nbr_id"][ri], s_keys)
         if len(fresh) == 0:
@@ -1089,12 +1220,12 @@ def knn_graph_serve(
         s_keys = np.union1d(s_keys, fresh)
 
     o, rn = _rank_topk_np(s_j, s_cos, vec.ids[s_pos], k)
-    return _frame(spark, _HITS, {
+    return {
         "probe_id": pr["pid"][s_j[o]],
         "vec_id": vec.ids[s_pos[o]],
         "rank": rn.astype(np.int64),
         "score": _floor6(s_cos[o]),
-    })
+    }
 
 
 def ivf_assign(
@@ -1185,7 +1316,6 @@ def knn_graph_insert(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     corpus_bands: DataFrame | None = None,
-    with_touched: bool = False,
 ) -> DataFrame:
     """INCREMENTAL k-NN-graph maintenance — the HNSW-insert analog of
     ``minhash_probe_pairs``'s incremental indexing (new batches must not
@@ -1225,32 +1355,42 @@ def knn_graph_insert(
     is recomputed from the corpus, the only corpus-proportional cost.
 
     Returns the UPDATED full edge list (src_id, nbr_id, rank, score):
-    the graph without the touched srcs' rows, plus their new rows. With
-    ``with_touched=True`` returns ``(updated, touched)`` where
-    ``touched`` is the (src_id) set whose adjacency this insert REPLACED
-    (patched existing nodes + the new nodes) — the bounded write set a
-    durable delta publish needs (``operators.graph_delta``)."""
+    the graph without the touched srcs' rows (patched existing nodes +
+    the new nodes), plus their new rows. A caller that keeps the index
+    (``GraphMaintainer``, ``DurableGraphIngest``) runs the kernel
+    (``_insert_kernel``) itself, which returns the touched set and its
+    replacement rows — the bounded write set of a delta publish
+    (``operators.graph_delta``)."""
     if dim is None:
         raise ValueError("knn_graph_insert requires dim=")
     _require_integral(corpus, id_col, "knn_graph_insert")
     _require_integral(new_rows, id_col, "knn_graph_insert")
-    vecs = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    src = _row_source(vecs, dim)
-    nw = _np_columns(
-        new_rows.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    src = _row_source(
+        _id_vec(corpus, id_col, vec_col), graph.select(*_EDGE_COLS),
+        corpus_bands, dim,
     )
+    nw = _np_columns(_id_vec(new_rows, id_col, vec_col))
+    touched, replaced, _ = _insert_kernel(
+        src, nw, k, n_planes, band_bits, seed, dim
+    )
+    return _write(src, touched, replaced)
+
+
+def _insert_kernel(src, nw: dict, k, n_planes, band_bits, seed, dim):
+    """:func:`knn_graph_insert` over a row source for the collected batch
+    ``nw`` (``id``, ``v``): the touched srcs, their replacement rows, and
+    the batch's own band rows (sequential-fold signatures, bit-identical
+    to the JVM ``lsh_signature`` fold) for a caller that keeps the band
+    table."""
     nb = max(len(nw["id"]), 1)
-    bands = (
-        corpus_bands if corpus_bands is not None
-        else src.band_table(vecs, n_planes, band_bits, seed, dim)
-    )
+    src.ensure_bands(n_planes, band_bits, seed, dim)
     j, band, key = _np_bands(
         _seq_sigs(nw["v"], make_planes(n_planes, dim, seed)),
         n_planes // band_bits, band_bits,
     )
-    hit = src.take(bands, ("band", "key"), (band, key))
+    hit = src.take("bands", ("band", "key"), (band, key))
     li, ri = _csr_join(_pack([band, key]), _pack([hit["band"], hit["key"]]))
-    vec = _Vectors(src, vecs)
+    vec = _Vectors(src)
     pos = vec.positions(hit["id"][ri])
     ok = pos >= 0
     keys = np.unique(pos[ok] * nb + j[li][ok])
@@ -1261,18 +1401,17 @@ def knn_graph_insert(
     o, rn = _rank_topk_np(c_nid, sc, c_eid, k)
     # patch pool: touched existing nodes' current rows ∪ their candidates
     srcs = np.unique(c_eid)
-    g = graph.select("src_id", "nbr_id", "rank", "score")
-    cur = src.take(g, ("src_id",), (srcs,))
+    cur = src.take("graph", ("src_id",), (srcs,))
     p_src = np.concatenate([cur["src_id"], c_eid])
     p_nbr = np.concatenate([cur["nbr_id"], c_nid])
     p_sc = np.concatenate([cur["score"], sc])
     o2, rn2 = _rank_topk_np(p_src, p_sc, p_nbr, k)
-    return _write(src, g, np.union1d(srcs, nw["id"]), {
+    return np.union1d(srcs, nw["id"]), {
         "src_id": np.concatenate([p_src[o2], c_nid[o]]),
         "nbr_id": np.concatenate([p_nbr[o2], c_eid[o]]),
         "rank": np.concatenate([rn2, rn]).astype(np.int64),
         "score": np.concatenate([p_sc[o2], sc[o]]),
-    }, with_touched)
+    }, {"id": nw["id"][j], "band": band, "key": key}
 
 
 def knn_graph_delete(
@@ -1287,7 +1426,6 @@ def knn_graph_delete(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     corpus_bands: DataFrame | None = None,
-    with_touched: bool = False,
 ) -> DataFrame:
     """k-NN-graph DELETION — the removal half of incremental maintenance
     (``knn_graph_insert`` is the add half; VERDICT r8 missing #2: the
@@ -1331,20 +1469,27 @@ def knn_graph_delete(
         raise ValueError("knn_graph_delete requires dim=")
     _require_integral(corpus, id_col, "knn_graph_delete")
     _require_integral(del_ids, del_ids.columns[0], "knn_graph_delete")
-    vecs = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    src = _row_source(vecs, dim)
-    dl = np.unique(_np_columns(del_ids.select(del_ids.columns[0])).popitem()[1])
-    g = graph.select("src_id", "nbr_id", "rank", "score")
-    into = src.take(g, ("nbr_id",), (dl,))
-    affected = np.setdiff1d(into["src_id"], dl)
-    cur = src.take(g, ("src_id",), (affected,))
-    kept = ~np.isin(cur["nbr_id"], dl)
-    bands = (
-        corpus_bands if corpus_bands is not None
-        else src.band_table(vecs, n_planes, band_bits, seed, dim)
+    src = _row_source(
+        _id_vec(corpus, id_col, vec_col), graph.select(*_EDGE_COLS),
+        corpus_bands, dim,
     )
-    ab = src.take(bands, ("id",), (affected,))
-    bk = src.take(bands, ("band", "key"), (ab["band"], ab["key"]))
+    dl = np.unique(_np_columns(del_ids.select(del_ids.columns[0])).popitem()[1])
+    touched, replaced = _delete_kernel(
+        src, dl, k, n_planes, band_bits, seed, dim
+    )
+    return _write(src, touched, replaced)
+
+
+def _delete_kernel(src, dl, k, n_planes, band_bits, seed, dim):
+    """:func:`knn_graph_delete` over a row source for the sorted unique
+    deleted ids ``dl``: the touched srcs and their replacement rows."""
+    into = src.take("graph", ("nbr_id",), (dl,))
+    affected = np.setdiff1d(into["src_id"], dl)
+    cur = src.take("graph", ("src_id",), (affected,))
+    kept = ~np.isin(cur["nbr_id"], dl)
+    src.ensure_bands(n_planes, band_bits, seed, dim)
+    ab = src.take("bands", ("id",), (affected,))
+    bk = src.take("bands", ("band", "key"), (ab["band"], ab["key"]))
     alive = ~np.isin(bk["id"], dl)
     li, ri = _csr_join(
         _pack([ab["band"], ab["key"]]),
@@ -1353,7 +1498,7 @@ def knn_graph_delete(
     cs, cn = ab["id"][li], bk["id"][alive][ri]
     p_src = np.concatenate([cur["src_id"][kept], cs[cs != cn]])
     p_nbr = np.concatenate([cur["nbr_id"][kept], cn[cs != cn]])
-    vec = _Vectors(src, vecs)
+    vec = _Vectors(src)
     pos = vec.positions(np.concatenate([p_src, p_nbr]))
     ps, pn = pos[: len(p_src)], pos[len(p_src):]
     ok = (ps >= 0) & (pn >= 0)
@@ -1366,10 +1511,10 @@ def knn_graph_delete(
     # the delta write set: repaired survivors get replacement rows,
     # deleted srcs get ZERO rows (tombstones) — both must be touched for
     # latest-delta-wins recovery
-    return _write(src, g, np.union1d(affected, dl), {
+    return np.union1d(affected, dl), {
         "src_id": r_src[o], "nbr_id": r_nbr[o],
         "rank": rn.astype(np.int64), "score": sc[o],
-    }, with_touched)
+    }
 
 
 def graph_write_index(graph: DataFrame, path: str, n_shards: int = 32) -> None:

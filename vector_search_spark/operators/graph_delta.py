@@ -91,31 +91,27 @@ class GraphDeltaLog(IndexLog):
 
     def publish_delta(
         self,
-        graph: DataFrame,
+        rows: DataFrame,
         touched: DataFrame,
         batch_id: int,
         extra: dict | None = None,
         side: dict[str, DataFrame] | None = None,
     ) -> dict:
-        # full replacement rows for every touched src: the graph ops
-        # replace a touched src's adjacency wholesale, so the delta is
-        # simply a semi-join of the (already checkpointed) post-op graph
-        # — bounded by touched·k rows, no recompute of the op itself
-        t = (
-            touched.select(F.col(touched.columns[0]).alias("src_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        rows = graph.join(F.broadcast(t), "src_id", "left_semi").select(
-            *_GRAPH_COLS
-        )
+        """Commit one op's delta: ``rows`` is the full replacement
+        adjacency of every src in ``touched`` (the distinct src ids in its
+        first column). The graph kernels return exactly these two, so the
+        write is bounded by touched·k rows and needs no join against the
+        post-op graph."""
+        t = touched.select(F.col(touched.columns[0]).alias("src_id"))
         meta = self.read()["meta"]
 
         def write(d: str) -> dict:
             # one file per delta: a delta is one batch's worth of rows
             # (4 scalars each) — a 1M-row maintenance batch is ~32 MB; a
             # deployment with bigger batches raises the coalesce
-            rows.coalesce(1).write.mode("overwrite").parquet(f"{d}/rows")
+            rows.select(*_GRAPH_COLS).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(f"{d}/rows")
             t.coalesce(1).write.mode("overwrite").parquet(f"{d}/touched")
             _write_side(d, side)
             return {

@@ -4,11 +4,13 @@ Reference dataflow: free text → L1 keyword extraction → per-keyword embeddin
 → MariaDB vector threshold search (V4) + groupwise max (A1) → code resolution
 (L2 for free values) → L3 refinement → positive∖negative set subtraction
 (U3/J8). The per-keyword loop (nl_targeting.py:46-104) collapses into ONE
-distributed plan: all probes broadcast against the condition corpus at once.
+distributed plan: all probes broadcast against the condition corpus at once;
+its bounded result is collected once and the subtraction runs on the driver.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,7 +65,12 @@ def nl_targeting_conditions(
 
     # L2 operator normalization for free-typed conditions — batched, not
     # one LLM call per row (nl_targeting.py:70-79).
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import (
+        BooleanType,
+        StringType,
+        StructField,
+        StructType,
+    )
 
     with_op_schema = StructType(
         [*hits.schema.fields, StructField("op_expr", StringType())]
@@ -80,17 +87,26 @@ def nl_targeting_conditions(
 
     resolved = hits.mapInPandas(add_op, with_op_schema)
 
-    # U3/J8: positives minus negatives on (cond_nm, code).
-    pos = resolved.filter(F.col("polarity") == "긍정")
-    neg = resolved.filter(F.col("polarity") == "부정").select(
-        F.col("cond_nm").alias("n_cond"), F.col("code").alias("n_code")
+    # U3/J8: positives minus negatives on (cond_nm, code). The resolved
+    # hits are bounded by conditions × keywords, so they are collected
+    # ONCE and marked on the driver: an anti-join against the broadcast
+    # negatives ran the threshold aggregate a second time for the
+    # negative branch. As in SQL, a null key never matches. The marked
+    # rows return as a local relation (its filter and projection fold
+    # into it), so the caller's collect runs no job.
+    pdf = pd.DataFrame.from_records(
+        resolved.collect(), columns=with_op_schema.names
     )
-    kept = pos.join(
-        F.broadcast(neg),
-        (pos.cond_nm == neg.n_cond) & (pos.code == neg.n_code),
-        "left_anti",
+    is_neg = pdf["polarity"] == "부정"
+    neg = set(zip(pdf["cond_nm"][is_neg], pdf["code"][is_neg]))
+    pdf["kept"] = (pdf["polarity"] == "긍정") & pd.Series([
+        c is None or d is None or (c, d) not in neg
+        for c, d in zip(pdf["cond_nm"], pdf["code"])
+    ], dtype=bool)
+    kept_schema = StructType(
+        [*with_op_schema.fields, StructField("kept", BooleanType())]
     )
-    return kept.select(
+    return spark.createDataFrame(pdf, kept_schema).filter("kept").select(
         "cond_nm", "column_nm", "table_nm", "code", "code_nm", "cond_type",
         F.round("max_score", 6).alias("max_score"), "op_expr",
     )

@@ -97,8 +97,8 @@ class DurableGraphIngest:
     paid 100× the IO of what it ingested). Round 11 replaces that with
     the LSM-style delta publish in ``operators.graph_delta``: per batch
     only the TOUCHED srcs' replacement rows land on disk (new nodes +
-    patched neighbors — ``knn_graph_insert`` reports the exact set via
-    ``with_touched=True``), bounded by (batch + touched)·k rows, and
+    patched neighbors — the insert kernel returns the exact set with
+    their replacement rows), bounded by (batch + touched)·k rows, and
     committed through ``operators.index_log`` (layout and crash story
     there); recovery folds base + deltas with per-src latest-wins; and
     the fold policy below (accumulated delta rows >= half the base, or
@@ -180,27 +180,18 @@ class DurableGraphIngest:
         self.id_col = id_col
         self.vec_col = vec_col
         # base corpus band table: hashed ONCE per process, reused by every
-        # micro-batch's candidate join — never per batch. r14: on a COLD
-        # start the base build below already hashed every vector, so its
-        # banded relation (identical planes, value-identical sign bits)
-        # is checkpointed as the band table instead of paying a second
-        # corpus-wide Arrow signature pass; the recovery path (no build)
-        # still hashes once via corpus_band_keys.
-        import time as _time
-
-        from ..operators.ann import corpus_band_keys
-
-        self._built_bands = None
-        self._graph, self._committed = self._recover()
-        t0 = _time.perf_counter()
-        if self._built_bands is not None:
-            self.bands = self._built_bands.localCheckpoint(eager=True)
-        else:
-            self.bands = corpus_band_keys(
-                self.base, n_planes=n_planes, band_bits=band_bits,
-                seed=seed, dim=self.dim, id_col=id_col, vec_col=vec_col,
-            ).localCheckpoint(eager=True)
-        self.band_secs = _time.perf_counter() - t0
+        # micro-batch's candidate join — never per batch. On a COLD start
+        # the base build below already hashed every vector, so its band
+        # table is kept instead of paying a second corpus-wide Arrow
+        # signature pass; the recovery path (no build) hashes the base
+        # once. The (base vectors, grown graph, base bands) triple is one
+        # row source kept for the ingest's lifetime: each batch applies
+        # its replaced rows to it. Inserts pair against the BASE only (the
+        # no-new-new-pairs contract), so the source's vectors and bands
+        # never grow; the batches' own band rows (from the insert kernel)
+        # accumulate separately for ``bands``.
+        self._new_bands: list[dict] = []
+        self._src, self._committed = self._recover()
 
     # -- durability plumbing ------------------------------------------
     @classmethod
@@ -212,80 +203,89 @@ class DurableGraphIngest:
             or len(m["deltas"]) >= cls.FOLD_MAX_DELTAS
         )
 
-    def _publish(
-        self, graph: DataFrame, touched: DataFrame | None, batch_id: int
-    ) -> None:
-        """Delta-publish through the log — a base on the first commit or
-        when the fold policy fires (it reads the CURRENT marker, so the
-        fold lags the trigger by at most one batch) — timing the
-        durability tax for the bench split."""
+    def _publish(self, touched, replaced: dict | None, batch_id: int) -> None:
+        """Commit the current graph through the log — a delta of the
+        kernel's ``replaced`` rows of the ``touched`` srcs, or a base on
+        the first commit or when the fold policy fires (it reads the
+        CURRENT marker, so the fold lags the trigger by at most one
+        batch) — timing the durability tax for the bench split."""
         import time
+
+        from ..operators.ann import _EDGES, _frame
 
         t0 = time.perf_counter()
         m = self.log.read()
-        if m is None or touched is None or self._fold_due(m):
-            self.log.publish_base(graph, batch_id)
+        if m is None or replaced is None or self._fold_due(m):
+            self.log.publish_base(self.graph, batch_id)
             mode = "base"
         else:
-            self.log.publish_delta(graph, touched, batch_id)
+            self.log.publish_delta(
+                _frame(self.spark, _EDGES, replaced),
+                _frame(self.spark, "src_id long", {"src_id": touched}),
+                batch_id,
+            )
             mode = "delta"
         el = time.perf_counter() - t0
         self.publish_secs += el
         self.publish_modes.append((mode, round(el, 3)))
         self._committed = batch_id
 
-    def _recover(self) -> tuple[DataFrame, int]:
+    def _recover(self) -> tuple:
         """Fold the latest committed (base, deltas); on first start,
         build the base graph and commit it as batch -1 (so even a crash
         before the first micro-batch recovers without a rebuild)."""
-        g, meta = self.log.recover()
-        if meta is not None:
-            return (
-                g.coalesce(32).localCheckpoint(eager=True),
-                meta["committed"],
-            )
         import time as _time
 
-        from ..operators.ann import knn_graph_build
-
-        t0 = _time.perf_counter()
-        g, self._built_bands = knn_graph_build(
-            self.base, k=self.k, n_planes=self.n_planes,
-            band_bits=self.band_bits, rounds=self.rounds,
-            seed=self.seed, dim=self.dim,
-            id_col=self.id_col, vec_col=self.vec_col,
-            return_bands=True,
+        from ..operators.ann import (
+            _EDGE_COLS,
+            _build_source,
+            _id_vec,
+            _row_source,
         )
-        g = g.coalesce(32).localCheckpoint(eager=True)
+
+        g, meta = self.log.recover()
+        t0 = _time.perf_counter()
+        if meta is not None:
+            src = _row_source(
+                _id_vec(self.base, self.id_col, self.vec_col),
+                g.select(*_EDGE_COLS), None, self.dim, resident=True,
+            )
+            src.ensure_bands(self.n_planes, self.band_bits, self.seed,
+                             self.dim)
+            self.band_secs = _time.perf_counter() - t0
+            return src, meta["committed"]
+        self._src = _build_source(
+            self.base, k=self.k, n_planes=self.n_planes,
+            band_bits=self.band_bits, rounds=self.rounds, seed=self.seed,
+            dim=self.dim, id_col=self.id_col, vec_col=self.vec_col,
+            resident=True,
+        )
         self.base_build_secs = _time.perf_counter() - t0
-        self._publish(g, None, -1)
-        return g, -1
+        self._publish(None, None, -1)
+        return self._src, -1
 
     # -- streaming surface --------------------------------------------
     def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body: replay-guarded insert + delta commit."""
-        from ..operators.ann import knn_graph_insert
+        from ..operators.ann import _id_vec, _insert_kernel, _np_columns
 
-        if batch_df.isEmpty():
-            return
         if batch_id <= self._committed:
             return  # replayed batch already in the committed snapshot
         import time as _time
 
         t0 = _time.perf_counter()
-        updated, touched = knn_graph_insert(
-            self._graph, self.base, batch_df, k=self.k,
-            n_planes=self.n_planes, band_bits=self.band_bits,
-            seed=self.seed, dim=self.dim, id_col=self.id_col,
-            vec_col=self.vec_col, corpus_bands=self.bands,
-            with_touched=True,
+        nw = _np_columns(_id_vec(batch_df, self.id_col, self.vec_col))
+        if not len(nw["id"]):
+            return
+        touched, replaced, bands = _insert_kernel(
+            self._src, nw, self.k, self.n_planes, self.band_bits,
+            self.seed, self.dim,
         )
-        # iterative-loop rules: re-coalesce before each checkpoint or
-        # unionByName SUMS partition counts across batches
-        self._graph = updated.coalesce(32).localCheckpoint(eager=True)
+        self._src.apply(touched, replaced)
+        self._new_bands.append(bands)
         self.insert_secs += _time.perf_counter() - t0
         self.n_batches += 1
-        self._publish(self._graph, touched, batch_id)
+        self._publish(touched, replaced, batch_id)
 
     def run_availablenow(self, source_glob: str, schema) -> DataFrame:
         """Drain all available source files through the replay-guarded
@@ -307,11 +307,25 @@ class DurableGraphIngest:
         )
         q.awaitTermination()
         self.drain_secs += _time.perf_counter() - t0
-        return self._graph
+        return self.graph
 
     @property
     def graph(self) -> DataFrame:
-        return self._graph
+        """The grown adjacency (no Spark job)."""
+        return self._src.frame("graph")
+
+    @property
+    def bands(self) -> DataFrame:
+        """The band table of the base plus every batch this process
+        ingested — the insert kernel's band rows of each batch, so
+        nothing is re-hashed. Batches committed before a restart are in
+        the graph but not here."""
+        from ..operators.ann import _BANDS, _frame
+
+        out = self._src.frame("bands")
+        for rows in self._new_bands:
+            out = out.unionByName(_frame(self.spark, _BANDS, rows))
+        return out
 
 
 def run_streaming_graph_ingest_availablenow(
@@ -425,23 +439,14 @@ def run_streaming_graph_ingest_availablenow(
         F.col("vec_id").alias("probe_id"),
         F.col("embedding").alias("probe_vec"),
     )
-    # r14: the serve's LSH entry join needs the GROWN corpus's band table
-    # = the ingest's checkpointed base bands ∪ the (bounded) new rows'
-    # bands via the JVM fold — instead of re-hashing the whole corpus
-    # with a second Arrow pass per serve (value-identical banding)
-    from ..operators.ann import bounded_band_keys
-
-    grown_bands = ingest.bands.unionByName(
-        bounded_band_keys(
-            new_rows, n_planes=n_planes, band_bits=band_bits, seed=42,
-            dim=dim,
-        )
-    )
+    # the serve's LSH entry join needs the GROWN corpus's band table: the
+    # ingest's base bands ∪ the band rows its insert kernel computed for
+    # each batch — no second hashing pass over the corpus or the batches
     return knn_graph_serve(
         grown, emb, probes, k=serve_k, beam=beam,
         rounds=serve_rounds, entries="lsh", n_planes=n_planes,
         band_bits=band_bits, seed=42, dim=dim,
-        corpus_bands=grown_bands,
+        corpus_bands=ingest.bands,
     )
 
 
