@@ -1067,6 +1067,76 @@ def test_graph_maintainer_durable_restart(spark, tmp_path, monkeypatch, gate):
     assert gm3.serve(probes, k=5).count() == 15
 
 
+def test_graph_maintainer_compact_runs_no_job_before_base_write(
+    spark, tmp_path, monkeypatch
+):
+    """Under the gate a compaction rebuilds from the vectors its whole
+    source already holds: no Spark job runs before the ``IndexLog`` base
+    write (whose snapshot writes are the op's first jobs)."""
+    import numpy as np
+
+    from vector_search_spark.operators import ann
+    from vector_search_spark.operators.graph_lifecycle import GraphMaintainer
+
+    n, dim = 200, 16
+    X = np.random.RandomState(5).randn(n, dim)
+    corpus = spark.createDataFrame(
+        [(int(i), [float(x) for x in X[i]]) for i in range(n)],
+        "vec_id long, embedding array<float>",
+    )
+    gm = GraphMaintainer(
+        corpus, dim=dim, k=5, state_dir=str(tmp_path / "gm_state")
+    )
+    gm.delete(corpus.filter("vec_id < 20").select("vec_id"))
+    assert isinstance(gm._src, ann._WholeSource)
+
+    sc = spark.sparkContext
+    jobs_at_base = []
+    commit_base = GraphMaintainer._commit_base
+
+    def spy(self):
+        jobs_at_base.append(
+            len(sc.statusTracker().getJobIdsForGroup("gm_compact"))
+        )
+        commit_base(self)
+
+    monkeypatch.setattr(GraphMaintainer, "_commit_base", spy)
+    sc.setJobGroup("gm_compact", "gm_compact")
+    try:
+        gm.compact()
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs_at_base == [0]
+    assert gm.compactions == 1 and gm._n == n - 20
+
+
+def test_empty_local_relation_collects_without_a_job(spark):
+    """pyspark plans an EMPTY pandas frame as an RDD scan, whose collect
+    runs a job; the graph ops' result frames and the probe tables stay
+    jobless local relations also when they are empty."""
+    from vector_search_spark.operators import ann
+    from vector_search_spark.operators.knn import probe_table
+
+    hits = ann._frame(spark, ann._HITS, {})
+    probes = probe_table(spark, [], label=[])
+    sc = spark.sparkContext
+    sc.setJobGroup("empty_frames", "empty_frames")
+    try:
+        rows = (hits.collect(), probes.collect())
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows == ([], [])
+    assert len(sc.statusTracker().getJobIdsForGroup("empty_frames")) == 0
+    assert hits.dtypes == [
+        ("probe_id", "bigint"), ("vec_id", "bigint"), ("rank", "bigint"),
+        ("score", "double"),
+    ]
+    assert probes.dtypes == [
+        ("probe_id", "int"), ("label", "string"),
+        ("probe_vec", "array<float>"),
+    ]
+
+
 @pytest.mark.parametrize("gate", ["whole", "gather", "crossing"])
 def test_graph_maintainer_matches_one_shot_ops(spark, monkeypatch, gate):
     """The maintainer keeps its index in one row source for its lifetime

@@ -15,19 +15,24 @@ both pure DataFrame ops:
   ``centroid_id`` so bucket probes become partition-pruned scans.
 
 The k-NN-graph family (``knn_graph_build`` plus its serve, insert and
-delete) is the HNSW-class index. Serve, insert and delete are each ONE
-numpy kernel over bounded rows: every corpus-sized relation (vectors,
-adjacency, band table) is only ever joined against a key set bounded by
-the op's batch, so the kernel asks a row source to ``take`` the rows
-whose key is in that set. Two row sources answer ``take``, picked from
-the input size (corpus rows × dim against ``DRIVER_MAX_CELLS``): the
-whole source holds each relation as numpy columns and answers on the
-driver; the gather source answers each ``take`` with a Spark semi-join
-against the broadcast keys. The kernel, its float channels and its
-ranking rule (``_rank_topk_np``) are the same for both. The public
-functions build a source per call; ``GraphMaintainer`` keeps one for its
-lifetime and applies each op's result to it (``apply``/``append``/
-``drop``), so its serve collects only the probes.
+delete) is the HNSW-class index, and each op is ONE numpy kernel. The
+gate is the input size, corpus rows × dim against ``DRIVER_MAX_CELLS``.
+The build kernel (``_build_kernel``) chains stage functions over whole
+arrays: signature bands, bucket pairs, cosines, top-k and NN-descent
+pivot pairs. Under the gate it runs on the driver over one collect of
+the corpus; above it Spark supplies only the groupings and exchanges
+and every group runs the same stage functions (``_build_frames``).
+Serve, insert and delete only ever join a corpus-sized relation
+(vectors, adjacency, band table) against a key set bounded by the op's
+batch, so their kernels ask a row source to ``take`` the rows whose key
+is in that set. The whole source holds each relation as numpy columns
+and answers on the driver; the gather source (above the gate) answers
+each ``take`` with a Spark semi-join against the broadcast keys. Float
+channels and the ranking rule (``_rank_topk_np``) are the same on both
+sides. The public functions build a source per call;
+``GraphMaintainer`` keeps one for its lifetime, applies each op's result
+to it (``apply``/``append``/``drop``) and compacts by rebuilding from
+the vectors it holds.
 
 For production, MLlib's ``BucketedRandomProjectionLSH`` over L2-normalized
 vectors (cosine ≡ monotone in euclidean on the unit sphere) is the same
@@ -42,7 +47,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegralType, StructType
 
-from ..functions.vector import cosine_sim, dot, l2_norm
+from ..functions.vector import cosine_sim, dot
+from ..utils import fan_out, local_frame
 from .knn import topk_per_key
 
 # Corpus rows × dim at or under which the graph ops work on whole
@@ -168,23 +174,9 @@ def _floor6(x):
     return np.floor(x * 1000000.0) / 1000000.0
 
 
-def _sig_fn(planes):
-    """Sign-bit signatures of the rows of a matrix on the numpy channel
-    (the Arrow signature stages and the whole row source share it). A
-    nested function, so Python workers receive it by value and need not
-    import this package."""
-    P = np.asarray(planes, dtype=np.float64).T
-    pw = 1 << np.arange(P.shape[1], dtype=np.int64)
-
-    def sigs(V):
-        return ((V @ P) > 0) @ pw
-
-    return sigs
-
-
 def _np_bands(sig, n_bands, band_bits):
     """(row, band, key) of every signature split into ``n_bands`` bands
-    of ``band_bits`` bits — the numpy twin of ``_band_explode``."""
+    of ``band_bits`` bits."""
     n = len(sig)
     mask = (1 << band_bits) - 1
     key = (
@@ -199,43 +191,18 @@ def _np_bands(sig, n_bands, band_bits):
     )
 
 
-def _band_explode(rel, id_col, sig, n_bands, band_bits):
-    """(id, band, key) rows of ``rel``: the signature column ``sig`` split
-    into ``n_bands`` bands of ``band_bits`` bits (the one Spark form of
-    the banded-LSH table)."""
-    mask = (1 << band_bits) - 1
-    bk = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(sig, b * band_bits).bitwiseAND(mask).alias("key"),
-                )
-                for b in range(n_bands)
-            ]
-        )
+def _band_rows(ids, V, planes, band_bits):
+    """(id, band, key) columns of the rows ``(ids, V)``: sign-bit
+    signatures on the numpy channel split into bands — the one form of
+    the banded-LSH table (the build kernel's, ``corpus_band_keys``' Arrow
+    stage's and the whole source's)."""
+    P = np.asarray(planes, dtype=np.float64).T
+    sig = (
+        ((V @ P) > 0) @ (1 << np.arange(len(planes), dtype=np.int64))
+        if len(ids) else np.zeros(0, np.int64)
     )
-    return rel.select(F.col(id_col).alias("id"), bk.alias("bk")).select(
-        "id", "bk.band", "bk.key"
-    )
-
-
-def _seq_sigs(vecs, planes):
-    """Pure-Python SEQUENTIAL left-to-right signature fold — bit-identical
-    to the JVM ``lsh_signature`` codegen fold and DuckDB's replay (the
-    CLAUDE.md driver-side-literal precedent), for bounded batches only."""
-    sigs = []
-    for v in vecs:
-        row = [float(x) for x in v]
-        s = 0
-        for i, plane in enumerate(planes):
-            acc = 0.0
-            for x, y in zip(row, plane):
-                acc += x * y
-            if acc > 0:
-                s |= 1 << i
-        sigs.append(s)
-    return np.asarray(sigs, dtype=np.int64)
+    row, band, key = _np_bands(sig, len(planes) // band_bits, band_bits)
+    return {"id": ids[row], "band": band, "key": key}
 
 
 def _seq_dot(a, b):
@@ -247,164 +214,203 @@ def _seq_dot(a, b):
     return acc
 
 
-def _fix_dup_pair_cos(A, B, cos, denom=None):
-    """Recompute the NUMERATOR with the sequential fold for pairs whose
-    vectors are bitwise EQUAL. Replicated fixtures (and any corpus with
-    re-uploaded rows) contain duplicate vectors under different ids;
-    their cosine sits exactly on the 1e-6 floor boundary, where the
-    numpy pairwise-sum dot and the JVM/DuckDB sequential dot visibly
-    diverge (1.0 vs 0.999999 after the floor — caught by an equality
-    pin, r14). ``denom`` supplies the denominator per pair when it is
-    NOT the plain √S·√S of the sequential fold (the build divides by the
-    sig stage's numpy norms); without it the full sequential cosine
-    S/(√S·√S) is used (insert/delete, whose JVM-replayed norms equal the
-    sequential fold bit-for-bit). Non-equal pairs keep the certified
-    numpy channel (boundary probability ~1e-10/pair)."""
-    if len(cos) == 0:
-        return cos
-    eq = (A == B).all(axis=1)
-    for t in np.flatnonzero(eq):
-        r = [float(x) for x in A[t]]
-        s = _seq_dot(r, r)
-        if denom is not None:
-            cos[t] = s / denom[t]
-        else:
-            rt = float(np.sqrt(s))
-            cos[t] = s / (rt * rt)
-    return cos
+def _seq_sigs(vecs, planes):
+    """Signatures on the sequential fold (``_seq_dot`` per plane) —
+    bit-identical to the JVM ``lsh_signature`` codegen fold and DuckDB's
+    replay, for bounded batches only."""
+    rows = ([float(x) for x in v] for v in vecs)
+    return np.asarray([
+        sum(1 << i for i, p in enumerate(planes) if _seq_dot(r, p) > 0)
+        for r in rows
+    ], dtype=np.int64)
 
 
 def _np_cos(A, B):
-    """Cosine of row pairs on the numpy channel, bitwise-equal pairs on
-    the sequential fold (``_fix_dup_pair_cos``) — insert and delete."""
+    """Cosine of row pairs — the one cosine rule of the graph family's
+    build, insert and delete. Pairs on the numpy channel, except pairs
+    whose vectors are bitwise EQUAL, which take the sequential fold
+    S/(√S·√S): replicated fixtures (and any corpus with re-uploaded rows)
+    hold duplicate vectors under different ids, whose cosine sits
+    exactly on the 1e-6 floor boundary, where the numpy pairwise-sum dot
+    and the JVM/DuckDB sequential dot visibly diverge (1.0 vs 0.999999
+    after the floor — caught by an equality pin, r14). Every other pair
+    reaches output only through rank selection and FLOOR-1e-6 scores
+    (boundary probability ~1e-10/pair)."""
     if len(A) == 0:
         return np.zeros(0)
     cos = (A * B).sum(axis=1) / (
         np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1))
     )
-    return _fix_dup_pair_cos(A, B, cos)
+    for t in np.flatnonzero((A == B).all(axis=1)):
+        r = [float(x) for x in A[t]]
+        s = _seq_dot(r, r)
+        rt = float(np.sqrt(s))
+        cos[t] = s / (rt * rt)
+    return cos
 
 
-def _knn_graph_build_driver(
-    base: DataFrame,
-    k: int,
-    band_bits: int,
-    n_bands: int,
-    rounds: int,
-) -> "_WholeSource":
-    """Driver-side replay of :func:`knn_graph_build`'s candidate/score/
-    NN-descent stages over the collected (id, v, nrm, sig) relation —
-    stage-for-stage identical semantics:
+# --- the graph build: one kernel of stage functions ------------------------
 
-    - banded candidate pairs = per-(band, key) bucket combinations with
-      ia < ib, deduped across bands (the banded self-join + distinct);
-    - exact cosine = (V·V')/(nrm·nrm') with numpy's batch reduction;
-    - per-node top-k rank = ``_rank_topk_np`` on (src, cos DESC, nbr) —
-      row_number's total order;
-    - per round: neighbors-of-neighbors expansion (x.nbr == y.src,
-      x.src != y.nbr, min/max-normalized), anti-join against the scored
-      set (score-once), fresh pairs scored and accumulated;
-    - output scores FLOOR-quantized at 1e-6 (identical double ops).
 
-    Only called for corpora under the driver budget; see the call site
-    in ``_build_source`` for the float-channel contract. Returns the
-    whole row source over the collected vectors, the adjacency and the
-    band table, so a caller that keeps the index needs no second
-    collect."""
-    spark = base.sparkSession
-    pdf = base.toPandas()
-    n = len(pdf)
-    ids = pdf["id"].to_numpy().astype(np.int64)
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    sig = pdf["sig"].to_numpy().astype(np.int64)[order]
-    nrm = pdf["nrm"].to_numpy().astype(np.float64)[order]
-    V = (
-        np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        if n
-        else np.zeros((0, 1))
-    )
+def _bucket_pairs(key, ids):
+    """(ia, ib), ia < ib, of every two rows with equal ``key`` — the
+    candidate pairs of one (band, key) bucket, or of a whole band table
+    at once (``ids`` unique per key)."""
+    o = np.lexsort((ids, key))
+    sk, s = key[o], ids[o]
+    n = len(sk)
+    start = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
+    end = np.repeat(np.r_[start[1:], n], np.diff(np.r_[start, n]))
+    pos = np.arange(n)
+    cnt = end - pos - 1
+    return s[np.repeat(pos, cnt)], s[_ranges(pos + 1, cnt)]
 
-    def source(s, nb, cos, rn):
-        row, band, key = _np_bands(sig, n_bands, band_bits)
-        return _WholeSource(spark, {
-            "vecs": {"id": ids, "v": V},
-            "graph": {
-                "src_id": ids[s], "nbr_id": ids[nb],
-                "rank": rn.astype(np.int64), "score": _floor6(cos),
-            },
-            "bands": {"id": ids[row], "band": band, "key": key},
-        }, {
-            "vecs": StructType([base.schema["id"], base.schema["v"]]),
-            "graph": _EDGES, "bands": _BANDS,
-        })
 
-    if n == 0:
-        none = np.zeros(0, np.int64)
-        return source(none, none, np.zeros(0), none)
+def _pivot_pairs(x_src, x_nbr, y_src, y_nbr):
+    """(least, greatest) of every (x.src, y.nbr) with x.nbr == y.src and
+    x.src != y.nbr — the NN-descent neighbors-of-neighbors candidates
+    through each pivot node, over edge rows x (into the pivot) and y
+    (out of it)."""
+    xi, yi = _csr_join(x_nbr, y_src)
+    a, b = x_src[xi], y_nbr[yi]
+    nz = a != b
+    return np.minimum(a[nz], b[nz]), np.maximum(a[nz], b[nz])
 
-    # everything below works in POSITIONS (0..n-1 over the id-sorted
-    # arrays): ids are unique, so position order == id order and every
-    # id-based comparison (ia < ib, the nbr ASC tie-break, the x.src !=
-    # y.nbr filter) is exactly a position comparison; pair-dedup keys
-    # pack as pos_a * n + pos_b, which cannot overflow under the cell
-    # budget. Output maps positions back to ids.
-    def score_keys(keys_arr):
-        pa, pb = keys_arr // n, keys_arr % n
-        denom = nrm[pa] * nrm[pb]
-        c = (V[pa] * V[pb]).sum(axis=1) / denom
-        # the distributed build divides the JVM dot by the sig stage's
-        # numpy norms — mirror exactly for bitwise-equal pairs
-        return pa, pb, _fix_dup_pair_cos(V[pa], V[pb], c, denom=denom)
 
-    # --- stage 1: banded candidate pairs -------------------------------
-    mask = (1 << band_bits) - 1
-    pa_l, pb_l = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
-    for b in range(n_bands):
-        key = (sig >> (b * band_bits)) & mask
-        o = np.argsort(key, kind="stable")
-        sk = key[o]
-        starts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
-        for s, e in zip(starts, np.r_[starts[1:], n]):
-            if e - s < 2:
-                continue
-            bi, bj = np.triu_indices(e - s, 1)
-            pa_l.append(o[s:e][bi])
-            pb_l.append(o[s:e][bj])
-    pa, pb = np.concatenate(pa_l), np.concatenate(pb_l)
-    keys = np.unique(np.minimum(pa, pb) * n + np.maximum(pa, pb))
-    s_pa, s_pb, s_cos = score_keys(keys)
-    scored_keys = keys  # sorted (np.unique output)
+def _top_k(src, nbr, cos, k):
+    """Per-src top-``k`` edge rows under (cos DESC, nbr ASC), scores
+    FLOOR-quantized."""
+    o, rn = _rank_topk_np(src, cos, nbr, k)
+    return {
+        "src_id": src[o], "nbr_id": nbr[o],
+        "rank": rn.astype(np.int64), "score": _floor6(cos[o]),
+    }
 
-    def adjacency(p_a, p_b, cos):
-        src = np.concatenate([p_a, p_b])
-        nbr = np.concatenate([p_b, p_a])
-        c2 = np.concatenate([cos, cos])
-        o, rn = _rank_topk_np(src, c2, nbr, k)
-        return src[o], nbr[o], c2[o], rn
 
+def _build_kernel(ids, V, k, planes, band_bits, rounds):
+    """:func:`knn_graph_build` over whole arrays: the adjacency and band
+    columns of the corpus rows ``(ids, V)``. Works in POSITIONS over the
+    id-sorted rows: ids are unique, so position order is id order and
+    every id comparison (ia < ib, the nbr ASC tie-break, x.src != y.nbr)
+    is a position comparison; a scored pair packs as pos_a * n + pos_b,
+    which cannot overflow under the gate."""
+    o = np.argsort(ids, kind="stable")
+    ids, V = ids[o], V[o]
+    bd = _band_rows(np.arange(len(ids)), V, planes, band_bits)
+    m = max(len(ids), 1)
+
+    def score(keys):
+        pa, pb = keys // m, keys % m
+        return pa, pb, _np_cos(V[pa], V[pb])
+
+    def top(pa, pb, cos):
+        return _top_k(np.r_[pa, pb], np.r_[pb, pa], np.r_[cos, cos], k)
+
+    pa, pb = _bucket_pairs(_pack([bd["band"], bd["key"]]), bd["id"])
+    keys = np.unique(pa * m + pb)
+    s_pa, s_pb, s_cos = score(keys)
     for _ in range(rounds):
-        e_src, e_nbr, _, _ = adjacency(s_pa, s_pb, s_cos)
-        # expansion: x.nbr == y.src over the adjacency with itself
-        xi, yi = _csr_join(e_nbr, e_src)
-        xs, yb = e_src[xi], e_nbr[yi]
-        nz = xs != yb
-        exp_keys = np.unique(
-            np.minimum(xs[nz], yb[nz]) * n + np.maximum(xs[nz], yb[nz])
+        adj = top(s_pa, s_pb, s_cos)
+        ea, eb = _pivot_pairs(
+            adj["src_id"], adj["nbr_id"], adj["src_id"], adj["nbr_id"]
         )
-        fresh = exp_keys[
-            ~np.isin(exp_keys, scored_keys, assume_unique=True)
-        ]
-        if len(fresh) == 0:
-            continue
-        f_pa, f_pb, f_cos = score_keys(fresh)
-        s_pa = np.concatenate([s_pa, f_pa])
-        s_pb = np.concatenate([s_pb, f_pb])
-        s_cos = np.concatenate([s_cos, f_cos])
-        scored_keys = np.union1d(scored_keys, fresh)
+        fresh = np.setdiff1d(ea * m + eb, keys)
+        f_pa, f_pb, f_cos = score(fresh)
+        s_pa, s_pb = np.r_[s_pa, f_pa], np.r_[s_pb, f_pb]
+        s_cos = np.r_[s_cos, f_cos]
+        keys = np.union1d(keys, fresh)
+    g = top(s_pa, s_pb, s_cos)
+    g["src_id"], g["nbr_id"] = ids[g["src_id"]], ids[g["nbr_id"]]
+    return g, {**bd, "id": ids[bd["id"]]}
 
-    fs, fn_, fc, fr = adjacency(s_pa, s_pb, s_cos)
-    return source(fs, fn_, fc, fr)
+
+def _per_key(df: DataFrame, keys: list, fn, schema) -> DataFrame:
+    """``fn`` over whole groups of ``df``: the exchange hash-partitions
+    rows by ``keys``, so a partition holds its groups whole, and ``fn``
+    (a stage function vectorized over group keys) runs once per
+    partition — not once per group as under ``applyInPandas``, whose
+    ~1 ms a group made the top-k stage 3-4× slower at sf0.1."""
+
+    def run(batches):
+        parts = [b for b in batches if len(b)]
+        if parts:
+            yield pd.DataFrame(fn(pd.concat(parts, ignore_index=True)))
+
+    return df.repartition(*keys).mapInPandas(run, schema)
+
+
+def _build_frames(vecs: DataFrame, k, n_planes, band_bits, rounds, seed,
+                  dim) -> dict:
+    """The build kernel above the gate, as the relations of a row source
+    over ``vecs`` (id, v): Spark supplies the groupings and exchanges,
+    and each group runs the kernel's own stage function — bucket pairs
+    per (band, key), cosines per batch of pairs joined to their vectors,
+    top-k per src, NN-descent pairs per pivot node."""
+    bands = corpus_band_keys(
+        vecs, n_planes=n_planes, band_bits=band_bits, seed=seed, dim=dim,
+        id_col="id", vec_col="v",
+    )
+    pair = "ia long, ib long"
+
+    def col(pdf, *names):
+        return [pdf[c].to_numpy() for c in names]
+
+    def bucket(pdf):
+        band, key, ids = col(pdf, "band", "key", "id")
+        ia, ib = _bucket_pairs(_pack([band, key]), ids)
+        return {"ia": ia, "ib": ib}
+
+    def top(pdf):
+        return _top_k(*col(pdf, "src", "nbr", "cos"), k)
+
+    def pivot(pdf):
+        p, s, nb = col(pdf, "p", "src_id", "nbr_id")
+        x, y = nb == p, s == p  # edges into and out of the pivot
+        ia, ib = _pivot_pairs(s[x], nb[x], s[y], nb[y])
+        return {"ia": ia, "ib": ib}
+
+    def cos(batches):
+        for pdf in batches:
+            yield pdf[["ia", "ib"]].assign(
+                cos=_np_cos(_matrix(pdf["va"]), _matrix(pdf["vb"]))
+            )
+
+    def score(pairs: DataFrame) -> DataFrame:
+        va = vecs.select(F.col("id").alias("ia"), F.col("v").alias("va"))
+        vb = vecs.select(F.col("id").alias("ib"), F.col("v").alias("vb"))
+        return pairs.join(va, "ia").join(vb, "ib").mapInPandas(
+            cos, "ia long, ib long, cos double"
+        )
+
+    def adjacency(scored: DataFrame) -> DataFrame:
+        sym = scored.select(
+            F.col("ia").alias("src"), F.col("ib").alias("nbr"), "cos"
+        ).unionByName(scored.select(
+            F.col("ib").alias("src"), F.col("ia").alias("nbr"), "cos"
+        ))
+        return _per_key(sym, ["src"], top, _EDGES)
+
+    # each round's scored set and adjacency are checkpointed (the
+    # iterative-loop lineage rule); every pair is scored once — a
+    # round's candidates anti-join the scored set
+    scored = score(
+        _per_key(bands, ["band", "key"], bucket, pair).distinct()
+    ).localCheckpoint(eager=False)
+    for _ in range(rounds):
+        adj = adjacency(scored).select("src_id", "nbr_id").localCheckpoint(
+            eager=False
+        )
+        ends = adj.select(F.col("nbr_id").alias("p"), "src_id", "nbr_id")
+        ends = ends.unionByName(
+            adj.select(F.col("src_id").alias("p"), "src_id", "nbr_id")
+        )
+        fresh = _per_key(ends, ["p"], pivot, pair).distinct().join(
+            scored.select("ia", "ib"), ["ia", "ib"], "left_anti"
+        )
+        scored = scored.unionByName(score(fresh)).localCheckpoint(
+            eager=False
+        )
+    return {"vecs": vecs, "graph": adjacency(scored), "bands": bands}
 
 
 def knn_graph_build(
@@ -424,41 +430,41 @@ def knn_graph_build(
     """Batch k-NN-GRAPH construction — the batch half of HNSW/NN-descent
     class indexes (the one index family IVF/PQ/LSH/hamming don't cover):
     per-node top-k adjacency over the corpus, built without any all-pairs
-    join.
-
-    Stages, all deterministic and oracle-reproducible:
+    join. Stages, all deterministic and oracle-reproducible:
 
     1. CANDIDATES (banded LSH): one ``n_planes``-bit seeded hyperplane
-       signature per vector, split into ``n_planes/band_bits`` bands —
-       vectors agreeing on ANY band's full ``band_bits`` bits pair up.
-       The only shuffle is the (band, key) equi-join; bucket sizes are
-       ~n/2^band_bits on normalized data, so candidate volume stays
-       ~linear in n.
-    2. ADJACENCY 0: exact cosine re-rank of candidate pairs (precomputed
-       norms), symmetrize, per-node top-k (score DESC, id ASC).
-    3. NN-DESCENT ROUNDS (``rounds``×): neighbors-of-neighbors of the
-       current adjacency join in as new candidates (x→nbr, nbr→y ⇒ x,y)
-       — the classic refinement that recovers edges banding missed; new
-       candidates per round are bounded by n·k² by construction, and the
-       adjacency is re-ranked exactly after each round.
-    4. Output: final per-node top-k → (src_id, nbr_id, rank, score).
+       signature per vector, split into ``n_planes/band_bits`` bands;
+       every two rows of a (band, key) bucket pair up (deduped across
+       bands). Buckets hold ~n/2^band_bits rows on normalized data, so
+       candidate volume stays ~linear in n.
+    2. ADJACENCY 0: exact cosine of every candidate pair, symmetrize,
+       per-node top-k (score DESC, id ASC).
+    3. NN-DESCENT ROUNDS (``rounds``×): neighbors-of-neighbors through
+       each pivot node (x→p, p→y ⇒ x,y) join in as candidates — the
+       classic refinement that recovers edges banding missed. Pairs
+       already scored are dropped, so every pair is scored once.
+    4. Output: final per-node top-k → (src_id, nbr_id, rank, score),
+       scores FLOOR-quantized at 1e-6.
 
     Convergence is a DATA property: on clustered embeddings two rounds
     take banded recall 0.67 → 0.99 (measured, tests/test_ann.py); on the
-    uniform md5-fake fixture neighbors-of-neighbors carry little signal
-    (no manifold), so recall tracks candidate volume — the honest
-    worst case, floored in the tests like v_ivf_kmeans_knn's gates.
+    uniform md5-fake fixture neighbors-of-neighbors carry little signal,
+    so recall tracks candidate volume — the honest worst case.
 
-    The signature relation is checkpointed eagerly: it feeds the band
-    explode AND every scoring join, and CollapseProject would otherwise
-    re-run the 24-dot signature per consumer (CLAUDE.md hazard); each
-    round's adjacency is checkpointed too (iterative-loop lineage rule).
-    At 100 TB: stage 1 is the d_minhash_lsh_pairs shuffle shape, stage 3
-    shuffles the k-bounded adjacency on its keys — never quadratic;
-    band_bits defaults to AUTO (``auto_band_bits``: ceil(log2(n/target)),
-    one bounded count job) so bucket sizes hold ~target_bucket at any
-    corpus scale — pass it explicitly to pin a replayable config. Reference counterpart: BASELINE.json's "batch vector
-    indexing" north star; VERDICT r6 "What's missing" #4.
+    One kernel (``_build_kernel``) runs the stages as numpy stage
+    functions: ``_band_rows``, ``_bucket_pairs``, ``_np_cos`` (the
+    cosine rule of insert and delete too), ``_top_k`` and
+    ``_pivot_pairs``. At or under ``DRIVER_MAX_CELLS`` it runs on the
+    driver over the collected corpus; above it Spark supplies only the
+    groupings and exchanges (``_build_frames``) and every group runs the
+    same stage function, so both give identical edges and band tables.
+    The exchanges are keyed by bucket, src and pivot node; a pivot
+    yields in-degree × k pairs, so a hub pivot is the one skew-exposed
+    group (tools/skew_sweep.py on the zipf fixture). band_bits defaults to AUTO
+    (``auto_band_bits`` of the corpus count) so buckets hold
+    ~target_bucket rows at any scale; pass it explicitly to pin a
+    replayable config. Reference counterpart: BASELINE.json's "batch
+    vector indexing" north star.
     """
     src = _build_source(
         corpus, k, n_planes, band_bits, rounds, seed, dim, id_col, vec_col,
@@ -468,44 +474,16 @@ def knn_graph_build(
     return (out, src.frame("bands")) if return_bands else out
 
 
-def _build_source(
-    corpus: DataFrame,
-    k: int,
-    n_planes: int | None,
-    band_bits: int | None,
-    rounds: int,
-    seed: int,
-    dim: int | None,
-    id_col: str,
-    vec_col: str,
-    n_bands: int = 4,
-    target_bucket: int = 8,
-    resident: bool = False,
-):
-    """:func:`knn_graph_build` as a row source over the built index: the
-    whole source when the corpus fits the gate (the driver replay), else
-    the gather source over the distributed plan's relations (pinned when
-    ``resident``, i.e. kept for the caller's lifetime)."""
-    if dim is None:
-        raise ValueError("knn_graph_build requires dim= (embedding dimensionality)")
+def _banding(n, n_planes, band_bits, n_bands, target_bucket):
+    """(n_planes, band_bits) of a build over ``n`` rows. AUTO band_bits
+    (None) sizes bands from the corpus count, so buckets hold
+    ~target_bucket rows at any scale (the oracle rows pin it). With an
+    EXPLICIT n_planes it snaps to the nearest divisor >= 4 of it, ties to
+    the larger width (smaller buckets); 1-3 bit bands are a quadratic
+    candidate-volume cliff, not a recall trade, so a config with no such
+    divisor is refused."""
     if band_bits is None:
-        # AUTO (default): size bands from the corpus count — one bounded
-        # scalar job (the bloom_build precedent), then expected bucket
-        # size stays ~target_bucket at ANY corpus scale. Explicit
-        # band_bits remains available (the oracle rows pin it so the
-        # DuckDB replay sees identical banding). With an EXPLICIT
-        # n_planes, the auto value must also DIVIDE it (signatures split
-        # into whole bands) — snap to the nearest divisor rather than
-        # crash data-dependently when auto lands on e.g. 7 for
-        # n_planes=24 (ADVICE r8 medium); ties prefer the larger width
-        # (smaller buckets — the conservative side for candidate volume).
-        # Degenerate divisors (1-3 bits → 2-8 buckets per band → ~n^2/4
-        # candidate pairs) are never snapped to silently: they are a
-        # quadratic/OOM cliff, not a recall trade (ADVICE r9 medium —
-        # a prime n_planes=23 would otherwise snap to band_bits=1). Only
-        # divisors >= 4 (auto_band_bits' own clamp floor) are candidates;
-        # if none exist the config is unusable and we say so.
-        auto = auto_band_bits(corpus.count(), target_bucket)
+        auto = auto_band_bits(n, target_bucket)
         if n_planes is None:
             band_bits = auto
         else:
@@ -525,177 +503,47 @@ def _build_source(
         n_planes = band_bits * n_bands
     if n_planes % band_bits != 0:
         raise ValueError("n_planes must divide into band_bits-sized bands")
-    planes = make_planes(n_planes, dim, seed)
-    n_bands = n_planes // band_bits
-    from ..utils import fan_out
+    return n_planes, band_bits
 
-    # Signature + norm in ONE Arrow pass: the interpreted n_planes-dot
-    # signature fold was the dominant cost of the whole build (measured
-    # ~2 s/2000 rows warm). Float contract (corrected round 7): numpy's
-    # reduction is SEQUENTIAL ONLY BELOW 8 elements — at n >= 8 pairwise
-    # summation uses 8-way unrolled partial sums, so the 64-element norm
-    # differs from the sequential JVM l2_norm fold in the LAST ULP on
-    # ~59% of fixture rows (measured, max 4.5e-16 relative; a Python
-    # sequential fold matches the JVM bit-for-bit). The divergence only
-    # reaches output through ulp-tolerant channels: the sign bits flip
-    # only when |dot| < ~1e-14 (P ~ 1e-9/corpus), and the cosine VALUES
-    # derived from these norms are FLOOR-quantized at 1e-6 downstream
-    # (flip needs cos within ~1e-16 of a boundary, P ~ 1e-10/row).
-    # Tri-scale + 10x parity is the empirical certificate.
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    src = fan_out(
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+def _build_source(
+    corpus: DataFrame,
+    k: int,
+    n_planes: int | None,
+    band_bits: int | None,
+    rounds: int,
+    seed: int,
+    dim: int | None,
+    id_col: str,
+    vec_col: str,
+    n_bands: int = 4,
+    target_bucket: int = 8,
+    resident: bool = False,
+    n: int | None = None,
+):
+    """:func:`knn_graph_build` as a row source over the built index. At
+    or under the gate: one count and one collect of (id, v), then the
+    kernel on the driver — the whole source. Above it: the gather source
+    over the distributed kernel's relations (pinned when ``resident``,
+    i.e. kept for the caller's lifetime). ``n`` is the corpus row count
+    when the caller already took it; a gate of 0 with an explicit
+    band_bits needs none."""
+    if dim is None:
+        raise ValueError("knn_graph_build requires dim= (embedding dimensionality)")
+    vecs = _id_vec(corpus, id_col, vec_col)
+    if n is None and (band_bits is None or DRIVER_MAX_CELLS):
+        n = vecs.count()
+    n_planes, band_bits = _banding(
+        n, n_planes, band_bits, n_bands, target_bucket
     )
-    sigs_of = _sig_fn(planes)
-
-    def sig_stage(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"id": pdf["id"], "v": pdf["v"], "nrm": [], "sig": []}
-                )
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame({
-                "id": pdf["id"], "v": pdf["v"],
-                "nrm": np.sqrt((V * V).sum(axis=1)),
-                "sig": sigs_of(V),
-            })
-
-    base = src.mapInPandas(
-        sig_stage,
-        StructType(
-            [
-                src.schema["id"],
-                src.schema["v"],
-                StructField("nrm", DoubleType()),
-                StructField("sig", LongType()),
-            ]
-        ),
-    ).localCheckpoint(eager=True)
-    # Small-corpus DRIVER fast path (r14; the dup_clusters
-    # driver-union-find precedent — a bounded small side gets the same
-    # specialization a broadcast join makes). The distributed build costs
-    # ~23 AQE stage-jobs of pure scheduling at gate scale; when the
-    # checkpointed (id, v, nrm, sig) relation fits a driver budget
-    # (rows × dim cells; the count on the eager checkpoint is one trivial
-    # job on a once-per-corpus build), one Arrow collect + a vectorized
-    # numpy replay of EXACTLY the same stages replaces them. Float
-    # channel: the numpy batch cosine (A*B).sum(axis=1) reaches output
-    # only through the documented ulp-tolerant channels (rank selection
-    # + FLOOR-1e-6 scores), certified by edge-exact parity at four
-    # scales + 10×, and the sig/nrm values come from the identical
-    # checkpointed stage. Driver == distributed equality is pinned in
-    # tests/test_ann.py. Corpora past DRIVER_MAX_CELLS take the
-    # distributed path unchanged.
-    n = base.count() if DRIVER_MAX_CELLS else None
-    if n is not None and _fits(n, dim):
-        return _knn_graph_build_driver(
-            base, k=k, band_bits=band_bits, n_bands=n_bands, rounds=rounds,
+    if _fits(n, dim):
+        return _WholeSource.built(
+            vecs.sparkSession, _np_columns(vecs), vecs.schema, k, n_planes,
+            band_bits, rounds, seed, dim,
         )
-    banded = _band_explode(base, "id", F.col("sig"), n_bands, band_bits)
-
-    def dedup_spread(pairs: DataFrame) -> DataFrame:
-        # ONE exchange does double duty (r14, measured): the pair dedup
-        # needs a hash shuffle on (ia, ib) anyway, and an explicit
-        # repartition-by-key with a pinned partition count both satisfies
-        # the aggregate's distribution requirement (no second exchange)
-        # and is AQE-coalesce-exempt, so the cosine fold downstream runs
-        # on every core — the job `.distinct()` + `fan_out()` previously
-        # did with TWO exchanges per scoring pass. A/B at sf0.1: build
-        # 6.67 s -> 4.14 s, 40 -> 23 AQE jobs, output rows identical.
-        spread = pairs.sparkSession.sparkContext.defaultParallelism
-        return pairs.repartition(spread, "ia", "ib").dropDuplicates(
-            ["ia", "ib"]
-        )
-
-    pairs0 = dedup_spread(
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("ia"), F.col("b.id").alias("ib"))
-    )
-
-    def score(pairs: DataFrame) -> DataFrame:
-        va = base.select(
-            F.col("id").alias("ia"), F.col("v").alias("v_a"),
-            F.col("nrm").alias("nrm_a"),
-        )
-        vb = base.select(
-            F.col("id").alias("ib"), F.col("v").alias("v_b"),
-            F.col("nrm").alias("nrm_b"),
-        )
-        # every caller feeds pairs through dedup_spread, so the relation
-        # arrives already spread across defaultParallelism partitions —
-        # the scoring fold runs on every core with no extra exchange
-        return (
-            pairs.join(va, "ia").join(vb, "ib")
-            .withColumn("cos", cosine_sim("v_a", "v_b", "nrm_a", "nrm_b"))
-            .select("ia", "ib", "cos")
-        )
-
-    def adjacency(scored: DataFrame) -> DataFrame:
-        sym = scored.select(
-            F.col("ia").alias("src"), F.col("ib").alias("nbr"), "cos"
-        ).unionByName(
-            scored.select(
-                F.col("ib").alias("src"), F.col("ia").alias("nbr"), "cos"
-            )
-        )
-        w = Window.partitionBy("src").orderBy(F.desc("cos"), F.asc("nbr"))
-        return (
-            sym.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-        )
-
-    # every candidate pair is scored exactly ONCE: each round's expansion
-    # anti-joins against the already-scored set and only the fresh pairs
-    # pay the cosine fold (rescoring the whole accumulated set per round
-    # tripled the row's cost — measured before this structure)
-    scored = score(pairs0).localCheckpoint(eager=False)
-    for _ in range(rounds):
-        a = adjacency(scored).select("src", "nbr").localCheckpoint(eager=False)
-        expand = dedup_spread(
-            a.alias("x")
-            .join(a.alias("y"), F.col("x.nbr") == F.col("y.src"))
-            .filter(F.col("x.src") != F.col("y.nbr"))
-            .select(
-                F.least("x.src", "y.nbr").alias("ia"),
-                F.greatest("x.src", "y.nbr").alias("ib"),
-            )
-        )
-        fresh = expand.join(
-            scored.select("ia", "ib"), ["ia", "ib"], "left_anti"
-        )
-        # coalesce before the checkpoint: unions of checkpointed RDDs sum
-        # partition counts (64 → 128 → 192 across rounds), and every
-        # later window pays a map task per partition over tiny data
-        scored = (
-            scored.unionByName(score(fresh))
-            .coalesce(32)
-            .localCheckpoint(eager=False)
-        )
-    out = adjacency(scored).select(
-        F.col("src").alias("src_id"),
-        F.col("nbr").alias("nbr_id"),
-        F.col("rn").cast("long").alias("rank"),
-        (F.floor(F.col("cos") * 1000000) / 1000000).alias("score"),
-    )
-    # the build already hashed every corpus vector (the sig stage is
-    # checkpointed); its banded (id, band, key) relation IS the
-    # ``corpus_band_keys`` table — identical planes, identical sign bits —
-    # so consumers that need the band table next (delete repair, LSH-entry
-    # serve, incremental insert) reuse it instead of paying a second
-    # corpus-wide Arrow signature pass (the 100 TB deployment persists
-    # exactly this table next to the adjacency)
     return _GatherSource(
-        base.sparkSession,
-        {"vecs": base.select("id", "v"), "graph": out, "bands": banded},
+        vecs.sparkSession,
+        _build_frames(vecs, k, n_planes, band_bits, rounds, seed, dim),
         n, resident,
     )
 
@@ -710,51 +558,48 @@ def corpus_band_keys(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, band, key) banded-LSH table for a corpus — ONE Arrow/numpy
-    signature pass (the build's sig stage shape; the interpreted JVM
-    24-dot signature costs ~ms/row and dominated the per-call cost of
-    the LSH-entry serve and the incremental insert when recomputed per
-    batch). Compute once per corpus, checkpoint/persist, and pass as
+    pass of the build kernel's own band stage (``_band_rows``; the
+    interpreted JVM 24-dot signature costs ~ms/row and dominated the
+    per-call cost of the LSH-entry serve and the incremental insert when
+    recomputed per batch). The distributed build uses it as its band
+    table. Compute once per corpus, checkpoint/persist, and pass as
     ``corpus_bands`` to ``knn_graph_serve``/``knn_graph_insert`` — the
     100 TB deployment persists this next to the graph index. Sign bits
     ride the documented ulp-tolerant channel (identical plane literals;
     a flip needs |dot| ≲ 1e-14)."""
     if dim is None:
         raise ValueError("corpus_band_keys requires dim=")
-    from ..utils import fan_out
+    planes = make_planes(n_planes, dim, seed)
 
-    sigs_of = _sig_fn(make_planes(n_planes, dim, seed))
-
-    def sig_stage(batches):
+    def band_stage(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"id": pdf["id"], "sig": []})
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame({"id": pdf["id"], "sig": sigs_of(V)})
+            yield pd.DataFrame(_band_rows(
+                pdf["id"].to_numpy(np.int64), _matrix(pdf["v"]), planes,
+                band_bits,
+            ))
 
-    src = fan_out(
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    )
-    sigs = src.mapInPandas(sig_stage, "id long, sig long")
-    return _band_explode(
-        sigs, "id", F.col("sig"), n_planes // band_bits, band_bits
+    return fan_out(_id_vec(corpus, id_col, vec_col)).mapInPandas(
+        band_stage, _BANDS
     )
 
 
 # --- row sources: the graph kernels' one way to reach corpus rows ---------
 
-COALESCE_TO = 32  # partitions of every pinned relation
-
-
 def _pin(df: DataFrame) -> DataFrame:
-    """Coalesce + eager localCheckpoint: the lineage cut of a relation a
-    resident gather source keeps across ops."""
-    return df.coalesce(COALESCE_TO).localCheckpoint(eager=True)
+    """Coalesce to 32 partitions + eager localCheckpoint: the lineage cut
+    of a relation a resident gather source keeps across ops."""
+    return df.coalesce(32).localCheckpoint(eager=True)
 
 
-def _fits(n: int, dim: int) -> bool:
-    """Whether an ``n`` × ``dim`` corpus is at or under the gate."""
+def _fits(n: int | None, dim: int) -> bool:
+    """Whether an ``n`` × ``dim`` corpus is at or under the gate (``n``
+    is None only under a gate of 0)."""
     return bool(DRIVER_MAX_CELLS) and n * dim <= DRIVER_MAX_CELLS
+
+
+def _matrix(a) -> np.ndarray:
+    """One float64 matrix from a column of vectors (0×0 when empty)."""
+    return np.stack(a).astype(np.float64) if len(a) else np.zeros((0, 0))
 
 
 def _np_columns(df: DataFrame, pdf=None) -> dict:
@@ -767,9 +612,7 @@ def _np_columns(df: DataFrame, pdf=None) -> dict:
     for f in df.schema.fields:
         a = pdf[f.name].to_numpy()
         if isinstance(f.dataType, ArrayType):
-            out[f.name] = (
-                np.stack(a).astype(np.float64) if len(a) else np.zeros((0, 0))
-            )
+            out[f.name] = _matrix(a)
         else:
             out[f.name] = a.astype(
                 np.int64 if isinstance(f.dataType, IntegralType) else np.float64
@@ -778,15 +621,12 @@ def _np_columns(df: DataFrame, pdf=None) -> dict:
 
 
 def _frame(spark, schema, cols: dict) -> DataFrame:
-    """A local relation from numpy columns (no Spark job); a matrix
-    column becomes one list of Python floats per row, which every array
-    element type accepts with or without Arrow."""
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {c: a.tolist() if a.ndim == 2 else a for c, a in cols.items()}
-        ),
-        schema,
-    )
+    """A local relation from numpy columns (no Spark job, also when
+    empty); a matrix column becomes one list of Python floats per row,
+    which every array element type accepts with or without Arrow."""
+    return local_frame(spark, pd.DataFrame(
+        {c: a.tolist() if a.ndim == 2 else a for c, a in cols.items()}
+    ), schema)
 
 
 def _cat(a, b):
@@ -811,12 +651,24 @@ class _WholeSource:
         self._index: dict = {}
 
     @classmethod
-    def collect(cls, spark, rels: dict) -> "_WholeSource":
-        """Each given relation collected once."""
+    def built(cls, spark, vecs: dict, schema, k, n_planes, band_bits,
+              rounds, seed, dim) -> "_WholeSource":
+        """The index the build kernel makes over the vector columns
+        ``vecs`` (``id``, ``v``) of relation ``schema``."""
+        graph, bands = _build_kernel(
+            vecs["id"], vecs["v"], k, make_planes(n_planes, dim, seed),
+            band_bits, rounds,
+        )
         return cls(
-            spark,
-            {r: None if df is None else _np_columns(df) for r, df in rels.items()},
-            {r: None if df is None else df.schema for r, df in rels.items()},
+            spark, {"vecs": vecs, "graph": graph, "bands": bands},
+            {"vecs": schema, "graph": _EDGES, "bands": _BANDS},
+        )
+
+    def rebuild(self, k, n_planes, band_bits, rounds, seed, dim):
+        """A fresh build over the held vectors, on the driver."""
+        return _WholeSource.built(
+            self.spark, self.rels["vecs"], self.schemas["vecs"], k,
+            n_planes, band_bits, rounds, seed, dim,
         )
 
     @property
@@ -845,13 +697,9 @@ class _WholeSource:
         if self.rels.get("bands") is not None:
             return
         c = self.rels["vecs"]
-        sig = (
-            _sig_fn(make_planes(n_planes, dim, seed))(c["v"])
-            if len(c["id"])
-            else np.zeros(0, np.int64)
-        )
-        row, band, key = _np_bands(sig, n_planes // band_bits, band_bits)
-        self._set("bands", {"id": c["id"][row], "band": band, "key": key})
+        self._set("bands", _band_rows(
+            c["id"], c["v"], make_planes(n_planes, dim, seed), band_bits
+        ))
         self.schemas["bands"] = _BANDS
 
     def frame(self, rel: str) -> DataFrame:
@@ -944,6 +792,14 @@ class _GatherSource:
     def frame(self, rel: str) -> DataFrame:
         return self.rels[rel]
 
+    def rebuild(self, k, n_planes, band_bits, rounds, seed, dim):
+        """A fresh build over the held vectors: the whole source again
+        once they fit the gate."""
+        return _build_source(
+            self.rels["vecs"], k, n_planes, band_bits, rounds, seed, dim,
+            "id", "v", resident=True, n=self._n,
+        )
+
     def _ids(self, ids) -> DataFrame:
         return F.broadcast(_frame(self.spark, "_id long", {"_id": ids}))
 
@@ -990,9 +846,13 @@ def _row_source(vecs: DataFrame, graph: DataFrame, bands, dim: int | None,
         head = vecs.limit(1).collect()
         dim = len(head[0]["v"]) if head else 1
     n = vecs.count()
-    if _fits(n, dim):
-        return _WholeSource.collect(spark, rels)
-    return _GatherSource(spark, rels, n, resident)
+    if not _fits(n, dim):
+        return _GatherSource(spark, rels, n, resident)
+    return _WholeSource(  # each relation collected once
+        spark,
+        {r: None if df is None else _np_columns(df) for r, df in rels.items()},
+        {r: None if df is None else df.schema for r, df in rels.items()},
+    )
 
 
 def _id_vec(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -1140,7 +1000,7 @@ def knn_graph_serve(
         )
     pr = _probe_columns(probes, probe_id, probe_vec)
     if not len(pr["pid"]):
-        return corpus.sparkSession.createDataFrame([], _HITS)
+        return _frame(corpus.sparkSession, _HITS, {})
     src = _row_source(
         _id_vec(corpus, id_col, vec_col), graph.select("src_id", "nbr_id"),
         corpus_bands, dim,
@@ -1260,10 +1120,6 @@ def ivf_assign(
     consumers (the trained-KMeans row) use the Arrow path.
     """
     if arrow:
-        import pandas as _pd
-
-        from ..utils import fan_out
-
         crows = sorted(
             centroids.select(centroid_id, centroid_vec).collect(),
             key=lambda r: r[0],
@@ -1278,9 +1134,7 @@ def ivf_assign(
         src = fan_out(corpus.select(*cols))
         # fresh StructType: StructType.add MUTATES the DataFrame's cached
         # schema object and corrupts src.columns
-        from pyspark.sql.types import StructType as _StructType
-
-        out_schema = _StructType(list(src.schema.fields) + [cid_field])
+        out_schema = StructType(list(src.schema.fields) + [cid_field])
 
         def assign_stage(batches):
             for pdf in batches:
@@ -1671,9 +1525,7 @@ def pq_encode(
         sub_dim = len(s0[sorted(s0)[0]])
     code_cols = [f"code{s}" for s in range(n_sub)]
     if use_arrow:
-        import numpy as _np
-
-        cb = _np.array(
+        cb = np.array(
             [[list(map(float, codebook[s][c])) for c in sorted(codebook[s])]
              for s in range(n_sub)]
         )  # (n_sub, n_codes, sub_dim)
@@ -1681,12 +1533,10 @@ def pq_encode(
         # JVM path emits keys, and a non-contiguous codebook (codewords
         # seeded from arbitrary ids) would otherwise silently diverge
         keys = [
-            _np.array(sorted(codebook[s]), dtype=_np.int32) for s in range(n_sub)
+            np.array(sorted(codebook[s]), dtype=np.int32) for s in range(n_sub)
         ]
 
         def _encode(batches):
-            import pandas as pd
-
             for pdf in batches:
                 if len(pdf) == 0:
                     yield pd.DataFrame(
@@ -1694,12 +1544,12 @@ def pq_encode(
                          **{c: pd.Series([], dtype="int32") for c in code_cols}}
                     )
                     continue
-                X = _np.array(pdf[corpus_vec].tolist(), dtype=_np.float64)
+                X = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
                 out = {corpus_id: pdf[corpus_id]}
                 for s in range(n_sub):
                     sub = X[:, s * sub_dim:(s + 1) * sub_dim]
                     d = ((sub[:, None, :] - cb[s][None, :, :]) ** 2).sum(axis=2)
-                    out[code_cols[s]] = keys[s][_np.argmin(d, axis=1)]
+                    out[code_cols[s]] = keys[s][np.argmin(d, axis=1)]
                 yield pd.DataFrame(out)
 
         schema = f"{corpus_id} long, " + ", ".join(f"{c} int" for c in code_cols)
@@ -1754,17 +1604,15 @@ def ivf_pq_encode(
     ``np.argmax`` takes the first (lowest-cid) maximum, matching
     ``ORDER BY cos DESC, cid``. PQ code semantics are exactly
     :func:`pq_encode`'s."""
-    import numpy as _np
-
     cids = sorted(centroids)
-    ct = _np.array([list(map(float, centroids[c])) for c in cids])
-    ct_norm = _np.sqrt((ct * ct).sum(axis=1))
-    cb = _np.array(
+    ct = np.array([list(map(float, centroids[c])) for c in cids])
+    ct_norm = np.sqrt((ct * ct).sum(axis=1))
+    cb = np.array(
         [[list(map(float, codebook[s][c])) for c in sorted(codebook[s])]
          for s in range(n_sub)]
     )
     cb_keys = [
-        _np.array(sorted(codebook[s]), dtype=_np.int32) for s in range(n_sub)
+        np.array(sorted(codebook[s]), dtype=np.int32) for s in range(n_sub)
     ]
     code_cols = [f"code{s}" for s in range(n_sub)]
 
@@ -1772,8 +1620,6 @@ def ivf_pq_encode(
         s0 = codebook[0]
         sub_dim = len(s0[sorted(s0)[0]])
     def _build(batches):
-        import pandas as pd
-
         for pdf in batches:
             if len(pdf) == 0:
                 yield pd.DataFrame(
@@ -1782,22 +1628,22 @@ def ivf_pq_encode(
                      **{c: pd.Series([], dtype="int32") for c in code_cols}}
                 )
                 continue
-            X = _np.array(pdf[corpus_vec].tolist(), dtype=_np.float64)
-            xn = _np.sqrt((X * X).sum(axis=1))
-            cos = _np.empty((len(X), len(cids)))
+            X = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
+            xn = np.sqrt((X * X).sum(axis=1))
+            cos = np.empty((len(X), len(cids)))
             for j in range(len(cids)):
                 cos[:, j] = (X * ct[j]).sum(axis=1) / (xn * ct_norm[j])
             out = {
                 corpus_id: pdf[corpus_id],
-                "centroid_id": _np.array(cids, dtype=_np.int64)[
-                    _np.argmax(cos, axis=1)
+                "centroid_id": np.array(cids, dtype=np.int64)[
+                    np.argmax(cos, axis=1)
                 ],
             }
             for s in range(n_sub):
                 sub = X[:, s * sub_dim:(s + 1) * sub_dim]
                 d = ((sub[:, None, :] - cb[s][None, :, :]) ** 2).sum(axis=2)
                 # actual codebook keys, not positions (see pq_encode)
-                out[code_cols[s]] = cb_keys[s][_np.argmin(d, axis=1)]
+                out[code_cols[s]] = cb_keys[s][np.argmin(d, axis=1)]
             yield pd.DataFrame(out)
 
     schema = (
@@ -1839,20 +1685,14 @@ def pq_adc_serve(
     ``(probe_id, id_col, score_col)`` with ``round(adc, 6)``."""
     import math
 
-    sub_dim = None
     s0 = codebook[0]
     sub_dim = len(s0[sorted(s0)[0]])
     cw = sorted(aux)
 
     def pycos(a, b):
-        d = 0.0
-        na = 0.0
-        nb = 0.0
-        for x, y in zip(a, b):
-            d = d + x * y
-            na = na + x * x
-            nb = nb + y * y
-        return d / (math.sqrt(na) * math.sqrt(nb))
+        return _seq_dot(a, b) / (
+            math.sqrt(_seq_dot(a, a)) * math.sqrt(_seq_dot(b, b))
+        )
 
     probed = {
         pid: [

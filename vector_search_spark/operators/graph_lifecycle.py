@@ -25,8 +25,10 @@ All state transitions run the certified kernels unchanged, against a
 row source that lives as long as the maintainer (``operators.ann``):
 under the gate (corpus rows × dim ≤ ``ann.DRIVER_MAX_CELLS``) it is the
 WHOLE source — vectors, adjacency, band table and their sorted
-take-indexes as driver numpy columns, taken from the build at open and
-compaction and collected once at recover. Each insert/delete applies its
+take-indexes as driver numpy columns. The build kernel makes it on the
+driver at open (one count and one collect of the corpus), remakes it at
+compaction from the vectors it holds (no Spark job before the base
+write), and recover collects it once. Each insert/delete applies its
 own result to that state in numpy (splice the replaced adjacency rows,
 append or filter the vectors, append the batch's band rows that the
 insert kernel already computes), so a serve runs one Spark job (the
@@ -91,6 +93,7 @@ class GraphMaintainer:
     ``bands`` are read-only relations of the current state."""
 
     family = "graph"
+    _n: int | None = None  # the corpus row count; preset by ``_counted``
 
     def __init__(
         self,
@@ -118,10 +121,24 @@ class GraphMaintainer:
         self._op_seq = 0
         # the build's band table doubles as the maintainer's (identical
         # planes — one corpus signature pass instead of two)
-        self._build(corpus)
+        from .ann import _build_source
+
+        self._src = _build_source(
+            corpus, rounds=self.build_rounds, id_col=self.id_col,
+            vec_col=self.vec_col, resident=True, n=self._n, **self._kw,
+        )
         self._n = self._src.n
         if self._log is not None:
             self._commit_base()
+
+    @classmethod
+    def _counted(cls, corpus: DataFrame, n: int, **kw) -> "GraphMaintainer":
+        """The maintainer over ``corpus`` whose row count ``n`` the caller
+        already took, so the build counts it no second time."""
+        self = cls.__new__(cls)
+        self._n = n
+        self.__init__(corpus, **kw)
+        return self
 
     def _configure(self, config: dict) -> None:
         """Set the build/serve settings from a marker ``config`` dict —
@@ -133,15 +150,6 @@ class GraphMaintainer:
             key: config[key]
             for key in ("k", "n_planes", "band_bits", "seed", "dim")
         }
-
-    def _build(self, corpus: DataFrame) -> None:
-        """Build the index over ``corpus`` and keep it as the row source."""
-        from .ann import _build_source
-
-        self._src = _build_source(
-            corpus, rounds=self.build_rounds, id_col=self.id_col,
-            vec_col=self.vec_col, resident=True, **self._kw,
-        )
 
     # -- the state as relations (no Spark job) ------------------------------
     @property
@@ -308,10 +316,10 @@ class GraphMaintainer:
     def compact(self) -> None:
         """Full rebuild on the surviving corpus — the operation
         ``knn_graph_delete``'s contract prescribes for amortizing
-        tombstone decay. Resets the churn counter."""
-        # the rebuild's band table doubles as the refreshed band table
-        # (one corpus signature pass instead of two)
-        self._build(self.corpus)
+        tombstone decay. Resets the churn counter. The row source
+        rebuilds from the vectors it holds — on the driver under the
+        gate, so no Spark job runs before the base write."""
+        self._src = self._src.rebuild(rounds=self.build_rounds, **self._kw)
         self._churned = 0
         self.compactions += 1
         if self._log is not None:
@@ -346,7 +354,7 @@ class GraphMaintainer:
 
         pr = _probe_columns(probes, "probe_id", "probe_vec")
         if not len(pr["pid"]):
-            return self.spark.createDataFrame([], _HITS)
+            return _frame(self.spark, _HITS, {})
         return _frame(self.spark, _HITS, _serve_kernel(
             self._src, pr, k, beam, rounds, "lsh", self.n_planes,
             self.band_bits, self.seed, self.dim,

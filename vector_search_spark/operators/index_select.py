@@ -410,9 +410,17 @@ def build_choice(
     leaves out default to ``_graph_params(n)``. ``dim`` is required for
     the graph family; ``index_path`` defaults, for ivf, to a pid-scratch
     dir reclaimed by ``close()``."""
+    return _build_engine(choice, corpus, dim, index_path, None)
+
+
+def _build_engine(choice, corpus, dim, index_path, n):
+    """:func:`build_choice` with the corpus row count ``n`` when the
+    caller already took it (None: counted here when a family needs it)."""
     from pyspark.sql import functions as F
 
     p = choice.params
+    if n is None and choice.family in ("graph", "ivf"):
+        n = corpus.count()
     if choice.family == "exact":
         return ExactIndex(corpus)
     if choice.family == "graph":
@@ -420,12 +428,12 @@ def build_choice(
 
         if dim is None:
             raise ValueError("build_choice(family='graph') requires dim=")
-        auto = _graph_params(corpus.count())
+        auto = _graph_params(n)
         p = {**auto, **p}
         if p["band_bits"] > auto["band_bits"]:
             p.update(band_bits=auto["band_bits"], n_planes=auto["n_planes"])
-        return GraphMaintainer(
-            corpus, dim=dim, k=p["k"], n_planes=p["n_planes"],
+        return GraphMaintainer._counted(
+            corpus, n, dim=dim, k=p["k"], n_planes=p["n_planes"],
             band_bits=p["band_bits"], build_rounds=p["rounds"],
             state_dir=index_path,
         )
@@ -434,7 +442,7 @@ def build_choice(
         from .ann import ivf_assign, ivf_build_index, ivf_probe_index
 
         n_centroids = max(
-            8, min(p.get("n_centroids", 16), corpus.count() // 16)
+            8, min(p.get("n_centroids", 16), n // 16)
         )
         # deterministic first-n centroid convention (the certified
         # v_ivf_knn form; swap in ann_mllib.kmeans_centroids for

@@ -42,7 +42,7 @@ from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .index_select import IndexChoice, build_choice, choose_index
+from .index_select import IndexChoice, _build_engine, choose_index
 
 
 class VectorIndexService:
@@ -100,9 +100,9 @@ class VectorIndexService:
         if graph_params or (mutable and state_dir is not None):
             # unpinned params default to _graph_params(n) in build_choice
             build = replace(choice, family="graph", params=graph_params or {})
-        engine = build_choice(
-            build, corpus, dim=dim,
-            index_path=state_dir if build.family == "graph" else index_path,
+        engine = _build_engine(
+            build, corpus, dim,
+            state_dir if build.family == "graph" else index_path, n,
         )
         return cls(choice, engine, k, mutable)
 

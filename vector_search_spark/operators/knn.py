@@ -30,20 +30,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_sim, l2_norm
+from ..utils import local_frame
 
 
 def probe_table(spark, vecs, **cols) -> DataFrame:
     """Driver-side probes as ``probe_id int, <cols> string, probe_vec
     array<float>``. Built from a pandas frame it plans as a LocalRelation
-    (no Spark job; a list of tuples would be a Python RDD), and float32
-    rounds as an ``array<float>`` cast does."""
+    (no Spark job, also for no probes; a list of tuples would be a Python
+    RDD), and float32 rounds as an ``array<float>`` cast does."""
     pdf = pd.DataFrame({
         "probe_id": np.arange(len(vecs), dtype=np.int32),
         **cols,
         "probe_vec": [np.asarray(v, dtype=np.float32) for v in vecs],
     })
     strs = "".join(f"{c} string, " for c in cols)
-    return spark.createDataFrame(pdf, f"probe_id int, {strs}probe_vec array<float>")
+    return local_frame(spark, pdf, f"probe_id int, {strs}probe_vec array<float>")
 
 
 def topk_per_key(

@@ -21,6 +21,7 @@ from ..llm.clients import (
     LLMClient,
 )
 from ..operators.knn import probe_table, threshold_search
+from ..utils import local_frame
 from .ingest import build_condition_vectors
 
 
@@ -93,7 +94,8 @@ def nl_targeting_conditions(
     # negatives ran the threshold aggregate a second time for the
     # negative branch. As in SQL, a null key never matches. The marked
     # rows return as a local relation (its filter and projection fold
-    # into it), so the caller's collect runs no job.
+    # into it), so the caller's collect runs no job — also when nothing
+    # is above the threshold.
     pdf = pd.DataFrame.from_records(
         resolved.collect(), columns=with_op_schema.names
     )
@@ -106,7 +108,7 @@ def nl_targeting_conditions(
     kept_schema = StructType(
         [*with_op_schema.fields, StructField("kept", BooleanType())]
     )
-    return spark.createDataFrame(pdf, kept_schema).filter("kept").select(
+    return local_frame(spark, pdf, kept_schema).filter("kept").select(
         "cond_nm", "column_nm", "table_nm", "code", "code_nm", "cond_type",
         F.round("max_score", 6).alias("max_score"), "op_expr",
     )

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructField, StructType
 
 
 def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
@@ -23,6 +25,23 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def local_frame(spark, pdf: pd.DataFrame, schema) -> DataFrame:
+    """``pdf`` as a local relation of ``schema`` (a StructType or DDL
+    string) whose collect runs no Spark job, also when ``pdf`` is empty.
+    pyspark skips Arrow for an EMPTY pandas frame and plans it as an RDD
+    scan, so its collect runs one job; an empty ``pdf`` becomes one
+    all-null row under ``limit(0)``, which the optimizer folds into an
+    empty local relation (every field of it nullable)."""
+    if len(pdf):
+        return spark.createDataFrame(pdf, schema)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(
+        pd.DataFrame([[None] * len(schema.fields)], columns=schema.names),
+        StructType([StructField(f.name, f.dataType) for f in schema.fields]),
+    ).limit(0)
 
 
 def pid_scratch(name: str, sf_dir: str, root: str | None = None) -> str:
