@@ -262,15 +262,6 @@ def main() -> None:
         "i": round(besti, 2), "d": round(bestd, 2),
         "l": round(os.getloadavg()[0], 1),
     }
-    # p = cumulative durable-publish wall inside the LAST
-    # s_graph_ingest_serve run (the delta-log snapshot stage, VERDICT
-    # r10 next #8) — the durability tax of the gate row, reported
-    # separately so delta-vs-full publish changes are directly visible.
-    from vector_search_spark.streaming import serving as _serving
-
-    if _serving.LAST_INGEST_STATS:
-        split["gr"]["p"] = round(_serving.LAST_INGEST_STATS["publish_s"], 2)
-
     sf = sf_dir.rstrip("/").split("sf")[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # Diagnostics go on their OWN line, BEFORE the final JSON: the driver

@@ -1,8 +1,8 @@
 """GraphDeltaLog — the LSM-style durable publish for graph adjacency
 (VERDICT r10 next #1). Pins: fold semantics (latest-delta-wins incl.
-zero-row tombstones), the ingest's fold policy, crash injection around
-the marker swap, and that delta publishes write O(touched) rows while
-base publishes write O(index). The commit protocol itself is pinned in
+zero-row tombstones), a base publish replacing every delta, crash
+injection around the marker swap, and that delta publishes write
+O(touched) rows while base publishes write O(index). The commit protocol itself is pinned in
 tests/test_index_log.py."""
 
 import os
@@ -32,6 +32,11 @@ def _delta(spark, g, ids):
     return g.filter(F.col("src_id").isin(ids)), _ids(spark, ids)
 
 
+def _folded(log):
+    """The committed adjacency."""
+    return _edges(log.fold(log.read()))
+
+
 def test_fold_latest_wins_and_tombstones(spark, tmp_path):
     from vector_search_spark.operators.graph_delta import GraphDeltaLog
 
@@ -40,7 +45,7 @@ def test_fold_latest_wins_and_tombstones(spark, tmp_path):
         spark,
         [(1, 2, 1, 0.9), (1, 3, 2, 0.8), (2, 1, 1, 0.7), (3, 1, 1, 0.6)],
     )
-    log.publish_base(g0, -1)
+    log.publish_base(g0)
     # batch 0 replaces src 1's rows and adds src 4
     g1 = _df(
         spark,
@@ -51,45 +56,28 @@ def test_fold_latest_wins_and_tombstones(spark, tmp_path):
     # re-replaces src 1 — latest delta must win over batch 0's rows
     g2 = _df(spark, [(1, 5, 1, 0.99), (3, 1, 1, 0.6), (4, 1, 1, 0.5)])
     log.publish_delta(*_delta(spark, g2, [1, 2]), 1)
-    folded, meta = log.recover()
-    assert _edges(folded) == _edges(g2)
-    assert meta["committed"] == 1
+    assert _folded(log) == _edges(g2)
     assert [b for b, _ in log.deltas(log.read())] == [0, 1]
 
 
 def test_auto_compaction_folds_deltas_into_base(spark, tmp_path):
-    """The ingest's fold policy fires on the marker's counts (delta rows
-    >= half the base rows, or 32 deltas), and a base publish then
-    replaces every delta."""
+    """The marker counts the rows of the base and of the live deltas, and
+    a base publish (a compaction) replaces every delta."""
     from vector_search_spark.operators.graph_delta import GraphDeltaLog
-    from vector_search_spark.streaming.serving import DurableGraphIngest
-
-    def marker(base_rows, delta_rows, n_deltas):
-        return {
-            "meta": {"base_rows": base_rows, "delta_rows": delta_rows},
-            "deltas": [[b, f"d{b}"] for b in range(n_deltas)],
-        }
-
-    due = DurableGraphIngest._fold_due
-    assert not due(marker(100, 49, 31))
-    assert due(marker(100, 50, 1))  # delta rows reached half the base
-    assert due(marker(100, 0, 32))  # delta count reached the cap
-    assert due(marker(0, 1, 1))  # an empty base folds on the first delta
 
     log = GraphDeltaLog(spark, str(tmp_path / "g"))
     g = _df(spark, [(i, i + 1, 1, 0.5) for i in range(10)])
-    log.publish_base(g, -1)
+    log.publish_base(g)
     for b in range(2):
         g = g.unionByName(_df(spark, [(100 + b, 0, 1, 0.4)]))
         log.publish_delta(*_delta(spark, g, [100 + b]), b)
     m = log.read()
     assert len(m["deltas"]) == 2 and m["meta"]["delta_rows"] == 2
-    log.publish_base(g, 2)
+    log.publish_base(g)
     m = log.read()
     assert m["deltas"] == [] and m["meta"]["delta_rows"] == 0
-    assert m["meta"]["base_rows"] == 12 and m["meta"]["committed"] == 2
-    folded, _ = log.recover()
-    assert _edges(folded) == _edges(g)
+    assert m["meta"]["base_rows"] == 12
+    assert _folded(log) == _edges(g)
 
 
 def test_delta_write_is_bounded_by_touched_not_index(spark, tmp_path):
@@ -106,15 +94,14 @@ def test_delta_write_is_bounded_by_touched_not_index(spark, tmp_path):
         [(i, (i + 1) % 500, 1, 0.5) for i in range(500)]
         + [(i, (i + 2) % 500, 2, 0.4) for i in range(500)],
     )
-    log.publish_base(base, -1)
+    log.publish_base(base)
     g1 = base.unionByName(_df(spark, [(1000, 1, 1, 0.9), (1001, 2, 1, 0.8)]))
     m = log.publish_delta(*_delta(spark, g1, [1000, 1001]), 0)
     assert m["meta"]["base_rows"] == 1000
     assert m["meta"]["delta_rows"] == 2  # the two new srcs' rows ONLY
     [(_, dpath)] = log.deltas(m)
     assert _parquet_num_rows(os.path.join(dpath, "rows")) == 2
-    folded, _ = log.recover()
-    assert _edges(folded) == _edges(g1)
+    assert _folded(log) == _edges(g1)
 
 
 def test_crash_between_delta_write_and_marker_rename(
@@ -128,7 +115,7 @@ def test_crash_between_delta_write_and_marker_rename(
 
     log = GraphDeltaLog(spark, str(tmp_path / "g"))
     g0 = _df(spark, [(1, 2, 1, 0.9), (2, 1, 1, 0.8)])
-    log.publish_base(g0, -1)
+    log.publish_base(g0)
 
     def die(src, dst):
         raise RuntimeError("injected crash before marker swap")
@@ -138,14 +125,12 @@ def test_crash_between_delta_write_and_marker_rename(
         mp.setattr(os, "replace", die)
         with pytest.raises(RuntimeError, match="injected"):
             log.publish_delta(*_delta(spark, g1, [1]), 0)
-    folded, meta = log.recover()
-    assert _edges(folded) == _edges(g0)  # pre-crash state, exactly
-    assert meta["committed"] == -1 and log.read()["deltas"] == []
+    assert _folded(log) == _edges(g0)  # pre-crash state, exactly
+    assert log.read()["deltas"] == []
 
     g2 = _df(spark, [(1, 2, 1, 0.9), (2, 1, 1, 0.8), (3, 1, 1, 0.7)])
     log.publish_delta(*_delta(spark, g2, [3]), 1)
-    folded, _ = log.recover()
-    assert _edges(folded) == _edges(g2)
+    assert _folded(log) == _edges(g2)
     assert [b for b, _ in log.deltas(log.read())] == [1]
 
 
@@ -158,7 +143,7 @@ def test_crash_between_marker_rename_and_gc(spark, tmp_path, monkeypatch):
 
     log = GraphDeltaLog(spark, str(tmp_path / "g"))
     g0 = _df(spark, [(1, 2, 1, 0.9), (2, 1, 1, 0.8)])
-    log.publish_base(g0, -1)
+    log.publish_base(g0)
     g1 = _df(spark, [(1, 9, 1, 0.99), (2, 1, 1, 0.8)])
     log.publish_delta(*_delta(spark, g1, [1]), 0)
     real_replace = os.replace
@@ -170,12 +155,10 @@ def test_crash_between_marker_rename_and_gc(spark, tmp_path, monkeypatch):
     with monkeypatch.context() as mp:
         mp.setattr(os, "replace", replace_then_die)
         with pytest.raises(RuntimeError, match="injected"):
-            log.publish_base(g1, 1)
-    folded, meta = log.recover()
-    assert meta["committed"] == 1 and log.read()["deltas"] == []
-    assert _edges(folded) == _edges(g1)
+            log.publish_base(g1)
+    assert log.read()["deltas"] == []
+    assert _folded(log) == _edges(g1)
 
     g2 = _df(spark, [(1, 9, 1, 0.99), (2, 1, 1, 0.8), (3, 1, 1, 0.7)])
     log.publish_delta(*_delta(spark, g2, [3]), 2)
-    folded, _ = log.recover()
-    assert _edges(folded) == _edges(g2)
+    assert _folded(log) == _edges(g2)

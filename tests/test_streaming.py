@@ -769,12 +769,13 @@ def test_engine_serve_single_plan(spark, sf_dir, tmp_path, family):
 
 
 def test_graph_ingest_chained_insert_equals_oneshot(spark):
-    """The batching-invariance theorem behind s_graph_ingest_serve:
-    chaining knn_graph_insert over ANY split of the new rows (against
-    the fixed base corpus) equals the one-shot insert of all of them —
-    per-node top-k is idempotent under staged candidate arrival and
-    new-node edges pair against base only. Edge sets, ranks, AND scores
-    must be identical."""
+    """Batching-invariance of ``knn_graph_insert`` against a FIXED
+    corpus: chaining it over any split of the new rows (each batch
+    pairing against the base corpus only) equals the one-shot insert of
+    all of them — per-node top-k is idempotent under staged candidate
+    arrival. Edge sets, ranks, AND scores must be identical. (The
+    streaming ingest grows its pool instead, so its result depends on
+    the split; its pins are the durable-ingest tests below.)"""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -831,91 +832,122 @@ def _durable_fixture(spark, seed=46, n=240, dim=32, ncl=12, n_new=18):
     return emb, base, new
 
 
+_GRAPH = dict(dim=32, k=5, n_planes=24, band_bits=6, seed=42, build_rounds=2)
+
+
 def _edges(df):
     return {(r.src_id, r.nbr_id, r.rank, r.score) for r in df.collect()}
 
 
-def test_durable_graph_ingest_restart_recovery(spark, tmp_path):
-    """VERDICT r9 next #1: the grown graph must survive a stream restart.
-    Run 1 drains only file A (one insert batch), then the process 'dies'
-    (the DurableGraphIngest object is discarded). Files B and C land; a
-    NEW DurableGraphIngest over the SAME state_dir must recover the
-    post-A snapshot (NOT rebuild, NOT replay A) and drain only B and C.
-    Final graph == the one-shot insert of A∪B∪C (the batching-invariance
-    theorem extended across a restart) — edges, ranks, scores exact."""
+def _land(rows, src, name, i):
+    """Write delivery ``name`` as one parquet file whose mtime is pinned
+    to ordinal ``i``: the file source takes files in mtime order, and the
+    growing graph depends on the order."""
     import os
 
+    path = os.path.join(src, name)
+    rows.coalesce(1).write.mode("overwrite").parquet(path)
+    for f in os.listdir(path):
+        if f.endswith(".parquet"):
+            os.utime(os.path.join(path, f), (1700000000 + 60 * i,) * 2)
+
+
+def _uninterrupted(base, parts):
+    """The reference state: one maintainer inserting every delivery in
+    order, no stream and no restart."""
+    from vector_search_spark.operators.graph_lifecycle import GraphMaintainer
+
+    index = GraphMaintainer(base, **_GRAPH)
+    for rows in parts:
+        index.insert(rows)
+    return index
+
+
+@pytest.fixture(scope="module")
+def restarted_ingest(spark, tmp_path_factory):
+    """Drain delivery A into a fresh state dir, then drop the driver
+    (only the state dir survives); land B and C and drain again. The
+    restart recovers from the log, so the base it is handed is never
+    read — an empty one proves it."""
     from pyspark.sql import functions as F
 
-    from vector_search_spark.operators.ann import (
-        knn_graph_build,
-        knn_graph_insert,
-    )
-    from vector_search_spark.streaming.serving import DurableGraphIngest
+    from vector_search_spark.operators.graph_lifecycle import GraphMaintainer
+    from vector_search_spark.streaming.serving import ingest_graph_stream
 
     emb, base, new = _durable_fixture(spark)
-    kw = dict(k=5, n_planes=24, band_bits=6, seed=42, dim=32)
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    os.makedirs(src)
-    parts = [new.filter(F.col("vec_id") % 3 == m) for m in range(3)]
-    parts[0].coalesce(1).write.mode("overwrite").parquet(src + "/fA")
+    root = tmp_path_factory.mktemp("graph_ingest_restart")
+    src, state = str(root / "src"), str(root / "state")
     glob = src + "/f*/*.parquet"
+    parts = [new.filter(F.col("vec_id") % 3 == m) for m in range(3)]
+    _land(parts[0], src, "fA", 0)
+    after_a = _edges(ingest_graph_stream(base, state, glob, **_GRAPH).graph)
+    _land(parts[1], src, "fB", 1)
+    _land(parts[2], src, "fC", 2)
+    recovered = _edges(GraphMaintainer.recover(spark, state + "/graph").graph)
+    index = ingest_graph_stream(base.limit(0), state, glob, **_GRAPH)
+    return emb, base, parts, after_a, recovered, index
 
-    ing1 = DurableGraphIngest(base, state, rounds=2, **kw)
-    g_after_a = ing1.run_availablenow(glob, new.schema)
-    after_a = _edges(g_after_a)
-    committed_after_a = ing1._committed
-    assert committed_after_a >= 0  # at least one real batch committed
-    del ing1  # crash: driver memory gone, only state_dir survives
 
-    parts[1].coalesce(1).write.mode("overwrite").parquet(src + "/fB")
-    parts[2].coalesce(1).write.mode("overwrite").parquet(src + "/fC")
-    ing2 = DurableGraphIngest(base, state, rounds=2, **kw)
-    # recovery really read the snapshot: pre-drain graph == post-A graph
-    assert _edges(ing2.graph) == after_a
-    assert ing2._committed == committed_after_a
-    got = _edges(ing2.run_availablenow(glob, new.schema))
-
-    g0 = knn_graph_build(base, rounds=2, **kw).localCheckpoint(eager=True)
-    want = _edges(knn_graph_insert(g0, base, new, **kw))
-    assert got == want and len(got) > 0
-    # and run 1 really was partial (recovery did the rest)
+def test_durable_graph_ingest_restart_recovery(restarted_ingest):
+    """Restart == uninterrupted: a drain of A, a crash, and a restarted
+    drain of B and C end in exactly the state of one maintainer that
+    inserts A, B and C in order — edges, ranks and scores. The restart
+    recovered the post-A commit (it did not rebuild or re-insert A), and
+    the first run really was partial."""
+    _, base, parts, after_a, recovered, index = restarted_ingest
+    assert recovered == after_a
+    want = _edges(_uninterrupted(base, parts).graph)
+    assert _edges(index.graph) == want and len(want) > 0
     assert after_a != want
 
 
-def test_durable_graph_ingest_replayed_batch_skipped(spark, tmp_path):
-    """Crash AFTER the snapshot commit but BEFORE the engine's commit
+def test_durable_graph_ingest_bands_complete_after_restart(restarted_ingest):
+    """The band table the ingest serves from (the LSH entry join of its
+    serve) holds the base AND every delivery after a restart — the
+    deliveries drained before the crash included: it equals the band
+    table of base ∪ A ∪ B ∪ C hashed from scratch."""
+    from vector_search_spark.operators.ann import corpus_band_keys
+
+    emb, _, _, _, _, index = restarted_ingest
+
+    def rows(df):
+        return {(r.id, r.band, r.key) for r in df.collect()}
+
+    want = rows(corpus_band_keys(
+        emb, n_planes=24, band_bits=6, seed=42, dim=32
+    ))
+    assert rows(index.bands) == want
+
+
+def test_durable_graph_ingest_replayed_batch_skipped(
+    spark, tmp_path, monkeypatch
+):
+    """Crash AFTER the insert's commit but BEFORE the stream's commit
     file: Structured Streaming replays the last batch on restart, and
-    the committed-batch guard must SKIP the re-insert (the snapshot
-    already contains it). Simulated by deleting the newest file in the
-    checkpoint's commits/ dir after a full drain, then restarting —
-    final graph still equals the one-shot oracle."""
+    the batch id the insert recorded in the maintainer's marker must
+    SKIP it. Simulated by deleting the newest file in the checkpoint's
+    commits/ dir after a full drain, then restarting: the replay reaches
+    the maintainer, commits no op, and the state still equals the
+    uninterrupted inserts."""
     import os
 
     from pyspark.sql import functions as F
 
-    from vector_search_spark.operators.ann import (
-        knn_graph_build,
-        knn_graph_insert,
-    )
-    from vector_search_spark.streaming.serving import DurableGraphIngest
+    from vector_search_spark.operators.graph_lifecycle import GraphMaintainer
+    from vector_search_spark.streaming.serving import ingest_graph_stream
 
     emb, base, new = _durable_fixture(spark, seed=47)
-    kw = dict(k=5, n_planes=24, band_bits=6, seed=42, dim=32)
     src = str(tmp_path / "src")
     state = str(tmp_path / "state")
-    os.makedirs(src)
-    for m in range(2):
-        new.filter(F.col("vec_id") % 2 == m).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(src + f"/f{m}")
     glob = src + "/f*/*.parquet"
+    parts = [new.filter(F.col("vec_id") % 2 == m) for m in range(2)]
+    for i, rows in enumerate(parts):
+        _land(rows, src, f"f{i}", i)
 
-    ing1 = DurableGraphIngest(base, state, rounds=2, **kw)
-    full = _edges(ing1.run_availablenow(glob, new.schema))
-    last_committed = ing1._committed
-    del ing1
+    first = ingest_graph_stream(base, state, glob, **_GRAPH)
+    full, last, ops = _edges(first.graph), first._stream_batch, first._op_seq
+    assert last >= 1
+    del first
 
     # crash injection: lose the engine's commit for the newest batch so
     # the restarted stream replays it (offsets survive, commit does not)
@@ -929,10 +961,18 @@ def test_durable_graph_ingest_replayed_batch_skipped(spark, tmp_path):
     if os.path.exists(crc):  # ChecksumFs sidecar would poison the rewrite
         os.remove(crc)
 
-    ing2 = DurableGraphIngest(base, state, rounds=2, **kw)
-    assert ing2._committed == last_committed  # marker survived the crash
-    got = _edges(ing2.run_availablenow(glob, new.schema))
-    assert got == full  # replayed batch skipped by the marker guard
-    g0 = knn_graph_build(base, rounds=2, **kw).localCheckpoint(eager=True)
-    want = _edges(knn_graph_insert(g0, base, new, **kw))
-    assert got == want
+    seen = []
+    insert = GraphMaintainer.insert
+
+    def spy(self, rows, batch_id=None):
+        seen.append(batch_id)
+        return insert(self, rows, batch_id=batch_id)
+
+    monkeypatch.setattr(GraphMaintainer, "insert", spy)
+    index = ingest_graph_stream(base.limit(0), state, glob, **_GRAPH)
+    assert seen == [last]  # the replay reached the maintainer
+    assert index._op_seq == ops  # ... and committed no op
+    got = _edges(index.graph)
+    assert got == full
+    monkeypatch.undo()
+    assert got == _edges(_uninterrupted(base, parts).graph)

@@ -135,7 +135,7 @@ def main() -> None:
         _knn_graph_delete_oracle(6, 24, 8, 2, 16, 7),
     )
     # streaming ingest+serve at 10x (round 9): the graph grows between
-    # micro-batches; oracle = one-shot insert replay + serve replay
+    # micro-batches; oracle = one insert replay per delivery + serve replay
     from vector_search_spark.plans.queries import _graph_ingest_serve_oracle
     from vector_search_spark.streaming.serving import (
         run_streaming_graph_ingest_availablenow,
@@ -143,7 +143,7 @@ def main() -> None:
 
     cases["ingest_serve@8"] = (
         run_streaming_graph_ingest_availablenow(spark, fixture, band_bits=8),
-        _graph_ingest_serve_oracle(6, 24, 8, 2, 20, 10, 8, 2, 3),
+        _graph_ingest_serve_oracle(6, 24, 8, 2, 20, 3, 10, 8, 2, 3),
     )
     only = set(sys.argv[2:])
     if only:

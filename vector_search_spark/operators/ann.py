@@ -1211,10 +1211,9 @@ def knn_graph_insert(
     Returns the UPDATED full edge list (src_id, nbr_id, rank, score):
     the graph without the touched srcs' rows (patched existing nodes +
     the new nodes), plus their new rows. A caller that keeps the index
-    (``GraphMaintainer``, ``DurableGraphIngest``) runs the kernel
-    (``_insert_kernel``) itself, which returns the touched set and its
-    replacement rows — the bounded write set of a delta publish
-    (``operators.graph_delta``)."""
+    (``GraphMaintainer``) runs the kernel (``_insert_kernel``) itself,
+    which returns the touched set and its replacement rows — the bounded
+    write set of a delta publish (``operators.graph_delta``)."""
     if dim is None:
         raise ValueError("knn_graph_insert requires dim=")
     _require_integral(corpus, id_col, "knn_graph_insert")

@@ -1,7 +1,5 @@
-"""LSM-style durable publish for k-NN-graph adjacency (VERDICT r10
-next #1: the round-10 ``DurableGraphIngest`` rewrote the FULL adjacency
-every micro-batch — O(index) IO per O(batch) of ingested work, the one
-scale-`weak` in the round-10 audit).
+"""LSM-style durable publish for k-NN-graph adjacency: the log under a
+durable :class:`.graph_lifecycle.GraphMaintainer`.
 
 The commit protocol (marker, fresh directories, GC, crash story) is
 :mod:`.index_log`'s. This module adds what is particular to a graph:
@@ -9,20 +7,20 @@ The commit protocol (marker, fresh directories, GC, crash story) is
 - a base holds ``rows/`` — a full adjacency snapshot in the
   ``graph_write_index`` shard format (hash-sharded parquet);
 - a delta holds ``rows/`` + ``touched/`` — the full replacement
-  adjacency of every src the batch touched (new nodes + patched
+  adjacency of every src the op touched (new nodes + patched
   neighbors; ``knn_graph_insert``/``knn_graph_delete`` replace a touched
   src's rows wholesale, so per-src latest-delta-wins reconstruction is
   exact) plus the touched-src list itself. A src in ``touched`` with
   zero rows in ``rows`` is a DELETE tombstone;
-- the marker's meta carries ``committed`` (last batch id), ``base_rows``,
-  ``delta_rows`` and the caller's ``extra`` dict.
+- the marker's meta carries ``base_rows``, ``delta_rows`` and the
+  caller's ``extra`` dict.
 
-Per-batch publish IO is bounded by (batch + touched)·k rows — it scales
-with the BATCH, not the index. Recovery folds base + deltas with per-src
-latest-wins; the caller decides when to publish a fresh base instead
-(``DurableGraphIngest``'s delta-row policy, :class:`GraphMaintainer`'s
-churn policy) — exactly the LSM economics: O(index) writes happen only
-at compaction, amortized over ~frac·n mutated rows.
+Per-op publish IO is bounded by (batch + touched)·k rows — it scales
+with the BATCH, not the index. ``fold`` rebuilds the adjacency from base
++ deltas with per-src latest-wins; the maintainer's churn policy decides
+when to publish a fresh base instead — exactly the LSM economics:
+O(index) writes happen only at compaction, amortized over ~frac·n
+mutated rows.
 """
 
 from __future__ import annotations
@@ -60,8 +58,8 @@ class GraphDeltaLog(IndexLog):
 
     ``publish_base`` commits a full snapshot, ``publish_delta`` the
     bounded replacement rows of the touched srcs; ``side`` relations
-    ride in the same commit. ``recover()`` returns the folded adjacency
-    plus the marker's meta, or ``(None, None)`` on a fresh directory."""
+    ride in the same commit. ``fold(read())`` is the committed
+    adjacency."""
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         super().__init__(root)
@@ -71,7 +69,6 @@ class GraphDeltaLog(IndexLog):
     def publish_base(
         self,
         graph: DataFrame,
-        batch_id: int,
         extra: dict | None = None,
         side: dict[str, DataFrame] | None = None,
     ) -> dict:
@@ -81,7 +78,6 @@ class GraphDeltaLog(IndexLog):
             graph_write_index(graph.select(*_GRAPH_COLS), f"{d}/rows")
             _write_side(d, side)
             return {
-                "committed": batch_id,
                 "base_rows": _parquet_num_rows(f"{d}/rows"),
                 "delta_rows": 0,
                 "extra": extra or {},
@@ -116,7 +112,6 @@ class GraphDeltaLog(IndexLog):
             _write_side(d, side)
             return {
                 **meta,
-                "committed": batch_id,
                 "delta_rows": meta["delta_rows"]
                 + _parquet_num_rows(f"{d}/rows"),
                 "extra": extra or {},
@@ -159,9 +154,3 @@ class GraphDeltaLog(IndexLog):
             .select(*_GRAPH_COLS)
             .unionByName(kept)
         )
-
-    def recover(self) -> tuple[DataFrame | None, dict | None]:
-        m = self.read()
-        if m is None:
-            return None, None
-        return self.fold(m), m["meta"]

@@ -59,10 +59,13 @@ crash story: :mod:`.index_log`) —
   (``add`` rows or ``del`` ids) in the SAME directory, all written
   from the op's own result — recovery replays the mutations in op
   order;
-- counters + config (churned, n, compactions, op sequence, k/planes/
-  seed/...): the marker's ``extra`` dict, advanced by the SAME marker
-  swap, so a crash between any two ops recovers the exact pre-op state
-  (op-atomic: an op either fully committed or never happened);
+- counters + config (churned, n, compactions, op sequence, the last
+  stream batch id, k/planes/seed/...): the marker's ``extra`` dict,
+  advanced by the SAME marker swap, so a crash between any two ops
+  recovers the exact pre-op state (op-atomic: an op either fully
+  committed or never happened) — and a stream driver
+  (``streaming.serving.ingest_graph_stream``) that replays a
+  micro-batch after a crash finds its insert already recorded;
 - bands: NOT persisted — the band table is a pure per-row function of
   (corpus, seeded planes), so recovery recomputes the identical table
   in one signature pass over the recovered corpus (same cost class as
@@ -119,6 +122,7 @@ class GraphMaintainer:
         self._churned = 0
         self.compactions = 0
         self._op_seq = 0
+        self._stream_batch = -1
         # the build's band table doubles as the maintainer's (identical
         # planes — one corpus signature pass instead of two)
         from .ann import _build_source
@@ -182,6 +186,7 @@ class GraphMaintainer:
             "n": self._n,
             "compactions": self.compactions,
             "op_seq": self._op_seq,
+            "stream_batch": self._stream_batch,
             "config": self._config,
         }
 
@@ -190,8 +195,7 @@ class GraphMaintainer:
         both already pay O(n) (the build), so the snapshot keeps the
         asymptotics."""
         self._log.publish_base(
-            self.graph, self._op_seq, extra=self._extra(),
-            side={"corpus": self.corpus},
+            self.graph, extra=self._extra(), side={"corpus": self.corpus}
         )
 
     def _commit_op(self, kind: str, mutation: DataFrame, touched,
@@ -231,6 +235,8 @@ class GraphMaintainer:
         self._n = ex["n"]
         self.compactions = ex["compactions"]
         self._op_seq = ex["op_seq"]
+        # a log written before stream batches were recorded saw none
+        self._stream_batch = ex.get("stream_batch", -1)
         corpus = spark.read.parquet(os.path.join(log.base(m), "corpus"))
         for _, dpath in log.deltas(m):
             if os.path.isdir(os.path.join(dpath, "add")):
@@ -262,12 +268,22 @@ class GraphMaintainer:
         return self._churned / max(self._n, 1)
 
     # -- maintenance batches ----------------------------------------------
-    def insert(self, new_rows: DataFrame) -> None:
+    def insert(self, new_rows: DataFrame, batch_id: int | None = None) -> None:
         """Link a bounded batch of new vectors in (``knn_graph_insert``'s
         kernel against the CURRENT corpus — earlier inserts are full
-        candidates for later batches via the maintained band table)."""
+        candidates for later batches via the maintained band table).
+
+        ``batch_id`` is a stream driver's micro-batch id: it is recorded
+        with the op (the marker's ``extra``, advanced by the op's own
+        marker swap), and a batch at or below the last recorded id is a
+        replay whose insert the state already holds — it is skipped
+        before any Spark job."""
         from .ann import _frame, _id_vec, _insert_kernel, _np_columns
 
+        if batch_id is not None:
+            if batch_id <= self._stream_batch:
+                return
+            self._stream_batch = batch_id
         batch = new_rows.select(self.id_col, self.vec_col)
         nw = _np_columns(_id_vec(batch, self.id_col, self.vec_col))
         b = len(nw["id"])

@@ -1,9 +1,9 @@
 """IndexLog — the commit protocol of one durable index directory.
 
-Every index the engine persists (the graph delta log behind
-``DurableGraphIngest``, the ``GraphMaintainer`` state dir, the persisted
-embedding-dedup index and the write-once MinHash dedup index, which
-commits bases only) is a base generation plus batch-keyed deltas,
+Every index the engine persists (the graph delta log of a durable
+``GraphMaintainer`` — the one behind the streaming graph ingest too —
+the persisted embedding-dedup index and the write-once MinHash dedup
+index, which commits bases only) is a base generation plus batch-keyed deltas,
 committed through this one class. The reference counterpart is
 the mutable ``condition_vec`` store (``nl_targeting_save.py:139-146``):
 rows keep arriving in a durable table that is read while it grows.

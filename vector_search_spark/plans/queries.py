@@ -4112,71 +4112,93 @@ def v_knn_graph_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_graph_insert_parts(
-    k: int, n_planes: int, band_bits: int, rounds: int, n_new: int
+    k: int, n_planes: int, band_bits: int, rounds: int, n_new: int,
+    n_steps: int = 1,
 ) -> list[str]:
     """CTE chain replaying ``knn_graph_insert`` over the replayed base
-    graph (new = vec_id < n_new, base = the rest), ending in ``fadj``:
-    the full post-insert adjacency (src, nbr, rank, score). Every stage
-    exact — base graph edges (floored), banded candidates with the same
-    plane literals, floored candidate scores, re-ranked patches,
-    untouched rows keeping their original ranks. Shared by the
-    insert-row oracle and the streaming-ingest serve oracle."""
+    graph (base = vec_id >= n_new): one insert step per delivery of the
+    new rows, delivery i = vec_id DIV ceil(n_new / n_steps) = i (the
+    staging ``run_streaming_graph_ingest_availablenow`` pins). Step i
+    runs against base ∪ deliveries < i — their vectors ``e{i}``, their
+    band rows ``bd{i}`` and step i-1's adjacency — and ends in
+    ``fadj{i}`` (src, nbr, rank, score); the last is the grown graph.
+    Every stage exact: base graph edges (floored), banded candidates
+    with the same plane literals, floored candidate scores, re-ranked
+    patches, untouched rows keeping their ranks. One step is the
+    insert-row oracle; the streaming-ingest oracle chains its
+    deliveries."""
     parts = _knn_graph_parts(
         k, n_planes, band_bits, rounds, corpus_where=f"vec_id >= {n_new}"
     )
     mask = (1 << band_bits) - 1
     n_bands = n_planes // band_bits
+    rows = -(-n_new // n_steps)
     parts.append(
         f"gadj AS MATERIALIZED (SELECT src, nbr,"
         f" CAST(rn AS BIGINT) AS rank, FLOOR(cos * 1000000) / 1000000"
         f" AS score FROM r WHERE rn <= {k})"
     )
-    parts.append(
-        f"nwr AS (SELECT vec_id AS nid, embedding::DOUBLE[] AS nv"
-        f" FROM embeddings WHERE vec_id < {n_new})"
-    )
-    parts.append(
-        f"nbd AS (SELECT nid, band,"
-        f" ({_duck_lsh_sig('nv', n_planes, 42)} >> (band*{band_bits}))"
-        f" & {mask} AS key FROM nwr,"
-        f" (SELECT unnest(generate_series(0, {n_bands - 1})) AS band) b)"
-    )
-    parts.append(
-        "cand AS (SELECT DISTINCT bd.id AS eid, n.nid"
-        " FROM bd JOIN nbd n ON n.band = bd.band AND n.key = bd.key)"
-    )
-    parts.append(
-        "csc AS MATERIALIZED (SELECT c.eid, c.nid,"
-        " FLOOR(" + _duck_cos("ev.v", "nw.nv") + " * 1000000) / 1000000"
-        " AS score FROM cand c JOIN e ev ON ev.id = c.eid"
-        " JOIN nwr nw ON nw.nid = c.nid)"
-    )
-    parts.append(
-        f"new_adj AS (SELECT nid AS src, eid AS nbr,"
-        f" CAST(rn AS BIGINT) AS rank, score FROM ("
-        f"SELECT *, ROW_NUMBER() OVER (PARTITION BY nid"
-        f" ORDER BY score DESC, eid ASC) AS rn FROM csc) t WHERE rn <= {k})"
-    )
-    parts.append(
-        "touched AS (SELECT DISTINCT eid FROM csc)"
-    )
-    parts.append(
-        "pool AS (SELECT g.src, g.nbr, g.score FROM gadj g"
-        " JOIN touched t ON t.eid = g.src"
-        " UNION ALL SELECT eid, nid, score FROM csc)"
-    )
-    parts.append(
-        f"patched AS (SELECT src, nbr, CAST(rn AS BIGINT) AS rank, score"
-        f" FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY src"
-        f" ORDER BY score DESC, nbr ASC) AS rn FROM pool) t WHERE rn <= {k})"
-    )
-    parts.append(
-        "fadj AS MATERIALIZED ("
-        "SELECT src, nbr, rank, score FROM gadj"
-        " WHERE src NOT IN (SELECT eid FROM touched)"
-        " UNION ALL SELECT src, nbr, rank, score FROM patched"
-        " UNION ALL SELECT src, nbr, rank, score FROM new_adj)"
-    )
+    ev, bd, adj = "e", "bd", "gadj"
+    for i in range(n_steps):
+        if i:
+            parts.append(
+                f"e{i} AS MATERIALIZED (SELECT id, v FROM {ev}"
+                f" UNION ALL SELECT nid, nv FROM nwr{i - 1})"
+            )
+            parts.append(
+                f"bd{i} AS MATERIALIZED (SELECT id, band, key FROM {bd}"
+                f" UNION ALL SELECT nid, band, key FROM nbd{i - 1})"
+            )
+            ev, bd = f"e{i}", f"bd{i}"
+        parts.append(
+            f"nwr{i} AS MATERIALIZED (SELECT vec_id AS nid,"
+            f" embedding::DOUBLE[] AS nv FROM embeddings"
+            f" WHERE vec_id >= {i * rows}"
+            f" AND vec_id < {min((i + 1) * rows, n_new)})"
+        )
+        parts.append(
+            f"nbd{i} AS MATERIALIZED (SELECT nid, band,"
+            f" ({_duck_lsh_sig('nv', n_planes, 42)} >> (band*{band_bits}))"
+            f" & {mask} AS key FROM nwr{i},"
+            f" (SELECT unnest(generate_series(0, {n_bands - 1})) AS band) b)"
+        )
+        parts.append(
+            f"cand{i} AS (SELECT DISTINCT b.id AS eid, n.nid"
+            f" FROM {bd} b JOIN nbd{i} n ON n.band = b.band AND n.key = b.key)"
+        )
+        parts.append(
+            f"csc{i} AS MATERIALIZED (SELECT c.eid, c.nid,"
+            " FLOOR(" + _duck_cos("ev.v", "nw.nv") + " * 1000000) / 1000000"
+            f" AS score FROM cand{i} c JOIN {ev} ev ON ev.id = c.eid"
+            f" JOIN nwr{i} nw ON nw.nid = c.nid)"
+        )
+        parts.append(
+            f"touched{i} AS MATERIALIZED (SELECT DISTINCT eid FROM csc{i})"
+        )
+        parts.append(
+            f"patched{i} AS (SELECT src, nbr, CAST(rn AS BIGINT) AS rank,"
+            f" score FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY src"
+            f" ORDER BY score DESC, nbr ASC) AS rn FROM ("
+            f"SELECT g.src, g.nbr, g.score FROM {adj} g"
+            f" JOIN touched{i} t ON t.eid = g.src"
+            f" UNION ALL SELECT eid, nid, score FROM csc{i}) p) t"
+            f" WHERE rn <= {k})"
+        )
+        parts.append(
+            f"new_adj{i} AS (SELECT nid AS src, eid AS nbr,"
+            f" CAST(rn AS BIGINT) AS rank, score FROM ("
+            f"SELECT *, ROW_NUMBER() OVER (PARTITION BY nid"
+            f" ORDER BY score DESC, eid ASC) AS rn FROM csc{i}) t"
+            f" WHERE rn <= {k})"
+        )
+        parts.append(
+            f"fadj{i} AS MATERIALIZED ("
+            f"SELECT src, nbr, rank, score FROM {adj}"
+            f" WHERE src NOT IN (SELECT eid FROM touched{i})"
+            f" UNION ALL SELECT src, nbr, rank, score FROM patched{i}"
+            f" UNION ALL SELECT src, nbr, rank, score FROM new_adj{i})"
+        )
+        adj = f"fadj{i}"
     return parts
 
 
@@ -4187,7 +4209,7 @@ def _knn_graph_insert_oracle(
     ``_knn_graph_insert_parts``)."""
     parts = _knn_graph_insert_parts(k, n_planes, band_bits, rounds, n_new)
     final = (
-        "SELECT src AS src_id, nbr AS nbr_id, rank, score FROM fadj"
+        "SELECT src AS src_id, nbr AS nbr_id, rank, score FROM fadj0"
     )
     return ",\n".join(parts) + "\n" + final
 
@@ -9705,16 +9727,18 @@ def s_graph_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _graph_ingest_serve_oracle(
     k: int, n_planes: int, band_bits: int, rounds: int, n_new: int,
-    serve_k: int, beam: int, serve_rounds: int, n_probes: int,
+    n_files: int, serve_k: int, beam: int, serve_rounds: int, n_probes: int,
 ) -> str:
-    """DuckDB replay of the streaming ingest+serve chain: one-shot
-    insert of all new rows into the replayed base graph
-    (``_knn_graph_insert_parts`` → ``fadj`` — equal to the chained
-    per-micro-batch inserts by the top-k idempotence theorem, see
-    ``run_streaming_graph_ingest_availablenow``), then the beam-search
-    serve replay over the GROWN adjacency with full-corpus vectors and
-    LSH entries hashed over the full corpus."""
-    parts = _knn_graph_insert_parts(k, n_planes, band_bits, rounds, n_new)
+    """DuckDB replay of the streaming ingest+serve chain: one insert
+    step per pinned delivery into the replayed base graph, each against
+    base ∪ the earlier deliveries (``_knn_graph_insert_parts`` with
+    ``n_steps=n_files`` → ``fadj{n_files - 1}``, the maintainer's
+    growing-pool contract, see ``run_streaming_graph_ingest_availablenow``),
+    then the beam-search serve replay over the GROWN adjacency with
+    full-corpus vectors and LSH entries hashed over the full corpus."""
+    parts = _knn_graph_insert_parts(
+        k, n_planes, band_bits, rounds, n_new, n_steps=n_files
+    )
     mask = (1 << band_bits) - 1
     n_bands = n_planes // band_bits
     parts.append(
@@ -9732,27 +9756,28 @@ def _graph_ingest_serve_oracle(
     )
     sparts, final = _serve_cte_parts(
         serve_k, beam, serve_rounds, n_probes, "lsh", n_planes, band_bits,
-        adj="fadj", evec="ef", cbands="bdf",
+        adj=f"fadj{n_files - 1}", evec="ef", cbands="bdf",
     )
     return ",\n".join(parts + sparts) + "\n" + final
 
 
 @register(
     "s_graph_ingest_serve",
-    oracle=_graph_ingest_serve_oracle(6, 24, 6, 2, 20, 10, 8, 2, 3),
+    oracle=_graph_ingest_serve_oracle(6, 24, 6, 2, 20, 3, 10, 8, 2, 3),
 )
 def s_graph_ingest_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming graph-index MAINTENANCE + serve (VERDICT r8 next #6):
     the base graph is built on vec_id >= 20, the 20 newest vectors
-    arrive as a real file-source stream (3 files, maxFilesPerTrigger=1
-    → multiple foreachBatch firings), each micro-batch linked in by
-    ``knn_graph_insert`` against the once-hashed base band table, and
-    the probes — themselves freshly-ingested vectors — are answered by
-    LSH-entry beam search over the GROWN graph. The oracle replays the
-    ONE-SHOT insert followed by the serve, which equals the chained
-    per-batch result by the top-k idempotence theorem (pinned as a
-    batch test in tests/test_streaming.py), so any batching-dependence,
-    stale adjacency, or serve drift fails the value gate."""
+    arrive as a real file-source stream (3 pinned deliveries, vec_id
+    DIV 7, one file each → three foreachBatch firings), each micro-batch
+    inserted by one durable ``GraphMaintainer`` against base ∪ the
+    earlier deliveries (its growing pool: maintained vectors and band
+    table), and the probes — themselves freshly-ingested vectors — are
+    answered by the maintainer's LSH-entry beam search over the GROWN
+    graph. The oracle chains one insert replay per delivery and then
+    the serve replay, so a lost or reordered delivery, a stale
+    adjacency, a band table missing a delivery, or serve drift fails
+    the value gate."""
     from ..streaming.serving import run_streaming_graph_ingest_availablenow
 
     return run_streaming_graph_ingest_availablenow(spark, sf_dir)

@@ -11,6 +11,11 @@ multi-executor cluster:
 - Arrow enabled for every pandas interchange (Pandas UDFs, toPandas).
 - Session timezone pinned to UTC so timestamp semantics do not depend on
   the host machine.
+- The repository root on the Python workers' ``PYTHONPATH`` (ahead of any
+  value the environment already sets): stage functions of the graph
+  build and the dedup index are module functions, which cloudpickle
+  ships by name, so a worker must import ``vector_search_spark`` whatever
+  directory the driver was started from.
 """
 
 from __future__ import annotations
@@ -26,6 +31,10 @@ def cpu_count() -> int:
 
 def get_spark(app_name: str = "vector_search_spark", cpus: int | None = None) -> SparkSession:
     cpus = cpus or cpu_count()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )
     return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -37,5 +46,6 @@ def get_spark(app_name: str = "vector_search_spark", cpus: int | None = None) ->
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
         .getOrCreate()
     )
